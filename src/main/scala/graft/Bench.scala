@@ -207,15 +207,21 @@ object Bench {
     * stay in bench_detail.json. Pure function so a spec can pin the
     * budget, the scalar format, and the slowest-first retention order.
     *
-    * `byCost` must be sorted slowest-first: (name, min, med). */
+    * `byCost` must be sorted slowest-first: (name, min, med). `errs`
+    * (name, message) is capped the same way: at most [[MaxErrors]]
+    * entries, fewer if the line is still over budget with no query
+    * left, and the rest counted in errors_omitted. */
   private[graft] def renderLine(byCost: Seq[(String, Double, Double)],
       nOk: Int, runs: Int, subset: Boolean, suspectField: String,
-      sfName: String, indexTotal: Double, errs: String,
+      sfName: String, indexTotal: Double, errs: Seq[(String, String)],
       total: Double, totalMed: Double, budget: Int = 1950): String = {
-    def build(n: Int): String = {
+    def build(n: Int, k: Int): String = {
       val (slow, fast) = byCost.splitAt(n)
+      val errField = errs.take(k).map { case (q, e) => s"${jstr(q)}:${jstr(e)}" }
+        .mkString("{", ",", "}") +
+        (if (errs.size > k) s""","errors_omitted":${errs.size - k}""" else "")
       val qs = slow.sortBy(_._1)
-        .map { case (k, v, _) => s"${jstr(k)}:${fmt2(v)}" }.mkString("{", ",", "}")
+        .map { case (q, v, _) => s"${jstr(q)}:${fmt2(v)}" }.mkString("{", ",", "}")
       val fastFields =
         if (fast.isEmpty) ""
         else s""","fast_omitted":${fast.size},"fast_total":${fmt(fast.map(_._2).sum)},"fast_total_med":${fmt(fast.map(_._3).sum)}"""
@@ -224,13 +230,18 @@ object Bench {
       // primary field) and "total_s" as the FINAL key — stdout tail
       // capture truncates the FRONT of an over-long line, so whichever
       // end survives carries the total.
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_ok":$nOk,"runs_per_query":$runs$fastFields$subsetField$suspectField,"sf":${jstr(sfName)},"index_build_total_s":${fmt2(indexTotal)},"queries":$qs,"errors":$errs,"total_med_s":${fmt(totalMed)},"total_s":${fmt(total)}}"""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_ok":$nOk,"runs_per_query":$runs$fastFields$subsetField$suspectField,"sf":${jstr(sfName)},"index_build_total_s":${fmt2(indexTotal)},"queries":$qs,"errors":$errField,"total_med_s":${fmt(totalMed)},"total_s":${fmt(total)}}"""
     }
-    var n = byCost.size
-    var line = build(n)
-    while (line.length > budget && n > 0) { n -= 1; line = build(n) }
+    var (n, k) = (byCost.size, math.min(errs.size, MaxErrors))
+    var line = build(n, k)
+    while (line.length > budget && n + k > 0) {
+      if (n > 0) n -= 1 else k -= 1
+      line = build(n, k)
+    }
     line
   }
+
+  private[graft] val MaxErrors = 10
 
   private def committedField(path: java.nio.file.Path, sf: String,
       field: String): Option[Map[String, Double]] =
@@ -357,9 +368,8 @@ object Bench {
       suspects(c, results.collect { case (n, v, _, None) => n -> v }.toMap))
       .getOrElse(Seq.empty)
     val ok = results.filter(_._4.isEmpty)
-    val errs = (results.collect { case (k, _, _, Some(e)) => s"${jstr(k)}:${jstr(e.take(80))}" } ++
-      indexBuilds.collect { case (k, _, Some(e)) => s"${jstr("index:" + k)}:${jstr(e)}" })
-      .mkString("{", ",", "}")
+    val errs = results.collect { case (k, _, _, Some(e)) => (k, e.take(80)) } ++
+      indexBuilds.collect { case (k, _, Some(e)) => ("index:" + k, e) }
     val total = ok.map(_._2).sum
     val totalMed = ok.map(_._3).sum
     // one-off index-build (ingest-time) cost, reported separately from

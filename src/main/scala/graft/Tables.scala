@@ -14,44 +14,22 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Memoized ANALYZED reader frames (r17, session-floor sweep): every
-    * `spark.read.parquet(path)` call re-resolves the DataSource and
-    * re-reads the parquet footer for schema inference — measured
-    * ~75-95 ms per call on the bench corpus, paid by EVERY gate
-    * invocation (and ~3×: min-of-N bench runs), the single largest
-    * engine-side slice of the ~0.15-0.3 s fast-gate floor. A DataFrame
-    * is immutable, so the analyzed reader can be served per (session,
-    * dir, table, fs-stamp) exactly like a catalog/metastore serves a
-    * resolved table — no DATA is cached (the scan still reads parquet
-    * per execution; nothing persists across JVM runs), and a corpus
-    * regen misses naturally through the same [[fsStamp]] the count and
-    * fingerprint memos already key on. The session rides the key as an
-    * identityHashCode + a WeakReference identity check, so a frame can
-    * never be served to a different (or dead) session. */
-  private val dfCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (java.lang.ref.WeakReference[SparkSession], DataFrame)]()
+  /** Memoized ANALYZED reader frames: every `spark.read.parquet(path)`
+    * re-resolves the DataSource and re-reads the parquet footer for
+    * schema inference, ~75-95 ms per call on the bench corpus and paid
+    * by every gate invocation. A DataFrame is immutable, so the analyzed
+    * reader is served per (session, dir, table) like a catalog serves a
+    * resolved table; no DATA is cached (the scan still reads parquet per
+    * execution). */
+  private val readers = new Memo[(SparkSession, String, String), DataFrame](64)
 
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     // events.ts is parquet TIMESTAMP(NANOS), which Spark 4 rejects unless
     // nanos are surfaced as long. Set here (runtime-settable SQLConf) so
     // every entry point — including a driver-built session — reads safely.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val sid = System.identityHashCode(spark)
-    val key = s"$sid|$sfDir|$name|${fsStamp(spark, sfDir, name)}"
-    // superseded stamps of the same (session, table) can never hit again
-    val prefix = s"$sid|$sfDir|$name|"
-    dfCache.keySet.removeIf(k => k.startsWith(prefix) && k != key)
-    if (dfCache.size > 64) {
-      val it = dfCache.keySet.iterator
-      if (it.hasNext) { it.next(); it.remove() }
-    }
-    val hit = dfCache.get(key)
-    if (hit != null && (hit._1.get eq spark)) hit._2
-    else {
-      val df = normalizeTs(spark.read.parquet(s"$sfDir/$name.parquet"))
-      dfCache.put(key, (new java.lang.ref.WeakReference(spark), df))
-      df
-    }
+    readers((spark, sfDir, name), fsStamp(spark, sfDir, name))(
+      normalizeTs(spark.read.parquet(s"$sfDir/$name.parquet")))
   }
 
   /** The generator has shipped `ts` as both TIMESTAMP(NANOS) (long under
@@ -119,22 +97,25 @@ object Tables {
   /** Memoized corpus ROW COUNT (ADVICE r13): adaptive-parameter
     * choices (SRP band width, SimHash banding mode) need n once per
     * corpus, not one count scan per gate invocation folded into that
-    * query's timing. Keyed by dir + table + a filesystem stamp
-    * (content length + mtimes), so a regenerated corpus misses the
-    * cache naturally without paying a data scan for the freshness
-    * check — exactly the catalog row-count lookup a production
-    * metastore serves for free. Per-JVM (the count is
-    * session-independent); bounded. */
-  private val countCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+    * query's timing — the catalog row-count lookup a production
+    * metastore serves for free. Per-JVM: the count is
+    * session-independent. */
+  private val counts = new Memo[(String, String), Long](64)
 
   /** Filesystem freshness stamp of one table's parquet dir — total
     * length, dir + newest part mtimes, and a SHA-256 of the per-file
-    * (name, length) manifest. Shared by [[cachedCount]] and the
-    * corpus-fingerprint memos (r16): any metadata-visible rewrite
-    * changes the stamp, so stamp-keyed caches miss naturally on a
-    * corpus regen. Unstampable (exotic FS) → a unique value, i.e.
-    * never cached. */
+    * (name, length) manifest. The stamp of every table-derived
+    * [[Memo]] ([[load]], [[cachedCount]], [[fingerprint]]): any
+    * metadata-visible rewrite changes it, so those memos miss naturally
+    * on a corpus regen. Unstampable (exotic FS) → a unique value, i.e.
+    * never cached.
+    *
+    * Contract gap: a same-second, same-length, same-name in-place
+    * rewrite of a single file is metadata-indistinguishable. Because
+    * [[load]] memoizes the reader, that gap reaches served query DATA,
+    * not only cached counts: the memoized frame keeps its file-listing
+    * snapshot and would read the rewritten file under the old
+    * listing. */
   private[graft] def fsStamp(spark: SparkSession, sfDir: String,
       name: String): String =
     try {
@@ -155,9 +136,7 @@ object Tables {
       // earlier 32-bit Objects.hash could collide across two distinct
       // name:length lists and serve a stale count; a 256-bit digest
       // makes the stamp effectively the manifest itself without putting
-      // an unbounded string in the cache key. A same-SECOND single-FILE
-      // in-place rewrite of identical length remains the documented
-      // (metadata-indistinguishable) contract gap.
+      // an unbounded string in the cache key.
       val manifest = java.security.MessageDigest.getInstance("SHA-256")
         .digest(parts.map(st => s"${st.getPath.getName}:${st.getLen}")
           .sorted.mkString(",").getBytes(java.nio.charset.StandardCharsets.UTF_8))
@@ -168,22 +147,19 @@ object Tables {
       case _: Exception => java.util.UUID.randomUUID().toString
     }
 
-  def cachedCount(spark: SparkSession, sfDir: String, name: String): Long = {
-    val stamp = fsStamp(spark, sfDir, name)
-    val key = s"$sfDir|$name|$stamp"
-    // A fresh stamp supersedes older stamps of the SAME table — those
-    // entries can never hit again, so evict exactly them instead of
-    // flushing every hot table (ADVICE r14). The >64 backstop then only
-    // fires on genuinely many distinct tables and drops one entry.
-    val prefix = s"$sfDir|$name|"
-    countCache.keySet.removeIf(k => k.startsWith(prefix) && k != key)
-    if (countCache.size > 64) {
-      val it = countCache.keySet.iterator
-      if (it.hasNext) { it.next(); it.remove() }
-    }
-    countCache.computeIfAbsent(key,
-      _ => load(spark, sfDir, name).count())
-  }
+  def cachedCount(spark: SparkSession, sfDir: String, name: String): Long =
+    counts((sfDir, name), fsStamp(spark, sfDir, name))(load(spark, sfDir, name).count())
+
+  /** A corpus fingerprint memoized per (tag, dir) and stamped by the
+    * [[fsStamp]]s of the `tables` it reads: an index's freshness check
+    * costs one aggregate per corpus version instead of one per serve,
+    * and a regen misses without a data scan. `compute` must read only
+    * `tables`. */
+  private val fingerprints = new Memo[(String, String), String](64)
+
+  private[graft] def fingerprint(spark: SparkSession, sfDir: String,
+      tag: String, tables: String*)(compute: => String): String =
+    fingerprints((tag, sfDir), tables.map(fsStamp(spark, sfDir, _)))(compute)
 
   /** Drop a managed table AND its warehouse location. A directory left
     * by a previous session is invisible to a fresh session's in-memory

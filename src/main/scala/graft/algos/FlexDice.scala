@@ -1,6 +1,6 @@
 package graft.algos
 
-import graft.{QueryDef, Tables}
+import graft.{Memo, QueryDef, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -52,6 +52,9 @@ object FlexDice {
   private val DFacInt = 5 // dense-factor (the reference parses an int)
   private val DFac = DFacInt.toDouble
   private val NLayers = 7 // bottom level = NLayers - 1
+  /** Cells in the whole NLayers-level grid, Σ_{l<NLayers} 4^l: the
+    * bound on every driver collect of cells. */
+  private[algos] val MaxCells: Int = (0 until NLayers).map(l => 1 << (2 * l)).sum
   // cell key packing: level · 2^40 + cx · 2^20 + cy (coords < 2^(nlayers-1))
   private val KeyLvl = 1L << 40
   private val KeyCx = 1L << 20
@@ -136,47 +139,21 @@ object FlexDice {
     (phase1Cached(s, d)._1, bounds)
   }
 
-  /** Session cache for the dice: the three gates are three VIEWS of
-    * one analysis (cells / outliers / clusters), and phase 1 is
+  /** Memo for the dice: the three gates are three VIEWS of one
+    * analysis (cells / outliers / clusters), and phase 1 is
     * deterministic, so serving the checkpointed (terminal, noise)
-    * frames once per corpus is bit-identical to recomputing — the same
-    * pattern as AnnOps.centCache. Keyed by dir + a cheap corpus
-    * fingerprint re-evaluated per call, so a regenerated corpus misses
-    * naturally; values are eager localCheckpoints of O(cells) /
-    * O(noise) rows whose blocks the ContextCleaner reclaims once the
-    * map entry is dropped. */
-  private val diceCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (DataFrame, DataFrame)]()
+    * frames once per corpus fingerprint is bit-identical to
+    * recomputing. Values are eager localCheckpoints whose blocks the
+    * ContextCleaner reclaims once the entry is dropped. */
+  private val dice = new Memo[String, (DataFrame, DataFrame)](8)
 
-  // Memoized per (dir, events fs-stamp) — the Dedup.memoFp pattern
-  // (r16 optimization round): each of the three flexdice gates (and
-  // the streaming cellProbe's trainedDice) re-ran a full events
-  // aggregate per invocation just to key the dice cache; the fs-stamp
-  // check is metadata-only and a data regen still misses naturally.
-  private val evFpCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private def evFingerprint(s: SparkSession, d: String): String = {
-    val key = s"$d|${graft.Tables.fsStamp(s, d, "events")}"
-    val prefix = s"$d|"
-    evFpCache.keySet.removeIf(k => k.startsWith(prefix) && k != key)
-    // size backstop (ADVICE r16): bound the map across many distinct
-    // data dirs, the Tables.cachedCount pattern
-    if (evFpCache.size > 64) {
-      val it = evFpCache.keySet.iterator
-      if (it.hasNext) { it.next(); it.remove() }
-    }
-    evFpCache.computeIfAbsent(key, _ => {
+  private def phase1Cached(s: SparkSession, d: String): (DataFrame, DataFrame) = {
+    val fp = Tables.fingerprint(s, d, "events", "events") {
       val r = Tables.load(s, d, "events").agg(
         count(lit(1)).cast("long"), coalesce(sum("event_id"), lit(0L))).head()
       s"${r.getLong(0)}|${r.getLong(1)}"
-    })
-  }
-
-  private def phase1Cached(s: SparkSession, d: String): (DataFrame, DataFrame) = {
-    val key = s"$d|flexdice1|${evFingerprint(s, d)}"
-    if (diceCache.size > 8) diceCache.clear()
-    diceCache.computeIfAbsent(key, _ => phase1(s, d))
+    }
+    dice(d, fp)(phase1(s, d))
   }
 
   /** Phase 1. Returns (terminal cells, noise objects):
@@ -504,6 +481,8 @@ object FlexDice {
       val dense = denseCells(term).persist()
       try {
         val keys = dense.select("key").collect().map(_.getLong(0))
+        require(keys.length <= MaxCells,
+          s"${keys.length} dense cells exceed the $MaxCells-cell grid")
         val adj = denseEdges(s, dense).collect()
           .map(r => (r.getLong(0), r.getLong(1)))
         val parent = scala.collection.mutable.HashMap(keys.map(k => k -> k): _*)

@@ -1,6 +1,6 @@
 package graft.algos
 
-import graft.{QueryDef, Tables}
+import graft.{Memo, QueryDef, Tables}
 import org.apache.spark.sql.functions._
 
 /** Non-iterative graph analytics over relations derived from the TPC-H
@@ -39,36 +39,20 @@ object Graph {
     *   of re-running the self-join — the "materialize the derived edge
     *   table once" shape SURVEY §9 prescribes;
     * - SESSION fast path: the table read is localCheckpoint'ed into the
-    *   block cache per (session, dir), so the four-to-five gates per
-    *   session share one tiny in-memory scan and skip repeated
-    *   fingerprint checks. Entries are weakly keyed by the session
-    *   object: a new session never sees a dead session's RDD, and
-    *   collected sessions drop their entries. Values hold the DataFrame
-    *   through a SoftReference (ADVICE r9): a Dataset strongly
-    *   references its SparkSession, so a strong value would pin the
-    *   weak key forever and entries would never collect — soft-held,
-    *   the only strong chain to a dead session is clearable, and a
-    *   cleared entry merely re-reads the tiny persisted table. */
-  private val coPairsCache =
-    new java.util.WeakHashMap[org.apache.spark.sql.SparkSession,
-      scala.collection.mutable.Map[String,
-        java.lang.ref.SoftReference[org.apache.spark.sql.DataFrame]]]()
+    *   block cache per (session, dir, lineitem stamp), so the
+    *   four-to-five gates per session share one tiny in-memory scan and
+    *   skip repeated fingerprint checks. */
+  private val sessionPairs =
+    new Memo[(org.apache.spark.sql.SparkSession, String), org.apache.spark.sql.DataFrame](8)
 
   private def coPairs(s: org.apache.spark.sql.SparkSession, d: String) =
-    coPairsCache.synchronized {
-      val perDir = coPairsCache.computeIfAbsent(s,
-        _ => scala.collection.mutable.Map.empty)
-      perDir.get(d).flatMap(r => Option(r.get)).getOrElse {
-        val df = coPairsTable(s, d).localCheckpoint(true)
-        perDir.put(d, new java.lang.ref.SoftReference(df))
-        df
-      }
-    }
+    sessionPairs((s, d), Tables.fsStamp(s, d, "lineitem"))(
+      coPairsTable(s, d).localCheckpoint(true))
 
   /** The persisted edge table (exposed for DurableGraphSpec). */
   private[graft] def coPairsTable(s: org.apache.spark.sql.SparkSession, d: String) = {
     val sfx = graft.sources.ServedIndex.suffix(d)
-    val fp = {
+    val fp = Tables.fingerprint(s, d, "copairs", "lineitem") {
       val r = Tables.load(s, d, "lineitem").agg(
         count(lit(1)).cast("long"),
         coalesce(sum("l_orderkey"), lit(0L)),

@@ -51,28 +51,10 @@ object Iterative {
     * localCheckpoint'ed into the block cache — every consumer reads the
     * bucketed files (at 100 TB that read is the point: one shuffle paid
     * at build, zero afterwards). */
-  // Memoized per (dir, lineitem+orders fs-stamp) — the Dedup.memoFp /
-  // Tables.cachedCount pattern (r16 optimization round): each pagerank
-  // gate invocation (and the tradeedges index warmup) previously re-ran
-  // TWO full-table aggregates just to re-derive a value that is a pure
-  // function of the source files; the fs-stamp check is metadata-only,
-  // so a driver data regen still misses naturally. At corpus scale this
-  // removes an O(corpus) scan per served query.
-  private val fpCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private[graft] def tradeEdgesFp(s: SparkSession, d: String): String = {
-    val key = s"$d|${Tables.fsStamp(s, d, "lineitem")}|${Tables.fsStamp(s, d, "orders")}"
-    val prefix = s"$d|"
-    fpCache.keySet.removeIf(k => k.startsWith(prefix) && k != key)
-    // size backstop (ADVICE r16): same-dir eviction alone lets a
-    // long-lived session touching many distinct data dirs grow the map
-    // without bound — cap like Tables.cachedCount does
-    if (fpCache.size > 64) {
-      val it = fpCache.keySet.iterator
-      if (it.hasNext) { it.next(); it.remove() }
-    }
-    fpCache.computeIfAbsent(key, _ => {
+  // Fingerprint memoized per corpus version: each pagerank gate would
+  // otherwise re-run two full-table aggregates per invocation.
+  private[graft] def tradeEdgesFp(s: SparkSession, d: String): String =
+    Tables.fingerprint(s, d, "tradeedges", "lineitem", "orders") {
       // sum(hash(k1,k2)) rather than sum(k1)+sum(k2): plain column sums
       // are permutation-blind (swapping o_custkey between two orders
       // preserves count and sum but changes the edge set), while a
@@ -85,8 +67,7 @@ object Iterative {
         count(lit(1)).cast("long"),
         coalesce(sum(hash(col("o_orderkey"), col("o_custkey")).cast("long")), lit(0L))).head()
       s"${rl.getLong(0)}|${rl.getLong(1)}|${ro.getLong(0)}|${ro.getLong(1)}"
-    })
-  }
+    }
 
   /** [[tradeEdgesBuild]] with the out-degree annotated at build time —
     * the degree is a pure function of the edge set, so persisting it in

@@ -945,10 +945,9 @@ object Dedup {
       converged = nNext == nEdges &&
         next.join(edges, Seq("u", "v"), "left_anti").isEmpty
       // the convergence test above was the last reader of this round's
-      // edge set — drop its cached blocks NOW instead of letting every
-      // round's frame pile up in the block manager until the
-      // ContextCleaner notices the dead plans (ADVICE r16)
-      edges.unpersist(false)
+      // edge set; its localCheckpoint blocks are reclaimed by the
+      // ContextCleaner once the frame is unreachable (Dataset.unpersist
+      // only clears CacheManager entries, so it cannot drop them)
       edges = next
       nEdges = nNext
       it += 1
@@ -1227,31 +1226,8 @@ object Dedup {
     * id sum, and total char length — a driver data regen changes it (and
     * forces a rebuild) without the fingerprint pass paying anything close
     * to the signature pipeline it guards. */
-  // Memoized per (tag, dir, documents fs-stamp) — the Tables.cachedCount
-  // pattern (r16 review): ~8 whole-corpus and ~8 base-split tables each
-  // evaluate their fingerprint on first serve in a session, which cost
-  // a cold session one corpus aggregate PER TABLE for a value that is a
-  // pure function of the corpus state. Stamp-keyed, so a corpus regen
-  // misses naturally (no reset hook needed); superseded stamps of the
-  // same (tag, dir) are evicted in place.
-  private val fpCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def memoFp(s: SparkSession, d: String, tag: String)(
-      compute: => String): String = {
-    val key = s"$tag|$d|${Tables.fsStamp(s, d, "documents")}"
-    val prefix = s"$tag|$d|"
-    fpCache.keySet.removeIf(k => k.startsWith(prefix) && k != key)
-    // size backstop (ADVICE r16): bound the map across many distinct
-    // data dirs, the Tables.cachedCount pattern
-    if (fpCache.size > 64) {
-      val it = fpCache.keySet.iterator
-      if (it.hasNext) { it.next(); it.remove() }
-    }
-    fpCache.computeIfAbsent(key, _ => compute)
-  }
-
   private[llm] def corpusFingerprint(s: SparkSession, d: String): String =
-    memoFp(s, d, "corpus") {
+    Tables.fingerprint(s, d, "corpus", "documents") {
       val r = Tables.load(s, d, "documents").agg(
         count(lit(1)).cast("long"),
         coalesce(sum("doc_id"), lit(0L)),
@@ -1373,7 +1349,7 @@ object Dedup {
     * never collide with a whole-corpus fingerprint — the freshness key
     * of the base-split index family below. */
   private[llm] def baseFingerprint(s: SparkSession, d: String): String =
-    memoFp(s, d, "base") {
+    Tables.fingerprint(s, d, "base", "documents") {
       val r = Tables.load(s, d, "documents")
         .filter(col("source") === BaseSource).agg(
           count(lit(1)).cast("long"),

@@ -187,7 +187,7 @@ class BenchNoiseSpec extends AnyFunSuite {
       .sortBy(-_._2)
     val line = Bench.renderLine(entries, nOk = 180, runs = 3,
       subset = false, suspectField = "", sfName = "sf0.1",
-      indexTotal = 17.3, errs = "{}", total = 105.3, totalMed = 169.9)
+      indexTotal = 17.3, errs = Seq.empty, total = 105.3, totalMed = 169.9)
     assert(line.length <= 1950, s"line ${line.length} chars over budget")
     // scalar values only — the [min,med] array form is what the driver
     // refused for two rounds (PERF_r16: n_common 0, bench_ok false)
@@ -210,10 +210,26 @@ class BenchNoiseSpec extends AnyFunSuite {
     val entries = Seq(("pagerank", 2.5, 2.6), ("bfs_hops", 1.6, 1.7))
     val line = Bench.renderLine(entries, nOk = 2, runs = 5, subset = true,
       suspectField = "", sfName = "sf0.1", indexTotal = 0.1,
-      errs = "{}", total = 4.1, totalMed = 4.3)
+      errs = Seq.empty, total = 4.1, totalMed = 4.3)
     assert(line.contains(""""queries":{"bfs_hops":1.6,"pagerank":2.5}"""))
     assert(!line.contains("fast_omitted"))
     assert(line.contains(""""subset":true"""))
+  }
+
+  test("renderLine caps the errors map so the line fits even when every " +
+      "gate fails (errors_omitted counts the rest)") {
+    val errs = (1 to 180).map(i =>
+      (f"dedup_gate_name_$i%03d", "java.lang.IllegalStateException: " + "x" * 46)) ++
+      (1 to 20).map(i => (f"index:index_name_$i%02d", "boom " + "y" * 75))
+    val line = Bench.renderLine(Seq.empty, nOk = 0, runs = 3,
+      subset = false, suspectField = "", sfName = "sf0.1",
+      indexTotal = 0.0, errs = errs, total = 0.0, totalMed = 0.0)
+    assert(line.length <= 1950, s"line ${line.length} chars over budget")
+    val shown = "\"dedup_gate_name_(\\d+)\":".r.findAllMatchIn(line).size
+    assert(shown > 0 && shown <= Bench.MaxErrors)
+    assert(line.contains("\"errors_omitted\":" + (errs.size - shown)))
+    // the total still closes the line
+    assert(line.endsWith("\"total_s\":0.000}"))
   }
 
   test("index names never collide with gate names (ADVICE r15: the " +

@@ -52,4 +52,26 @@ class DurableGraphSpec extends SparkSuite {
       .map(f => f.getName -> f.lastModified()).toMap
     assert(after == mtimes, "re-registration must not rewrite the edge table")
   }
+
+  test("a rewritten lineitem table regenerates the served edge table") {
+    import org.apache.spark.sql.functions.col
+    val dir = java.nio.file.Files.createTempDirectory("copairs_regen").toString
+    val li = graft.Tables.load(spark, sfDir, "lineitem")
+    li.write.parquet(s"$dir/lineitem.parquet")
+    def edges(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val tbl = s"copairs${graft.sources.ServedIndex.suffix(dir)}"
+    try {
+      val before = edges(Graph.coPairsTable(spark, dir))
+      li.filter(col("l_suppkey") % 3 =!= 0)
+        .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
+      val served = edges(Graph.coPairsTable(spark, dir))
+      assert(served == edges(Graph.coPairsBuild(spark, dir)),
+        "the second serve must match the inline build over the new rows")
+      assert(served != before, "the rewrite must change the edge set")
+    } finally {
+      spark.sql(s"DROP TABLE IF EXISTS $tbl")
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(s"target/graft-index/$tbl"))
+    }
+  }
 }

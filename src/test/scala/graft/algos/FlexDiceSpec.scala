@@ -101,4 +101,8 @@ class FlexDiceSpec extends SparkSuite {
         s"terminal cell ($l,$cx,$cy) has terminal ancestor at level $k")
     }
   }
+
+  test("MaxCells is the whole 7-level grid that bounds the driver collect") {
+    assert(FlexDice.MaxCells == 5461) // Σ_{l<7} 4^l
+  }
 }

@@ -41,4 +41,28 @@ class IvfIndexSpec extends SparkSuite {
       .map(f => f.getName -> f.lastModified()).toMap
     assert(after == mtimes, "serve path must not rewrite the index")
   }
+
+  test("a rewritten embeddings table regenerates the served index") {
+    import org.apache.spark.sql.functions.col
+    val dir = java.nio.file.Files.createTempDirectory("ivf_regen").toString
+    val emb = graft.Tables.load(spark, sfDir, "embeddings")
+    emb.write.parquet(s"$dir/embeddings.parquet")
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3))).toSeq
+    val sfx = graft.sources.ServedIndex.suffix(dir)
+    try {
+      val before = rows(AnnOps.ivfTopkIndexed(spark, dir))
+      emb.filter(col("vec_id") % 3 =!= 1)
+        .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+      // the documented hook for an external regen (session serve cache)
+      graft.sources.ServedIndex.resetCaches()
+      val served = rows(AnnOps.ivfTopkIndexed(spark, dir))
+      assert(served == rows(AnnOps.ivfTopk(spark, dir)),
+        "the second serve must match the inline build over the new rows")
+      assert(served != before, "the rewrite must change the answer")
+    } finally Seq(s"ivf_cents$sfx", s"ivf_assign$sfx").foreach { t =>
+      spark.sql(s"DROP TABLE IF EXISTS $t")
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(s"target/graft-index/$t"))
+    }
+  }
 }
