@@ -4,7 +4,8 @@ package graft
   * the full gate census — query name, owning module (the user-facing
   * entry point), oracle class, and the ScalaTest suites that reference
   * the gate by name — generated FROM [[SparkEntry.defs]] and the
-  * attest/ records so it cannot drift from the code. Run via
+  * attest/ records so it cannot drift from the code; plus the persisted
+  * index layouts from [[graft.sources.IndexSpec.all]]. Run via
   * `sbt "runMain graft.Catalog"`; CatalogSpec asserts the committed
   * file is regeneration-stable.
   *
@@ -99,6 +100,17 @@ object Catalog {
         }
         sb ++= "\n"
       }
+    }
+    val rows = graft.sources.IndexSpec.all
+    sb ++= s"## Persisted indexes (${rows.size})\n\n"
+    sb ++= "Every table `graft.sources.ServedIndex` serves, from `IndexSpec.all`;\n" +
+      "each is `SparkEntry.indexes(name)(spark, sfDir)`. A layout change here\n" +
+      "rebuilds every served copy (the stored fingerprint includes it).\n\n"
+    sb ++= "| name | table | schema | bucketed by × buckets | fingerprint scope |\n"
+    sb ++= "|---|---|---|---|---|\n"
+    rows.foreach { r =>
+      sb ++= s"| ${r.name} | ${r.table} | ${r.schema} | ${r.bucketCol} × ${r.buckets} " +
+        s"| ${r.scope} |\n"
     }
     sb.result()
   }

@@ -63,41 +63,23 @@ object SparkEntry {
     oracleSql.keys.toSeq.sorted.asJava
   }
 
-  /** Build-or-serve entry points for every PERSISTED index table
-    * (ServedIndex call sites). Bench drives these during warmup, timing
-    * each, so the one-off index-build cost is reported as its own
-    * `index_build_s` metric instead of being silently charged to
-    * whichever indexed gate happens to run first in a cold window —
-    * exactly the split a production deployment sees (index build =
-    * ingest-time cost, gates = query-time cost). Each function forces
-    * the build when stale and is a cheap serve when fresh. */
-  def indexes: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "copairs" -> ((s, d) => graft.algos.Graph.coPairsTable(s, d)),
-    "tradeedges" -> ((s, d) => graft.algos.Iterative.tradeEdgesTable(s, d)),
-    "minhash" -> ((s, d) => graft.llm.Dedup.minhashIndex(s, d)),
-    "winnow" -> ((s, d) => graft.llm.Dedup.winnowIndex(s, d)),
-    "shingle" -> ((s, d) => graft.llm.Dedup.shingleIndex(s, d)),
-    "shingle_sizes" -> ((s, d) => graft.llm.Dedup.shingleSizes(s, d)),
-    "shingle_df" -> ((s, d) => graft.llm.Dedup.shingleDf(s, d)),
-    "winnow_df" -> ((s, d) => graft.llm.Dedup.winnowDf(s, d)),
-    // base-split family (r16): the indexes + stat tables the delta
-    // gates probe — built over source = 'src0' only, i.e. exactly the
-    // corpus production holds when a batch arrives
-    "shingle_base" -> ((s, d) => graft.llm.Dedup.shingleIndexBase(s, d)),
-    "shingle_df_base" -> ((s, d) => graft.llm.Dedup.shingleDfBase(s, d)),
-    "shingle_sizes_base" -> ((s, d) => graft.llm.Dedup.shingleSizesBase(s, d)),
-    "winnow_base" -> ((s, d) => graft.llm.Dedup.winnowIndexBase(s, d)),
-    "winnow_df_base" -> ((s, d) => graft.llm.Dedup.winnowDfBase(s, d)),
-    "chunk_h_base" -> ((s, d) => graft.llm.Dedup.chunkHashesBase(s, d)),
-    "minhash_base" -> ((s, d) => graft.llm.Dedup.minhashIndexBase(s, d)),
-    "content_h_base" -> ((s, d) => graft.llm.Dedup.contentHashesBase(s, d)),
-    "vecstore" -> ((s, d) => graft.llm.AnnOps.vecStore(s, d)),
-    "lsh_bands" -> ((s, d) => graft.llm.AnnOps.lshIndex(s, d)),
-    "lsh_hot" -> ((s, d) => graft.llm.AnnOps.lshHot(s, d)),
-    // two tables (assignment + centroids); force the small one inline
-    "ivf" -> ((s, d) => {
-      val (assigned, cents) = graft.llm.AnnOps.ivfIndex(s, d)
-      cents.count(); assigned
-    }),
-  )
+  /** Build-or-serve entry points for every PERSISTED index table, keyed
+    * by row name and derived from [[graft.sources.IndexSpec.all]], so no
+    * index can be missing here. Each entry is the row's session-cached
+    * serve: it forces the build when stale and is a cheap serve when
+    * fresh. Bench drives these during warmup, timing each, so the
+    * one-off index-build cost is reported as its own `index_build_s`
+    * metric instead of being silently charged to whichever indexed gate
+    * happens to run first in a cold window — exactly the split a
+    * production deployment sees (index build = ingest-time cost, gates =
+    * query-time cost).
+    *
+    * Keys changed when the map became derived: `chunks` (the
+    * paragraph-chunk index) is new, so Bench now pre-builds and times it
+    * too; `vecstore` is now `vec_store`; `ivf` is now two rows,
+    * `ivf_cents` and `ivf_assign`. The `copairs` and `tradeedges`
+    * entries now take the session-cached serve like every other row
+    * (they re-checked the fingerprint on every call before). */
+  def indexes: Map[String, (SparkSession, String) => DataFrame] =
+    graft.sources.IndexSpec.all.map(r => r.name -> (r.apply _)).toMap
 }

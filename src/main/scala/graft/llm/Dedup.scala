@@ -1,6 +1,7 @@
 package graft.llm
 
 import graft.{QueryDef, Tables}
+import graft.sources.IndexSpec
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -27,9 +28,6 @@ object Dedup {
       .select(col("doc_id"), explode(expr(
         "transform(sequence(0, size(w)-3), i -> concat(w[i],' ',w[i+1],' ',w[i+2]))")).as("gram"))
       .distinct()
-
-  private def shingles(s: SparkSession, d: String): DataFrame =
-    shinglesOf(Tables.load(s, d, "documents"))
 
   /** Distinct shingles per doc WITH the per-doc count riding every row
     * as a map-only column: (delta_id, n1, gram). The gram set equals
@@ -109,17 +107,13 @@ object Dedup {
           FROM toks WHERE len(w) >= 1),
         chunks AS (SELECT doc_id, idx, ${md5LongSql("chunk")} AS h FROM raw)"""
 
-  /** Persisted paragraph-chunk index — [[paragraphChunks]] written once
-    * per corpus as an h-bucketed external table (the [[minhashIndex]]
-    * shape at paragraph granularity): pay the chunk+hash scan when the
-    * corpus lands, serve every ingest probe after. */
-  def chunkIndex(s: SparkSession, d: String): DataFrame = {
-    val sfx = graft.sources.ServedIndex.suffix(d)
-    graft.sources.ServedIndex.cached(s, s"chunk_idx$sfx", s"chunks$sfx",
-      corpusFingerprint(s, d),
-      "doc_id BIGINT, idx INT, h BIGINT",
-      "h", IndexBuckets)(paragraphChunks(Tables.load(s, d, "documents")))
-  }
+  /** Persisted paragraph-chunk index — [[paragraphChunks]] per corpus,
+    * h-bucketed (the [[minhashIndex]] shape at paragraph granularity):
+    * pay the chunk+hash scan when the corpus lands, serve every ingest
+    * probe after. */
+  val chunkIndex: IndexSpec = IndexSpec("chunks", "chunk_idx",
+    "doc_id BIGINT, idx INT, h BIGINT", "h", IndexSpec.Buckets, CorpusScope,
+    corpusFingerprint, (s, d) => paragraphChunks(Tables.load(s, d, "documents")))
 
   private val shinglesSql =
     s"""WITH toks AS (SELECT doc_id, $normSql AS w FROM documents),
@@ -1194,38 +1188,10 @@ object Dedup {
         "concat(bb.band, ':', array_join(transform(bb.bk, x -> cast(x AS string)), ','))")
         .as("bkey"))
 
-  /** Build-or-serve the PERSISTED MinHash band index (SURVEY §9's
-    * "persisted as a bucketed table in production"; the reference's
-    * inverted-index join kernel kmr_match, src/kmrmoreops.c:695-728,
-    * materialized instead of rebuilt per query).
-    *
-    * The expensive work of LSH dedup is signature computation (shingle →
-    * two md5 hashes → 64-permutation fold); candidate generation is a
-    * cheap equality join. This persists the banded signature table
-    * bucketed+sorted on the band key at a stable EXTERNAL location, so:
-    * - signatures are computed once per corpus, not once per query;
-    * - every candidate join is bucket-co-located — ZERO Exchange, zero
-    *   Sort (IndexedDedupSpec pins the plan);
-    * - a NEW SparkSession (in-memory catalog forgets tables) just
-    *   re-registers DDL against the existing files — no rewrite.
-    * Freshness: a cheap corpus fingerprint (row count, sum(doc_id),
-    * sum(char length)) rides beside the data; a driver data regen
-    * changes it and forces a rebuild, so serving can never go stale.
-    * At 100 TB the shape is identical with more buckets (thousands) —
-    * the index write is the one full shuffle the corpus ever pays. */
-  /** 32 = the local executor-thread count: bucket count caps the
-    * candidate-join parallelism of every serve-path query (the sf1
-    * census measured the 16-bucket shingle join SLOWER than inline for
-    * exactly this reason), so it must be >= the cores the join runs on.
-    * At 100 TB: thousands, sized to the cluster. Layout changes rebuild
-    * automatically — ServedIndex folds the bucket spec into the stored
-    * fingerprint. */
-  val IndexBuckets = 32
-
-  /** Cheap corpus freshness fingerprint for [[minhashIndex]]: row count,
-    * id sum, and total char length — a driver data regen changes it (and
-    * forces a rebuild) without the fingerprint pass paying anything close
-    * to the signature pipeline it guards. */
+  /** Cheap corpus freshness fingerprint for the whole-corpus index rows:
+    * row count, id sum, and total char length — a driver data regen
+    * changes it (and forces a rebuild) without the fingerprint pass
+    * paying anything close to the signature pipeline it guards. */
   private[llm] def corpusFingerprint(s: SparkSession, d: String): String =
     Tables.fingerprint(s, d, "corpus", "documents") {
       val r = Tables.load(s, d, "documents").agg(
@@ -1235,251 +1201,120 @@ object Dedup {
       s"${r.getLong(0)}|${r.getLong(1)}|${r.getLong(2)}"
     }
 
-  /** Uncached build-or-serve (every call re-checks the fingerprint and
-    * re-registers a cold catalog) — the semantics IndexedDedupSpec's
-    * freshness/tamper test exercises; gates use the session-cached
-    * [[minhashIndex]]. */
-  private[graft] def minhashIndexFresh(s: SparkSession, d: String): DataFrame = {
-    val sfx = graft.sources.ServedIndex.suffix(d)
-    graft.sources.ServedIndex(s, s"minhash_idx$sfx", s"minhash$sfx",
-      corpusFingerprint(s, d),
-      "doc_id BIGINT, sig ARRAY<BIGINT>, bkey STRING",
-      "bkey", IndexBuckets)(bandRows(minhashSigs(s, d)))
-  }
-
-  def minhashIndex(s: SparkSession, d: String): DataFrame = {
-    val sfx = graft.sources.ServedIndex.suffix(d)
-    graft.sources.ServedIndex.cached(s, s"minhash_idx$sfx", s"minhash$sfx",
-      corpusFingerprint(s, d),
-      "doc_id BIGINT, sig ARRAY<BIGINT>, bkey STRING",
-      "bkey", IndexBuckets)(bandRows(minhashSigs(s, d)))
-  }
-
-  /** Persisted winnowing-fingerprint index — [[winnowFps]] written once
-    * per corpus as a bucketed external table on fp (the [[minhashIndex]]
-    * shape applied to the substring family; late round 9). The
-    * posexplode + per-doc-window pipeline is the expensive half of
-    * dedup_substring, and like the minhash signatures it depends only on
-    * the corpus — pay it when the corpus lands, serve every query after. */
-  def winnowIndex(s: SparkSession, d: String): DataFrame = {
-    val sfx = graft.sources.ServedIndex.suffix(d)
-    graft.sources.ServedIndex.cached(s, s"winnow_idx$sfx", s"winnow$sfx",
-      corpusFingerprint(s, d),
-      "doc_id BIGINT, fp BIGINT",
-      "fp", IndexBuckets)(winnowFps(Tables.load(s, d, "documents")))
-  }
-
-  /** Persisted shingle inverted index — the distinct word-3-gram
-    * posting list (doc_id, gram) written once per corpus, bucketed on
-    * gram (the [[minhashIndex]] shape applied to the exact-similarity
-    * family; late round 9). The tokenize + explode + distinct is the
-    * corpus-dependent half of dedup_jaccard/dedup_containment — at the
-    * adversarial sf1 replica those queries spend 31–40 s inline, almost
-    * all of it re-deriving this table. */
-  def shingleIndex(s: SparkSession, d: String): DataFrame = {
-    val sfx = graft.sources.ServedIndex.suffix(d)
-    graft.sources.ServedIndex.cached(s, s"shingle_idx$sfx", s"shingle$sfx",
-      corpusFingerprint(s, d),
-      "doc_id BIGINT, gram STRING",
-      "gram", IndexBuckets)(shingles(s, d))
-  }
-
-  /** Persisted per-gram document frequencies — the stop-list stat of
-    * [[shingleIndex]], bucketed by gram (r15): the df-cap guard needs
-    * df per gram, and re-aggregating the posting list on every ingest
-    * batch is a second full corpus scan per batch (bucket-co-located,
-    * so no shuffle — but the IO is O(corpus), not O(delta)). One row
-    * per distinct gram, written with the index (same corpus
-    * fingerprint); the index-served twins join it bucket-co-located on
-    * gram. (The DELTA gates read the BASE-SPLIT twin [[shingleDfBase]]
-    * instead: their stand-in corpus is the whole table MINUS the
-    * arriving batch, so this whole-corpus stat would over-count df by
-    * the batch's own grams — the base-split family below is built over
-    * exactly the corpus production holds at ingest time.) */
-  def shingleDf(s: SparkSession, d: String): DataFrame = {
-    val sfx = graft.sources.ServedIndex.suffix(d)
-    graft.sources.ServedIndex.cached(s, s"shingle_df$sfx", s"shingle_df$sfx",
-      corpusFingerprint(s, d),
-      "gram STRING, df BIGINT",
-      "gram", IndexBuckets)(
-      // aggregate the PERSISTED index, not the text: the gram-bucketed
-      // posting table makes this a co-located count with no re-tokenize
-      // (the lshHot pattern), and consistency with the index is by
-      // construction rather than by determinism
-      shingleIndex(s, d).groupBy("gram").agg(count(lit(1)).as("df")))
-  }
-
-  /** Persisted per-fingerprint document frequencies — the winnow
-    * family's twin of [[shingleDf]], bucketed by fp. */
-  def winnowDf(s: SparkSession, d: String): DataFrame = {
-    val sfx = graft.sources.ServedIndex.suffix(d)
-    graft.sources.ServedIndex.cached(s, s"winnow_df$sfx", s"winnow_df$sfx",
-      corpusFingerprint(s, d),
-      "fp BIGINT, df BIGINT",
-      "fp", IndexBuckets)(
-      winnowIndex(s, d).groupBy("fp").agg(count(lit(1)).as("df")))
-  }
-
-  /** Persisted per-doc distinct-shingle COUNTS — the companion stat
-    * table of [[shingleIndex]], bucketed by doc_id (r15): the Jaccard
-    * denominator needs |doc| for every candidate's base doc, and
-    * re-aggregating the gram-bucketed posting list by doc_id is a
-    * corpus-sized Exchange on every ingest batch — exactly the shuffle
-    * the O(delta) serve claim forbids. One row per doc, written with
-    * the index (same corpus fingerprint, so staleness fails the shared
-    * hash gate); a candidate join against it is a bucket-co-located
-    * doc_id lookup. */
-  def shingleSizes(s: SparkSession, d: String): DataFrame = {
-    val sfx = graft.sources.ServedIndex.suffix(d)
-    graft.sources.ServedIndex.cached(s, s"shingle_sizes$sfx", s"shingle_sizes$sfx",
-      corpusFingerprint(s, d),
-      "doc_id BIGINT, n BIGINT",
-      "doc_id", IndexBuckets)(
-      // one doc_id-keyed aggregate over the persisted posting table —
-      // no re-tokenize; see [[shingleDf]] for the rationale
-      shingleIndex(s, d).groupBy("doc_id").agg(count(lit(1)).as("n")))
-  }
-
   /** The deterministic "existing corpus" split every delta-ingest gate
     * stands in on: documents with source = BaseSource are the
     * already-ingested corpus; everything else is the arriving batch. */
   private[llm] val BaseSource = "src0"
+  private val BaseScope = s"documents where source = $BaseSource"
+
+  private def baseDocs(s: SparkSession, d: String): DataFrame =
+    Tables.load(s, d, "documents").filter(col("source") === BaseSource)
 
   /** [[corpusFingerprint]] over the BASE split only, tagged so it can
     * never collide with a whole-corpus fingerprint — the freshness key
     * of the base-split index family below. */
   private[llm] def baseFingerprint(s: SparkSession, d: String): String =
     Tables.fingerprint(s, d, "base", "documents") {
-      val r = Tables.load(s, d, "documents")
-        .filter(col("source") === BaseSource).agg(
-          count(lit(1)).cast("long"),
-          coalesce(sum("doc_id"), lit(0L)),
-          coalesce(sum(length(col("text"))).cast("long"), lit(0L))).head()
+      val r = baseDocs(s, d).agg(
+        count(lit(1)).cast("long"),
+        coalesce(sum("doc_id"), lit(0L)),
+        coalesce(sum(length(col("text"))).cast("long"), lit(0L))).head()
       s"base:$BaseSource|${r.getLong(0)}|${r.getLong(1)}|${r.getLong(2)}"
     }
 
-  /** BASE-SPLIT persisted index family (r16): [[shingleIndex]] /
-    * [[winnowIndex]] and their stat tables built over the EXISTING
-    * corpus only (source = [[BaseSource]]). This is what production
-    * actually holds at ingest time — the arriving batch is by
-    * definition not yet indexed — so the persisted df stop-lists and
-    * size table ARE the guards the delta gates read, verbatim. (The
-    * r15 gates derived df/sizes by re-aggregating the base split of
-    * the WHOLE-corpus index per ingest: value-correct for the
-    * stand-in, but an O(corpus)-IO aggregate per batch that meant the
-    * claimed "the stat table IS the stop list" plan was never
-    * executed by any gate. These tables close that gap.) Same
-    * reference anchor as the whole-corpus family: kmr_match as a
-    * persisted inverted index, src/kmrmoreops.c:695-728. */
-  def shingleIndexBase(s: SparkSession, d: String): DataFrame = {
-    val sfx = graft.sources.ServedIndex.suffix(d)
-    graft.sources.ServedIndex.cached(s, s"shingle_idx_base$sfx", s"shingle_base$sfx",
-      baseFingerprint(s, d),
-      "doc_id BIGINT, gram STRING",
-      "gram", IndexBuckets)(
-      shinglesOf(Tables.load(s, d, "documents")
-        .filter(col("source") === BaseSource)))
+  // a constant (inlined), so rows declared above this line may use it
+  private final val CorpusScope = "documents"
+
+  /** One document-derived index as its whole-corpus row plus its
+    * BASE-SPLIT twin (r16). The twin appends `_base` to name and table,
+    * keys on [[baseFingerprint]], and runs `f` over the base documents —
+    * or, for a stat table, over `parent`'s base twin. The base family is
+    * what production holds at ingest time (the arriving batch is by
+    * definition not yet indexed), so its df stop-lists and size tables
+    * ARE the guards the delta gates read, with no O(corpus) aggregate
+    * per batch. */
+  private def withBase(name: String, table: String, schema: String,
+      bucketCol: String, parent: Option[(IndexSpec, IndexSpec)] = None)(
+      f: DataFrame => DataFrame): (IndexSpec, IndexSpec) = {
+    def row(sfx: String, scope: String, fp: (SparkSession, String) => String,
+        docs: (SparkSession, String) => DataFrame, from: Option[IndexSpec]) =
+      IndexSpec(name + sfx, table + sfx, schema, bucketCol, IndexSpec.Buckets,
+        scope, fp, (s, d) => f(from.fold(docs(s, d))(_(s, d))))
+    (row("", CorpusScope, corpusFingerprint, Tables.load(_, _, "documents"),
+        parent.map(_._1)),
+      row("_base", BaseScope, baseFingerprint, baseDocs, parent.map(_._2)))
   }
 
-  /** Per-gram df over the base corpus — the PRODUCTION stop list the
-    * delta gates read from disk (one bucket-co-located aggregate at
-    * index-build time, zero per-ingest cost). */
-  def shingleDfBase(s: SparkSession, d: String): DataFrame = {
-    val sfx = graft.sources.ServedIndex.suffix(d)
-    graft.sources.ServedIndex.cached(s, s"shingle_df_base$sfx", s"shingle_df_base$sfx",
-      baseFingerprint(s, d),
-      "gram STRING, df BIGINT",
-      "gram", IndexBuckets)(
-      shingleIndexBase(s, d).groupBy("gram").agg(count(lit(1)).as("df")))
-  }
+  /** Persisted shingle inverted index — the distinct word-3-gram
+    * posting list (doc_id, gram), bucketed on gram (late round 9). The
+    * tokenize + explode + distinct is the corpus-dependent half of
+    * dedup_jaccard/dedup_containment — at the adversarial sf1 replica
+    * those queries spend 31–40 s inline, almost all of it re-deriving
+    * this table. */
+  val (shingleIndex, shingleIndexBase) = withBase("shingle", "shingle_idx",
+    "doc_id BIGINT, gram STRING", "gram")(shinglesOf)
 
-  /** Per-base-doc distinct-shingle counts — the Jaccard denominator's
-    * base side, served from disk per ingest (see [[shingleSizes]] for
-    * why re-aggregating the posting list per batch is forbidden). */
-  def shingleSizesBase(s: SparkSession, d: String): DataFrame = {
-    val sfx = graft.sources.ServedIndex.suffix(d)
-    graft.sources.ServedIndex.cached(s, s"shingle_sizes_base$sfx", s"shingle_sizes_base$sfx",
-      baseFingerprint(s, d),
-      "doc_id BIGINT, n BIGINT",
-      "doc_id", IndexBuckets)(
-      shingleIndexBase(s, d).groupBy("doc_id").agg(count(lit(1)).as("n")))
-  }
+  /** Persisted per-gram document frequencies — the stop-list stat of
+    * [[shingleIndex]] (r15): the df-cap guard needs df per gram, and
+    * re-aggregating the posting list on every ingest batch is a second
+    * full corpus scan per batch. Aggregated from the PERSISTED
+    * gram-bucketed index, not the text: a co-located count with no
+    * re-tokenize, consistent with the index by construction. */
+  val (shingleDf, shingleDfBase) = withBase("shingle_df", "shingle_df",
+    "gram STRING, df BIGINT", "gram", Some((shingleIndex, shingleIndexBase)))(
+    _.groupBy("gram").agg(count(lit(1)).as("df")))
 
-  /** BASE-SPLIT MinHash band index — [[minhashIndex]] built over the
-    * existing corpus only (r16): the table a production ingest probes
-    * for near-dups against the corpus it already holds. The delta
-    * gate's batch side computes its own signatures from text (O(delta)
-    * — the expensive pipeline runs over the arriving docs only) and
-    * band-joins this index; the r15 form instead read the WHOLE
-    * persisted index on both sides and split it by a source join —
-    * value-identical, but a corpus-sized index read per ingest on the
-    * delta side that production would never perform. */
-  def minhashIndexBase(s: SparkSession, d: String): DataFrame = {
-    val sfx = graft.sources.ServedIndex.suffix(d)
-    graft.sources.ServedIndex.cached(s, s"minhash_idx_base$sfx", s"minhash_base$sfx",
-      baseFingerprint(s, d),
-      "doc_id BIGINT, sig ARRAY<BIGINT>, bkey STRING",
-      "bkey", IndexBuckets)(bandRows(minhashSigsOf(
-      Tables.load(s, d, "documents").filter(col("source") === BaseSource))))
-  }
+  /** Persisted per-doc distinct-shingle COUNTS — the Jaccard
+    * denominator (r15): re-aggregating the gram-bucketed posting list by
+    * doc_id is a corpus-sized Exchange on every ingest batch, exactly
+    * the shuffle the O(delta) serve claim forbids; here a candidate join
+    * is a bucket-co-located doc_id lookup. */
+  val (shingleSizes, shingleSizesBase) = withBase("shingle_sizes",
+    "shingle_sizes", "doc_id BIGINT, n BIGINT", "doc_id",
+    Some((shingleIndex, shingleIndexBase)))(
+    _.groupBy("doc_id").agg(count(lit(1)).as("n")))
 
-  /** DISTINCT content hashes of the BASE corpus — the membership set
-    * dedup_incremental probes (r16). The r15 gate re-hashed the whole
-    * src0 split and DISTINCT'd it per ingest; production holds this
-    * set as the exact-dedup index (one row per distinct base content
-    * hash, bucketed on the hash) and anti-joins each arriving shard
-    * against it. */
-  def contentHashesBase(s: SparkSession, d: String): DataFrame = {
-    val sfx = graft.sources.ServedIndex.suffix(d)
-    graft.sources.ServedIndex.cached(s, s"content_h_base$sfx", s"content_h_base$sfx",
-      baseFingerprint(s, d),
-      "h STRING",
-      "h", IndexBuckets)(
-      Tables.load(s, d, "documents").filter(col("source") === BaseSource)
-        .select(TextNorm.contentHash.as("h")).distinct())
-  }
+  /** Persisted winnowing-fingerprint index — [[winnowFps]] bucketed on
+    * fp (late round 9). The posexplode + per-doc-window pipeline is the
+    * expensive half of dedup_substring and depends only on the corpus. */
+  val (winnowIndex, winnowIndexBase) = withBase("winnow", "winnow_idx",
+    "doc_id BIGINT, fp BIGINT", "fp")(winnowFps)
+
+  /** Per-fingerprint document frequencies — the winnow family's twin of
+    * [[shingleDf]]. */
+  val (winnowDf, winnowDfBase) = withBase("winnow_df", "winnow_df",
+    "fp BIGINT, df BIGINT", "fp", Some((winnowIndex, winnowIndexBase)))(
+    _.groupBy("fp").agg(count(lit(1)).as("df")))
+
+  /** Persisted MinHash band index (SURVEY §9's "persisted as a bucketed
+    * table in production"). Signature computation (shingle → two md5
+    * hashes → 64-permutation fold) is the expensive work of LSH dedup;
+    * persisting the banded signatures bucketed+sorted on the band key
+    * computes them once per corpus, and every candidate join is
+    * bucket-co-located — ZERO Exchange, zero Sort (IndexedDedupSpec pins
+    * the plan). The base twin is the table a production ingest probes
+    * for near-dups; the delta gate computes only the batch's own
+    * signatures. */
+  val (minhashIndex, minhashIndexBase) = withBase("minhash", "minhash_idx",
+    "doc_id BIGINT, sig ARRAY<BIGINT>, bkey STRING", "bkey")(
+    docs => bandRows(minhashSigsOf(docs)))
+
+  /** DISTINCT content hashes of the BASE corpus — the exact-dedup
+    * membership set dedup_incremental anti-joins each arriving shard
+    * against (r16), instead of re-hashing the base split per ingest. */
+  val contentHashesBase: IndexSpec = IndexSpec("content_h_base",
+    "content_h_base", "h STRING", "h", IndexSpec.Buckets, BaseScope,
+    baseFingerprint,
+    (s, d) => baseDocs(s, d).select(TextNorm.contentHash.as("h")).distinct())
 
   /** DISTINCT paragraph-chunk hashes of the BASE corpus — the
-    * membership set dedup_paragraph_delta probes, persisted (r16). The
-    * r15 gate derived it per ingest as `chunkIndex ⋈ src0 → DISTINCT h`
-    * — a corpus-sized aggregate per batch, the same O(corpus)-IO shape
-    * the jaccard/substring stop-list fix removed. One row per distinct
-    * base chunk hash, h-bucketed, keyed by the base fingerprint; the
-    * probe is a bucket-co-located h-equality join, and the streaming
-    * sibling ([[graft.streaming.StreamOps]].chunkProbeFor) reads the
-    * same table with no aggregate anywhere in its plan. */
-  def chunkHashesBase(s: SparkSession, d: String): DataFrame = {
-    val sfx = graft.sources.ServedIndex.suffix(d)
-    graft.sources.ServedIndex.cached(s, s"chunk_h_base$sfx", s"chunk_h_base$sfx",
-      baseFingerprint(s, d),
-      "h BIGINT",
-      "h", IndexBuckets)(
-      paragraphChunks(Tables.load(s, d, "documents")
-        .filter(col("source") === BaseSource))
-        .select("h").distinct())
-  }
-
-  /** Base-split winnowing-fingerprint index (see [[winnowIndex]]). */
-  def winnowIndexBase(s: SparkSession, d: String): DataFrame = {
-    val sfx = graft.sources.ServedIndex.suffix(d)
-    graft.sources.ServedIndex.cached(s, s"winnow_idx_base$sfx", s"winnow_base$sfx",
-      baseFingerprint(s, d),
-      "doc_id BIGINT, fp BIGINT",
-      "fp", IndexBuckets)(
-      winnowFps(Tables.load(s, d, "documents")
-        .filter(col("source") === BaseSource)))
-  }
-
-  /** Per-fingerprint df over the base corpus — the winnow family's
-    * production stop list. */
-  def winnowDfBase(s: SparkSession, d: String): DataFrame = {
-    val sfx = graft.sources.ServedIndex.suffix(d)
-    graft.sources.ServedIndex.cached(s, s"winnow_df_base$sfx", s"winnow_df_base$sfx",
-      baseFingerprint(s, d),
-      "fp BIGINT, df BIGINT",
-      "fp", IndexBuckets)(
-      winnowIndexBase(s, d).groupBy("fp").agg(count(lit(1)).as("df")))
-  }
+    * membership set dedup_paragraph_delta and the streaming
+    * [[graft.streaming.StreamOps]].chunkProbeFor probe with a
+    * bucket-co-located h-equality join (r16), instead of a per-batch
+    * `chunkIndex ⋈ src0 → DISTINCT h` aggregate. */
+  val chunkHashesBase: IndexSpec = IndexSpec("chunk_h_base", "chunk_h_base",
+    "h BIGINT", "h", IndexSpec.Buckets, BaseScope, baseFingerprint,
+    (s, d) => paragraphChunks(baseDocs(s, d)).select("h").distinct())
 
   /** Candidate pairs served FROM the persisted index — same semantics as
     * [[minhashPairs]] (the scalar bkey join is injective in (band, bk)),

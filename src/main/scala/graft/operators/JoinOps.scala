@@ -96,9 +96,9 @@ object JoinOps {
     // the small side and never touch the buckets; PlanSpec asserts both
     // scans read bucketed with no Exchange feeding the join.
     QueryDef("bucketed_join", (s, d) => {
-      val sfx = d.replaceAll("[^A-Za-z0-9]", "_")
-      Tables.resetManagedTable(s, s"orders_bj$sfx")
-      Tables.resetManagedTable(s, s"customer_bj$sfx")
+      val tag = graft.sources.ServedIndex.suffix(d)
+      Tables.resetManagedTable(s, s"orders_bj$tag")
+      Tables.resetManagedTable(s, s"customer_bj$tag")
       // project to the query's columns before the write — a bucketed
       // table is a materialization, and materializing unread columns
       // just multiplies the one-off write cost
@@ -106,14 +106,14 @@ object JoinOps {
         .select(col("o_custkey"), col("o_totalprice"))
         .write.mode("overwrite")
         .bucketBy(8, "o_custkey").sortBy("o_custkey")
-        .saveAsTable(s"orders_bj$sfx")
+        .saveAsTable(s"orders_bj$tag")
       Tables.load(s, d, "customer")
         .select(col("c_custkey"), col("c_nationkey"))
         .write.mode("overwrite")
         .bucketBy(8, "c_custkey").sortBy("c_custkey")
-        .saveAsTable(s"customer_bj$sfx")
-      s.table(s"orders_bj$sfx").hint("merge")
-        .join(s.table(s"customer_bj$sfx"), col("o_custkey") === col("c_custkey"))
+        .saveAsTable(s"customer_bj$tag")
+      s.table(s"orders_bj$tag").hint("merge")
+        .join(s.table(s"customer_bj$tag"), col("o_custkey") === col("c_custkey"))
         .groupBy("c_nationkey")
         .agg(count(lit(1)).as("n_orders"),
           sum(round(col("o_totalprice") * 100, 0).cast("long")).as("sum_cents"))

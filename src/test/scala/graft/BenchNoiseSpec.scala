@@ -231,12 +231,4 @@ class BenchNoiseSpec extends AnyFunSuite {
     // the total still closes the line
     assert(line.endsWith("\"total_s\":0.000}"))
   }
-
-  test("index names never collide with gate names (ADVICE r15: the " +
-      "carry-over key space must stay disjoint)") {
-    val overlap =
-      graft.SparkEntry.indexes.keySet.intersect(graft.SparkEntry.queries.keySet)
-    assert(overlap.isEmpty,
-      s"SparkEntry.indexes keys colliding with gate names: $overlap")
-  }
 }

@@ -10,7 +10,7 @@ class DurableGraphSpec extends SparkSuite {
   test("persisted edge table equals the inline build") {
     val built = Graph.coPairsBuild(spark, sfDir)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val served = Graph.coPairsTable(spark, sfDir)
+    val served = Graph.coPairsTable.fresh(spark, sfDir)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(served == built)
     assert(served.nonEmpty)
@@ -19,35 +19,35 @@ class DurableGraphSpec extends SparkSuite {
   test("persisted trade-edge table equals the inline build (incl. degrees)") {
     val built = Iterative.tradeEdgesDegBuild(spark, sfDir)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val served = Iterative.tradeEdgesTable(spark, sfDir)
+    val served = Iterative.tradeEdges.fresh(spark, sfDir)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(served == built)
     assert(served.nonEmpty)
   }
 
   test("a cold catalog re-registers the trade-edge table without rewriting files") {
-    Iterative.tradeEdgesTable(spark, sfDir).count() // ensure built
+    Iterative.tradeEdges.fresh(spark, sfDir).count() // ensure built
     val sfx = sfDir.replaceAll("[^A-Za-z0-9]", "_")
     val dir = graft.sources.ServedIndex.activeDir(spark, s"tradeedges$sfx")
     val mtimes = dir.listFiles().filter(_.getName.startsWith("part-"))
       .map(f => f.getName -> f.lastModified()).toMap
     assert(mtimes.nonEmpty)
     spark.sql(s"DROP TABLE IF EXISTS tradeedges$sfx") // a new session's view
-    assert(Iterative.tradeEdgesTable(spark, sfDir).count() > 0)
+    assert(Iterative.tradeEdges.fresh(spark, sfDir).count() > 0)
     val after = dir.listFiles().filter(_.getName.startsWith("part-"))
       .map(f => f.getName -> f.lastModified()).toMap
     assert(after == mtimes, "re-registration must not rewrite the edge table")
   }
 
   test("a cold catalog re-registers the edge table without rewriting files") {
-    Graph.coPairsTable(spark, sfDir).count() // ensure built
+    Graph.coPairsTable.fresh(spark, sfDir).count() // ensure built
     val sfx = sfDir.replaceAll("[^A-Za-z0-9]", "_")
     val dir = graft.sources.ServedIndex.activeDir(spark, s"copairs$sfx")
     val mtimes = dir.listFiles().filter(_.getName.startsWith("part-"))
       .map(f => f.getName -> f.lastModified()).toMap
     assert(mtimes.nonEmpty)
     spark.sql(s"DROP TABLE IF EXISTS copairs$sfx") // a new session's view
-    assert(Graph.coPairsTable(spark, sfDir).count() > 0)
+    assert(Graph.coPairsTable.fresh(spark, sfDir).count() > 0)
     val after = dir.listFiles().filter(_.getName.startsWith("part-"))
       .map(f => f.getName -> f.lastModified()).toMap
     assert(after == mtimes, "re-registration must not rewrite the edge table")
@@ -62,10 +62,10 @@ class DurableGraphSpec extends SparkSuite {
       df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val tbl = s"copairs${graft.sources.ServedIndex.suffix(dir)}"
     try {
-      val before = edges(Graph.coPairsTable(spark, dir))
+      val before = edges(Graph.coPairsTable.fresh(spark, dir))
       li.filter(col("l_suppkey") % 3 =!= 0)
         .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
-      val served = edges(Graph.coPairsTable(spark, dir))
+      val served = edges(Graph.coPairsTable.fresh(spark, dir))
       assert(served == edges(Graph.coPairsBuild(spark, dir)),
         "the second serve must match the inline build over the new rows")
       assert(served != before, "the rewrite must change the edge set")

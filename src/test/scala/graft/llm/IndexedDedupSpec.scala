@@ -68,7 +68,7 @@ class IndexedDedupSpec extends SparkSuite {
       val futures = (1 to 4).map(_ => pool.submit(
         new java.util.concurrent.Callable[Long] {
           override def call(): Long =
-            Dedup.indexedPairs(Dedup.minhashIndexFresh(spark, sfDir), est = 0.5).count()
+            Dedup.indexedPairs(Dedup.minhashIndex.fresh(spark, sfDir), est = 0.5).count()
         }))
       val counts = futures.map(_.get()).toSet
       assert(counts.size == 1, s"racing builders disagreed: $counts")
@@ -79,7 +79,7 @@ class IndexedDedupSpec extends SparkSuite {
     // the uncached entry: per-call fingerprint check + cold-catalog
     // re-registration are exactly what this test exercises (the cached
     // gate path deliberately skips both within a session)
-    Dedup.minhashIndexFresh(spark, sfDir) // ensure built
+    Dedup.minhashIndex.fresh(spark, sfDir) // ensure built
     // tamper with the pointer's FINGERPRINT field through ServedIndex's
     // own meta reader/writer (the versioned layout keeps active/prev
     // tokens beside the fp; direct java.io writes would leave a stale
@@ -93,7 +93,7 @@ class IndexedDedupSpec extends SparkSuite {
     // 1. stale fingerprint → rebuild into a NEW version dir (fingerprint
     // restored to current; old active dir retained as the grace copy)
     graft.sources.ServedIndex.writeMeta(spark, fs, root, a0, p0, "0|0|0")
-    Dedup.minhashIndexFresh(spark, sfDir)
+    Dedup.minhashIndex.fresh(spark, sfDir)
     val (a1, p1, fp1) = meta()
     assert(fp1 == fp0, "rebuild must restore the current corpus fingerprint")
     assert(a1 != a0, "rebuild must write a fresh version dir")
@@ -109,7 +109,7 @@ class IndexedDedupSpec extends SparkSuite {
     val mtimes = files.map(f => f.getName -> f.lastModified()).toMap
     val tbl = s"minhash_idx${sfDir.replaceAll("[^A-Za-z0-9]", "_")}"
     spark.sql(s"DROP TABLE IF EXISTS $tbl")
-    val idx = Dedup.minhashIndexFresh(spark, sfDir)
+    val idx = Dedup.minhashIndex.fresh(spark, sfDir)
     assert(idx.count() > 0)
     val after = active.listFiles().filter(_.getName.startsWith("part-"))
       .map(f => f.getName -> f.lastModified()).toMap
