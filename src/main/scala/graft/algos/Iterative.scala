@@ -3,7 +3,7 @@ package graft.algos
 import graft.{QueryDef, Tables}
 import graft.functions.DotProductD.dotD
 import graft.sources.IndexSpec
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Iterative / linear-algebra workloads from the reference example suite
@@ -80,9 +80,13 @@ object Iterative {
     * from disk afterwards, even by a brand-new SparkSession on the same
     * warehouse. The fingerprint covers both source tables. Unlike the
     * O(2000) coPairs set, this table is SF-proportional, so it is NOT
-    * localCheckpoint'ed into the block cache — every consumer reads the
-    * bucketed files (at 100 TB that read is the point: one shuffle paid
-    * at build, zero afterwards). */
+    * localCheckpoint'ed into the block cache at build. The PageRank loop
+    * still caches a copy per call ([[prepareGraphDegreed]]), coalesced
+    * to the session's parallelism and so no longer bucketed: at sf0.01
+    * its join broadcasts `ranks`, so the hash layout buys it nothing. At
+    * sf0.1 the planner, estimating a lazily persisted generation at
+    * ~1 TB, plans a sort-merge join that then shuffles the coalesced
+    * edges in supersteps 2-5 (4 more jobs per call, still faster). */
   private[graft] val tradeEdges: IndexSpec = IndexSpec("tradeedges", "tradeedges",
     "src BIGINT, dst BIGINT, deg BIGINT", "src", IndexSpec.Buckets,
     "lineitem, orders", tradeEdgesFp, tradeEdgesDegBuild)
@@ -125,7 +129,13 @@ object Iterative {
     * degree groupBy+join over the full edge set; node set and no-in ids
     * are still derived here (cheap distincts). */
   def prepareGraphDegreed(edgesDeg0: DataFrame): PreparedGraph = {
-    val edgesDeg = edgesDeg0.select(col("src"), col("dst"), col("deg")).persist()
+    // At most one partition per shuffle partition (the session's core
+    // count, see Sessions.build). The cache keeps a served table's
+    // bucketed layout, so without the coalesce every superstep's map
+    // stage would run one task per bucket (32) on any core count.
+    val parts = edgesDeg0.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+    val edgesDeg = edgesDeg0.select(col("src"), col("dst"), col("deg"))
+      .coalesce(parts).persist()
     edgesDeg.count()
     // Node set AND the no-in-edge subset from ONE explode+aggregate pass
     // over the cached edges (r16 optimization round): the previous form
@@ -135,9 +145,9 @@ object Iterative {
     // max() over endpoint markers, so noInIds = marks where hasIn = 0
     // is exactly "appears only as src" — the set the anti-join computed.
     // Both views read the one persisted `marks` cache (materialized by
-    // the count below, BEFORE the superstep job fans out over its five
-    // union branches — the eager-priming discipline the rejected
-    // count-trim experiment in OPTIMIZATION_r16.md validated).
+    // the count below, BEFORE the supersteps read it through their union
+    // branches — the eager-priming discipline the rejected count-trim
+    // experiment in OPTIMIZATION_r16.md validated).
     val marks = edgesDeg.select(explode(array(
         struct(col("src").as("id"), lit(0).as("t")),
         struct(col("dst").as("id"), lit(1).as("t")))).as("m"))
@@ -169,39 +179,14 @@ object Iterative {
     * one [[prepareGraph]] feeds this AND [[pageRankExactOn]]. */
   def pageRankOn(g: PreparedGraph, iters: Int, damping: Double = 0.85): DataFrame = {
     val n = g.n.toDouble
-    // Same arithmetic as always: contribution is rank * (1.0/deg). The
-    // weight projection is a narrow map over the persisted edgesDeg.
-    val edgesW = g.edgesDeg
-      .select(col("src"), col("dst"), (lit(1.0) / col("deg")).as("w"))
-    val noIn = g.noInIds.select(col("id"), lit((1 - damping) / n).as("rank"))
-    var ranks = g.nodes.select(col("id"), lit(1.0 / n).as("rank")).persist()
-    // Generations are persisted LAZILY and materialized only at each
-    // lineage-truncation point: one Spark job computes the whole window
-    // of supersteps (each persisted generation caches as it is first
-    // computed within that job), instead of a driver-synchronized job
-    // per iteration. Same math, ~5× fewer scheduling round-trips.
-    val window = scala.collection.mutable.ArrayBuffer[DataFrame](ranks)
-    for (i <- 1 to iters) {
-      val contribs = edgesW
-        .join(ranks.withColumnRenamed("id", "src"), "src")
-        .groupBy(col("dst").as("id"))
-        .agg(sum(col("rank") * col("w")).as("m"))
-      val next = contribs
-        .select(col("id"),
-          (lit((1 - damping) / n) + lit(damping) * col("m")).as("rank"))
-        .union(noIn)
-      ranks =
-        if (i % 5 == 0 || i == iters) {
-          // eager checkpoint runs the window's chain; afterwards the
-          // intermediate generations are dead — drop their cache entries
-          val m = next.localCheckpoint(true)
-          window.foreach(_.unpersist(false))
-          window.clear()
-          window += m
-          m
-        } else { val p = next.persist(); window += p; p }
-    }
-    ranks
+    // Contribution is rank * (1.0/deg); the weight is a narrow
+    // projection over the persisted edgesDeg.
+    supersteps(g, iters,
+      edgeCols = Seq((lit(1.0) / col("deg")).as("w")),
+      init = Seq(lit(1.0 / n).as("rank")),
+      noIn = Seq(lit((1 - damping) / n).as("rank")),
+      aggs = Seq(sum(col("rank") * col("w")).as("m")),
+      update = Seq((lit((1 - damping) / n) + lit(damping) * col("m")).as("rank")))
   }
 
   /** Fixed-point PageRank: the same superstep structure as [[pageRank]]
@@ -224,34 +209,18 @@ object Iterative {
     out
   }
 
+  /** Femto-rank scale of [[pageRankExact]] and [[pageRankBothOn]]. */
+  private final val Scale = 1000000000000000L
+
   /** [[pageRankExact]] over pre-built shared intermediates. */
   def pageRankExactOn(g: PreparedGraph, iters: Int): DataFrame = {
-    val SCALE = 1000000000000000L
-    val n = g.n
-    val init = SCALE / n
-    val base = (15L * SCALE) / (100L * n)
-    val edgesW = g.edgesDeg
-    val noIn = g.noInIds.select(col("id"), lit(base).as("r"))
-    var ranks = g.nodes.select(col("id"), lit(init).as("r")).persist()
-    val window = scala.collection.mutable.ArrayBuffer[DataFrame](ranks)
-    for (i <- 1 to iters) {
-      val contribs = edgesW
-        .join(ranks.withColumnRenamed("id", "src"), "src")
-        .groupBy(col("dst").as("id"))
-        .agg(sum(expr("r div deg")).as("m"))
-      val next = contribs
-        .select(col("id"), (lit(base) + expr("(85 * m) div 100")).as("r"))
-        .union(noIn)
-      ranks =
-        if (i % 5 == 0 || i == iters) {
-          val m = next.localCheckpoint(true)
-          window.foreach(_.unpersist(false))
-          window.clear()
-          window += m
-          m
-        } else { val p = next.persist(); window += p; p }
-    }
-    ranks
+    val base = (15L * Scale) / (100L * g.n)
+    supersteps(g, iters,
+      edgeCols = Seq(col("deg")),
+      init = Seq(lit(Scale / g.n).as("r")),
+      noIn = Seq(lit(base).as("r")),
+      aggs = Seq(sum(expr("r div deg")).as("m")),
+      update = Seq((lit(base) + expr("(85 * m) div 100")).as("r")))
   }
 
   /** Fused twin-arithmetic PageRank: carries the double rank AND the
@@ -266,31 +235,49 @@ object Iterative {
     * fixed at 0.85 to match the integer path's `(85*m) div 100`.
     * IterativeSpec pins fused == separate on both columns. */
   def pageRankBothOn(g: PreparedGraph, iters: Int): DataFrame = {
-    val SCALE = 1000000000000000L
-    val n = g.n
-    val nD = n.toDouble
-    val init = SCALE / n
-    val base = (15L * SCALE) / (100L * n)
+    val nD = g.n.toDouble
+    val base = (15L * Scale) / (100L * g.n)
     val baseD = 0.15 / nD
-    val edgesW = g.edgesDeg.select(col("src"), col("dst"), col("deg"),
-      (lit(1.0) / col("deg")).as("w"))
-    val noIn = g.noInIds.select(col("id"), lit(baseD).as("rank"), lit(base).as("r"))
-    var ranks = g.nodes
-      .select(col("id"), lit(1.0 / nD).as("rank"), lit(init).as("r")).persist()
+    supersteps(g, iters,
+      edgeCols = Seq(col("deg"), (lit(1.0) / col("deg")).as("w")),
+      init = Seq(lit(1.0 / nD).as("rank"), lit(Scale / g.n).as("r")),
+      noIn = Seq(lit(baseD).as("rank"), lit(base).as("r")),
+      aggs = Seq(sum(col("rank") * col("w")).as("m"), sum(expr("r div deg")).as("mi")),
+      update = Seq((lit(baseD) + lit(0.85) * col("m")).as("rank"),
+        (lit(base) + expr("(85 * mi) div 100")).as("r")))
+  }
+
+  /** The superstep loop all three PageRank variants run: each round joins
+    * the edges (`src`, `dst` plus `edgeCols`) to the current ranks on
+    * `src`, folds `aggs` per `dst`, applies `update`, and appends the
+    * constant `noIn` ranks of the nodes without in-edges. Ranks start at
+    * `init`. A variant passes only these columns; its arithmetic lives in
+    * them.
+    *
+    * Generations are persisted LAZILY and materialized only at each
+    * lineage-truncation point (every 5 rounds and the last): every
+    * generation caches as it is first computed, so each is computed once
+    * however many later rounds read it. It does not save jobs — under
+    * adaptive execution each superstep still runs its own (16 jobs for 5
+    * supersteps). */
+  private def supersteps(g: PreparedGraph, iters: Int, edgeCols: Seq[Column],
+      init: Seq[Column], noIn: Seq[Column], aggs: Seq[Column],
+      update: Seq[Column]): DataFrame = {
+    val edges = g.edgesDeg.select(col("src") +: col("dst") +: edgeCols: _*)
+    val noInRanks = g.noInIds.select(col("id") +: noIn: _*)
+    var ranks = g.nodes.select(col("id") +: init: _*).persist()
     val window = scala.collection.mutable.ArrayBuffer[DataFrame](ranks)
     for (i <- 1 to iters) {
-      val contribs = edgesW
+      val next = edges
         .join(ranks.withColumnRenamed("id", "src"), "src")
         .groupBy(col("dst").as("id"))
-        .agg(sum(col("rank") * col("w")).as("m"),
-             sum(expr("r div deg")).as("mi"))
-      val next = contribs
-        .select(col("id"),
-          (lit(baseD) + lit(0.85) * col("m")).as("rank"),
-          (lit(base) + expr("(85 * mi) div 100")).as("r"))
-        .union(noIn)
+        .agg(aggs.head, aggs.tail: _*)
+        .select(col("id") +: update: _*)
+        .union(noInRanks)
       ranks =
         if (i % 5 == 0 || i == iters) {
+          // eager checkpoint runs the window's chain; afterwards the
+          // intermediate generations are dead — drop their cache entries
           val m = next.localCheckpoint(true)
           window.foreach(_.unpersist(false))
           window.clear()

@@ -46,11 +46,15 @@ final case class IndexSpec(name: String, table: String, schema: String,
 
 object IndexSpec {
 
-  /** 32 = the local executor-thread count: the bucket count caps the
-    * candidate-join parallelism of every serve-path query (the sf1
-    * census measured the 16-bucket shingle join SLOWER than inline for
-    * exactly this reason), so it must be >= the cores the join runs on.
-    * At 100 TB: thousands, sized to the cluster. */
+  /** 32 = the executor-thread count of the 32-core host the layouts were
+    * tuned on: the bucket count caps the candidate-join parallelism of
+    * every serve-path query (the sf1 census measured the 16-bucket
+    * shingle join SLOWER than inline for exactly this reason), so it must
+    * be >= the cores the join runs on. At 100 TB: thousands, sized to the
+    * cluster. On a smaller session the count does not shrink: a cached
+    * copy of a served table keeps all 32 partitions, one task each per
+    * stage, so iterative consumers that cache a copy size it to the
+    * session instead (`Iterative.prepareGraphDegreed`). */
   final val Buckets = 32
 
   /** Every persisted index — the single source of `SparkEntry.indexes`

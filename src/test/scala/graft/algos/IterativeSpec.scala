@@ -140,4 +140,18 @@ class IterativeSpec extends SparkSuite {
         s"node $id: fused double $d vs separate ${sepD(id)}")
     }
   }
+
+  test("served trade graph: cached edges sized to the session, exact ranks match the inline build") {
+    val g = Iterative.prepareGraphDegreed(Iterative.tradeEdges.fresh(spark, sfDir))
+    val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    // the served table is bucketed 32 ways; the loop's cached copy must not be
+    val cached = g.edgesDeg.rdd.getNumPartitions
+    assert(cached <= parts, s"cached edge set has $cached partitions for $parts shuffle partitions")
+    val got = Iterative.pageRankExactOn(g, iters = 5)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    g.unpersist()
+    val want = Iterative.pageRankExact(Iterative.tradeEdgesBuild(spark, sfDir), iters = 5)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(got.nonEmpty && got == want)
+  }
 }
