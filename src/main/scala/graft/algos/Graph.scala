@@ -151,7 +151,7 @@ object Graph {
           .filter(col("id") % 10 === 0)
           .select(col("id"), lit(0L).as("hop"))
           .persist()
-        // Each generation is persisted LAZILY (the pageRankOn pattern):
+        // Each generation is persisted LAZILY:
         // superstep h references dist(h-1) TWICE (union side + frontier
         // join side), so an unpersisted chain re-evaluates every earlier
         // generation 2× per round — 2^k duplicated subtrees by round k

@@ -3,30 +3,37 @@ package graft.algos
 import graft.{QueryDef, Tables}
 import graft.functions.DotProductD.dotD
 import graft.sources.IndexSpec
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import scala.collection.mutable
+import scala.reflect.ClassTag
 
 /** Iterative / linear-algebra workloads from the reference example suite
   * (ex/pagerank.c, ex/kmeans-kmr.c, ex/phoenix-matrix-multiply.c),
-  * re-expressed as DataFrame iteration with explicit persist/unpersist
-  * and periodic lineage truncation — the Spark idiom for KMR's
-  * loop-of-map-reduce jobs.
+  * re-expressed as Spark iteration with explicit persist/unpersist and
+  * periodic lineage truncation — the Spark idiom for KMR's
+  * loop-of-map-reduce jobs. PageRank runs on co-partitioned RDDs,
+  * k-means on DataFrames.
   */
 object Iterative {
 
-  /** The shared, persisted intermediates both PageRank variants consume:
-    * node set (with its count), degree-annotated edges, and the static
-    * no-in-edge node ids. Building this once and feeding it to both the
-    * double and fixed-point pipelines means the (possibly expensive)
-    * caller edge plan — a join + distinct in the gate — is evaluated
-    * exactly once per session instead of once per variant. */
-  final case class PreparedGraph(nodes: DataFrame, n: Long,
-      edgesDeg: DataFrame, noInIds: DataFrame,
-      shared: Seq[DataFrame] = Nil) {
-    def unpersist(): Unit = {
-      nodes.unpersist(false); edgesDeg.unpersist(false); noInIds.unpersist(false)
-      shared.foreach(_.unpersist(false))
-    }
+  /** One partition's edges as three primitive columns: 24 bytes an edge
+    * in the block cache, where boxed `(src, (dst, deg))` tuples would
+    * cost five objects an edge. */
+  final case class EdgeBlock(src: Array[Long], dst: Array[Long], deg: Array[Long])
+
+  /** The persisted graph every PageRank variant consumes. `edges` holds
+    * one [[EdgeBlock]] per partition, hash-partitioned by `src`; `marks`
+    * maps every node id to whether it has an in-edge, under the same
+    * partitioner; `n` counts the nodes. Both RDDs are cached and filled
+    * by the one job that counts `n`, so the (possibly expensive) caller
+    * edge plan is evaluated once however many variants run over it. */
+  final case class PreparedGraph(spark: SparkSession, n: Long,
+      edges: RDD[EdgeBlock], marks: RDD[(Long, Boolean)]) {
+    def unpersist(): Unit = { edges.unpersist(false); marks.unpersist(false) }
   }
 
   /** Trade-graph edge build (customer → supplier via orders⋈lineitem,
@@ -61,8 +68,8 @@ object Iterative {
 
   /** [[tradeEdgesBuild]] with the out-degree annotated at build time —
     * the degree is a pure function of the edge set, so persisting it in
-    * the table removes prepareGraph's per-gate degree groupBy+join over
-    * the full edge set. Locally this is inside noise (the sf0.1 floor is
+    * the table removes prepareGraph's per-gate degree count over the
+    * full edge set. Locally this is inside noise (the sf0.1 floor is
     * the superstep loop and job-scheduling overhead, measured unchanged
     * at ~4.6 s); the point is the 100 TB shape — one less full-edge-set
     * shuffle per consumer, paid once at index build instead. */
@@ -81,91 +88,67 @@ object Iterative {
     * warehouse. The fingerprint covers both source tables. Unlike the
     * O(2000) coPairs set, this table is SF-proportional, so it is NOT
     * localCheckpoint'ed into the block cache at build. The PageRank loop
-    * still caches a copy per call ([[prepareGraphDegreed]]), coalesced
-    * to the session's parallelism and so no longer bucketed: at sf0.01
-    * its join broadcasts `ranks`, so the hash layout buys it nothing. At
-    * sf0.1 the planner, estimating a lazily persisted generation at
-    * ~1 TB, plans a sort-merge join that then shuffles the coalesced
-    * edges in supersteps 2-5 (4 more jobs per call, still faster). */
+    * does not read the bucketed layout: [[prepareGraphDegreed]]
+    * hash-partitions the edges by `src` once per call, at the session's
+    * parallelism, and caches them as primitive blocks. */
   private[graft] val tradeEdges: IndexSpec = IndexSpec("tradeedges", "tradeedges",
     "src BIGINT, dst BIGINT, deg BIGINT", "src", IndexSpec.Buckets,
     "lineitem, orders", tradeEdgesFp, tradeEdgesDegBuild)
 
-  /** Materialize the shared PageRank intermediates from a raw (src, dst)
-    * edge frame. Every member is persisted and eagerly computed; call
-    * [[PreparedGraph.unpersist]] once all consumers have materialized
-    * their results (both variants end on an eager localCheckpoint, so
-    * their outputs outlive the cache). */
-  def prepareGraph(edges: DataFrame): PreparedGraph = {
-    // The caller's edge plan may be arbitrarily expensive and is
-    // referenced three times below (nodes union ×1, edgesDeg ×2) —
-    // persist it so the upstream build runs exactly once.
-    val e = edges.persist()
-    val nodes = e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id"))).distinct().persist()
-    val n = nodes.count()
-    // Degree-annotated edges computed ONCE and persisted — each loop
-    // body touches only (edgesDeg ⋈ ranks), never the raw edge build.
-    val edgesDeg = e
-      .join(e.groupBy(col("src")).agg(count(lit(1)).as("deg")), "src")
-      .select(col("src"), col("dst"), col("deg"))
-      .persist()
-    edgesDeg.count()
-    e.unpersist(false)
-    // Nodes with no in-edges keep a constant rank forever — that set is
-    // static, so it is computed ONCE and each variant unions its own
-    // constant over these ids instead of re-deriving it with a
-    // per-superstep left-outer join against the full node set.
-    val noInIds = nodes
-      .join(edgesDeg.select(col("dst").as("id")).distinct(), Seq("id"), "left_anti")
-      .select(col("id"))
-      .persist()
-    noInIds.count()
-    PreparedGraph(nodes, n, edgesDeg, noInIds)
-  }
+  /** [[prepareGraphDegreed]] over a raw (src, dst) edge frame: each edge
+    * is first annotated with its source's out-degree. */
+  def prepareGraph(edges: DataFrame): PreparedGraph =
+    prepareGraphDegreed(edges.withColumn("deg", count(lit(1)).over(Window.partitionBy("src"))))
 
-  /** [[prepareGraph]] over an edge frame that ALREADY carries the
-    * out-degree (the persisted trade-edge table) — skips the per-gate
-    * degree groupBy+join over the full edge set; node set and no-in ids
-    * are still derived here (cheap distincts). */
-  def prepareGraphDegreed(edgesDeg0: DataFrame): PreparedGraph = {
-    // At most one partition per shuffle partition (the session's core
-    // count, see Sessions.build). The cache keeps a served table's
-    // bucketed layout, so without the coalesce every superstep's map
-    // stage would run one task per bucket (32) on any core count.
-    val parts = edgesDeg0.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    val edgesDeg = edgesDeg0.select(col("src"), col("dst"), col("deg"))
-      .coalesce(parts).persist()
-    edgesDeg.count()
-    // Node set AND the no-in-edge subset from ONE explode+aggregate pass
-    // over the cached edges (r16 optimization round): the previous form
-    // ran a union+distinct for nodes, a second dst-distinct, and an
-    // anti-join for noInIds — two extra full-edge passes and three
-    // driver-synchronized counts for the same two sets. `hasIn` is a
-    // max() over endpoint markers, so noInIds = marks where hasIn = 0
-    // is exactly "appears only as src" — the set the anti-join computed.
-    // Both views read the one persisted `marks` cache (materialized by
-    // the count below, BEFORE the supersteps read it through their union
-    // branches — the eager-priming discipline the rejected count-trim
-    // experiment in OPTIMIZATION_r16.md validated).
-    val marks = edgesDeg.select(explode(array(
-        struct(col("src").as("id"), lit(0).as("t")),
-        struct(col("dst").as("id"), lit(1).as("t")))).as("m"))
-      .groupBy(col("m.id").as("id"))
-      .agg(max(col("m.t")).as("hasIn"))
+  /** Build and cache the [[PreparedGraph]] of an edge frame that carries
+    * the out-degree (`src`, `dst`, `deg`, as the persisted trade-edge
+    * table does). One Spark job: the edges are hash-partitioned by `src`
+    * into `spark.sql.shuffle.partitions` blocks, and the node marks are
+    * folded from those blocks under the same partitioner. Call
+    * [[PreparedGraph.unpersist]] once every consumer has materialized
+    * its result (each variant ends on an eager localCheckpoint, so its
+    * output outlives the cache). */
+  def prepareGraphDegreed(edgesDeg: DataFrame): PreparedGraph = {
+    val spark = edgesDeg.sparkSession
+    val byId = new HashPartitioner(spark.conf.get("spark.sql.shuffle.partitions").toInt)
+    // The coalesce keeps the partitioning's map side at the session's
+    // parallelism: a served table scans one task per bucket (32).
+    val edges = edgesDeg.select(col("src"), col("dst"), col("deg"))
+      .coalesce(byId.numPartitions).queryExecution.toRdd
+      // internal rows, not Rows: no per-edge conversion; the longs are
+      // read before the scan reuses the row
+      .map(r => (r.getLong(0), (r.getLong(1), r.getLong(2))))
+      .partitionBy(byId)
+      .mapPartitions({ it =>
+        val (src, dst, deg) = (mutable.ArrayBuilder.make[Long],
+          mutable.ArrayBuilder.make[Long], mutable.ArrayBuilder.make[Long])
+        it.foreach { case (s, (d, k)) => src += s; dst += d; deg += k }
+        Iterator.single(EdgeBlock(src.result(), dst.result(), deg.result()))
+      }, preservesPartitioning = true)
       .persist()
-    val n = marks.count()
-    val nodes = marks.select(col("id"))
-    val noInIds = marks.filter(col("hasIn") === 0).select(col("id"))
-    PreparedGraph(nodes, n, edgesDeg, noInIds, shared = Seq(marks))
+    // The count fills both caches before any superstep reads them (the
+    // eager priming OPTIMIZATION_r16.md validated): the supersteps' union
+    // branches read `marks` every round.
+    val marks = edges
+      .mapPartitions { blocks =>
+        // distinct per partition first: the shuffle's map side then sees
+        // one record per node, not two boxed records per edge
+        val hasIn = mutable.LongMap.empty[Boolean]
+        blocks.foreach { b =>
+          b.src.foreach(hasIn.getOrElseUpdate(_, false))
+          b.dst.foreach(hasIn(_) = true)
+        }
+        hasIn.iterator
+      }
+      .reduceByKey(byId, _ || _)
+      .persist()
+    PreparedGraph(spark, marks.count(), edges, marks)
   }
 
   /** PageRank (ex/pagerank.c, damping 0.85): rank mass flows along edges
-    * each superstep; per-iteration cost is one join + one aggregation,
-    * both shuffled on node id. Ranks are persisted per iteration and the
-    * previous generation unpersisted; lineage is truncated every few
-    * rounds so the plan stays O(1) deep regardless of iteration count
-    * (the 100-iteration-on-100TB safety property).
+    * each superstep; see [[supersteps]] for the per-round plan. Lineage
+    * is truncated every few rounds so the plan stays O(1) deep regardless
+    * of iteration count (the 100-iteration-on-100TB safety property).
     * Simplified variant: dangling-node mass is not redistributed
     * (matches the reference's per-edge formulation). */
   def pageRank(edges: DataFrame, iters: Int, damping: Double = 0.85): DataFrame = {
@@ -175,33 +158,31 @@ object Iterative {
     out
   }
 
-  /** [[pageRank]] over pre-built shared intermediates — the gate path:
-    * one [[prepareGraph]] feeds this AND [[pageRankExactOn]]. */
+  /** [[pageRank]] over a prepared graph: columns (id, rank). */
   def pageRankOn(g: PreparedGraph, iters: Int, damping: Double = 0.85): DataFrame = {
+    import g.spark.implicits._
     val n = g.n.toDouble
-    // Contribution is rank * (1.0/deg); the weight is a narrow
-    // projection over the persisted edgesDeg.
-    supersteps(g, iters,
-      edgeCols = Seq((lit(1.0) / col("deg")).as("w")),
-      init = Seq(lit(1.0 / n).as("rank")),
-      noIn = Seq(lit((1 - damping) / n).as("rank")),
-      aggs = Seq(sum(col("rank") * col("w")).as("m")),
-      update = Seq((lit((1 - damping) / n) + lit(damping) * col("m")).as("rank")))
+    val base = (1 - damping) / n
+    supersteps[Double](g, iters, init = 1.0 / n, noIn = base,
+      contrib = (r, deg) => r * (1.0 / deg), plus = _ + _,
+      update = m => base + damping * m)
+      .toDF("id", "rank")
   }
 
-  /** Fixed-point PageRank: the same superstep structure as [[pageRank]]
-    * but every rank is a BIGINT at scale 10^15 ("femto-rank"), per-edge
-    * contributions are `r div deg`, and the damping update is
-    * `base + (85*m) div 100` — integer sums are order-independent and
-    * Spark's `div` agrees with DuckDB's `//` on non-negative operands,
-    * so unlike the float variant this one is bit-reproducible across
-    * engines and gets a full hash oracle (the unrolled-CTE replay,
-    * [[pagerankOracleSql]] — the k-means oracle technique). The 10^15
-    * scale keeps `init = SCALE div n` nonzero up to 10^15 nodes while
-    * bounding every intermediate (85 * total mass ≈ 8.5e16) far inside
-    * BIGINT. Rounding bias: each div discards <1 femto of mass, so
-    * ranks drift low by at most iters*(deg+1) femtos — deterministic,
-    * identical on both engines, and irrelevant at ppm precision. */
+  /** Fixed-point PageRank: the same supersteps as [[pageRank]] but every
+    * rank is a BIGINT at scale 10^15 ("femto-rank"), per-edge
+    * contributions are `r / deg` and the damping update is
+    * `base + (85*m) / 100`, in Long arithmetic — integer sums are
+    * order-independent, and Long division agrees with Spark's `div` and
+    * DuckDB's `//` on non-negative operands, so unlike the float variant
+    * this one is bit-reproducible across engines and gets a full hash
+    * oracle (the unrolled-CTE replay, [[pagerankOracleSql]] — the k-means
+    * oracle technique). The 10^15 scale keeps `init = SCALE / n` nonzero
+    * up to 10^15 nodes while bounding every intermediate (85 * total mass
+    * ≈ 8.5e16) far inside BIGINT. Rounding bias: each division discards
+    * <1 femto of mass, so ranks drift low by at most iters*(deg+1)
+    * femtos — deterministic, identical on both engines, and irrelevant at
+    * ppm precision. */
   def pageRankExact(edges: DataFrame, iters: Int): DataFrame = {
     val g = prepareGraph(edges)
     val out = pageRankExactOn(g, iters)
@@ -212,78 +193,76 @@ object Iterative {
   /** Femto-rank scale of [[pageRankExact]] and [[pageRankBothOn]]. */
   private final val Scale = 1000000000000000L
 
-  /** [[pageRankExact]] over pre-built shared intermediates. */
+  /** [[pageRankExact]] over a prepared graph: columns (id, r). */
   def pageRankExactOn(g: PreparedGraph, iters: Int): DataFrame = {
+    import g.spark.implicits._
     val base = (15L * Scale) / (100L * g.n)
-    supersteps(g, iters,
-      edgeCols = Seq(col("deg")),
-      init = Seq(lit(Scale / g.n).as("r")),
-      noIn = Seq(lit(base).as("r")),
-      aggs = Seq(sum(expr("r div deg")).as("m")),
-      update = Seq((lit(base) + expr("(85 * m) div 100")).as("r")))
+    supersteps[Long](g, iters, init = Scale / g.n, noIn = base,
+      contrib = _ / _, plus = _ + _, update = m => base + (85 * m) / 100)
+      .toDF("id", "r")
   }
 
   /** Fused twin-arithmetic PageRank: carries the double rank AND the
-    * femto-fixed-point rank through ONE join + ONE aggregation per
+    * femto-fixed-point rank through ONE kernel + ONE reduce per
     * superstep (late round 9 — previously the `pagerank` gate ran
     * [[pageRankOn]] and [[pageRankExactOn]] as two full pipelines over
     * the shared graph, doubling every superstep's shuffle). The two
-    * arithmetics stay independent per-term — `sum(rank*w)` and
-    * `sum(r div deg)` fold side by side in the same hash aggregate — so
-    * the 1e-9 float-vs-fixed-point certificate is as meaningful as
-    * before: it compares the arithmetic, not the execution. Damping is
-    * fixed at 0.85 to match the integer path's `(85*m) div 100`.
-    * IterativeSpec pins fused == separate on both columns. */
+    * arithmetics stay independent per term — each rank is a pair whose
+    * halves are contributed, summed and updated side by side — so the
+    * 1e-9 float-vs-fixed-point certificate is as meaningful as before: it
+    * compares the arithmetic, not the execution. Damping is fixed at 0.85
+    * to match the integer path's `(85*m) / 100`. IterativeSpec pins
+    * fused == separate on both columns. Columns (id, rank, r). */
   def pageRankBothOn(g: PreparedGraph, iters: Int): DataFrame = {
+    import g.spark.implicits._
     val nD = g.n.toDouble
     val base = (15L * Scale) / (100L * g.n)
     val baseD = 0.15 / nD
-    supersteps(g, iters,
-      edgeCols = Seq(col("deg"), (lit(1.0) / col("deg")).as("w")),
-      init = Seq(lit(1.0 / nD).as("rank"), lit(Scale / g.n).as("r")),
-      noIn = Seq(lit(baseD).as("rank"), lit(base).as("r")),
-      aggs = Seq(sum(col("rank") * col("w")).as("m"), sum(expr("r div deg")).as("mi")),
-      update = Seq((lit(baseD) + lit(0.85) * col("m")).as("rank"),
-        (lit(base) + expr("(85 * mi) div 100")).as("r")))
+    supersteps[(Double, Long)](g, iters, init = (1.0 / nD, Scale / g.n), noIn = (baseD, base),
+      contrib = { case ((d, l), deg) => (d * (1.0 / deg), l / deg) },
+      plus = { case ((d1, l1), (d2, l2)) => (d1 + d2, l1 + l2) },
+      update = { case (m, mi) => (baseD + 0.85 * m, base + (85 * mi) / 100) })
+      .map { case (id, (rank, r)) => (id, rank, r) }
+      .toDF("id", "rank", "r")
   }
 
-  /** The superstep loop all three PageRank variants run: each round joins
-    * the edges (`src`, `dst` plus `edgeCols`) to the current ranks on
-    * `src`, folds `aggs` per `dst`, applies `update`, and appends the
-    * constant `noIn` ranks of the nodes without in-edges. Ranks start at
-    * `init`. A variant passes only these columns; its arithmetic lives in
-    * them.
+  /** The superstep loop all three PageRank variants run (KMR's map →
+    * shuffle → reduce): each round zips edge partition p with rank
+    * partition p — both hash-partitioned by node id, so this is the
+    * src join without a shuffle — and folds `contrib(rank(src), deg)`
+    * per `dst` in the partition; `reduceByKey` sums those partial sums
+    * back into the node partitioner, `update` damps them, and the
+    * constant `noIn` ranks of the nodes without in-edges are unioned on
+    * (a union of two RDDs under one partitioner keeps it). Ranks start
+    * at `init`. A variant passes only its arithmetic.
     *
-    * Generations are persisted LAZILY and materialized only at each
-    * lineage-truncation point (every 5 rounds and the last): every
-    * generation caches as it is first computed, so each is computed once
-    * however many later rounds read it. It does not save jobs — under
-    * adaptive execution each superstep still runs its own (16 jobs for 5
-    * supersteps). */
-  private def supersteps(g: PreparedGraph, iters: Int, edgeCols: Seq[Column],
-      init: Seq[Column], noIn: Seq[Column], aggs: Seq[Column],
-      update: Seq[Column]): DataFrame = {
-    val edges = g.edgesDeg.select(col("src") +: col("dst") +: edgeCols: _*)
-    val noInRanks = g.noInIds.select(col("id") +: noIn: _*)
-    var ranks = g.nodes.select(col("id") +: init: _*).persist()
-    val window = scala.collection.mutable.ArrayBuffer[DataFrame](ranks)
+    * Each generation is read exactly once, by the next round, so nothing
+    * is persisted between truncation points: the localCheckpoint + count
+    * every 5 rounds and on the last is the loop's only job. */
+  private def supersteps[R: ClassTag](g: PreparedGraph, iters: Int, init: R, noIn: R,
+      contrib: (R, Long) => R, plus: (R, R) => R, update: R => R): RDD[(Long, R)] = {
+    val byId = g.edges.partitioner.get
+    val noInRanks = g.marks.filter(!_._2).mapValues(_ => noIn)
+    var ranks = g.marks.mapValues(_ => init)
     for (i <- 1 to iters) {
-      val next = edges
-        .join(ranks.withColumnRenamed("id", "src"), "src")
-        .groupBy(col("dst").as("id"))
-        .agg(aggs.head, aggs.tail: _*)
-        .select(col("id") +: update: _*)
-        .union(noInRanks)
-      ranks =
-        if (i % 5 == 0 || i == iters) {
-          // eager checkpoint runs the window's chain; afterwards the
-          // intermediate generations are dead — drop their cache entries
-          val m = next.localCheckpoint(true)
-          window.foreach(_.unpersist(false))
-          window.clear()
-          window += m
-          m
-        } else { val p = next.persist(); window += p; p }
+      require(ranks.partitioner.contains(byId),
+        s"ranks partitioned by ${ranks.partitioner}, edges by $byId: the zip would misalign")
+      val sums = g.edges.zipPartitions(ranks) { (blocks, rs) =>
+        val rank = mutable.LongMap.from(rs)
+        val acc = mutable.LongMap.empty[R]
+        blocks.foreach { b =>
+          var j = 0
+          while (j < b.src.length) {
+            val c = contrib(rank(b.src(j)), b.deg(j))
+            acc.update(b.dst(j), acc.get(b.dst(j)).fold(c)(plus(_, c)))
+            j += 1
+          }
+        }
+        acc.iterator
+      }
+      val next = sums.reduceByKey(byId, plus).mapValues(update).union(noInRanks)
+      if (i % 5 == 0 || i == iters) { next.localCheckpoint(); next.count() }
+      ranks = next
     }
     ranks
   }
@@ -475,8 +454,8 @@ object Iterative {
     QueryDef("pagerank", (s, d) => {
       // Edge set (WITH out-degrees) served from the durable bucketed
       // table (built once per corpus — see tradeEdges).
-      // Both arithmetics ride ONE fused pipeline (one join + one agg per
-      // superstep, late round 9 — the certificate compares the
+      // Both arithmetics ride ONE fused pipeline (one kernel + one reduce
+      // per superstep, late round 9 — the certificate compares the
       // arithmetic, not two executions); the run ends on an eager
       // localCheckpoint, so the shared graph cache can be dropped before
       // the certificate aggregate is materialized.

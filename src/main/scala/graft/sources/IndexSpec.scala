@@ -51,10 +51,11 @@ object IndexSpec {
     * every serve-path query (the sf1 census measured the 16-bucket
     * shingle join SLOWER than inline for exactly this reason), so it must
     * be >= the cores the join runs on. At 100 TB: thousands, sized to the
-    * cluster. On a smaller session the count does not shrink: a cached
-    * copy of a served table keeps all 32 partitions, one task each per
-    * stage, so iterative consumers that cache a copy size it to the
-    * session instead (`Iterative.prepareGraphDegreed`). */
+    * cluster. On a smaller session the count does not shrink: a scan of
+    * a served table runs one task per bucket, so an iterative consumer
+    * re-partitions the table at the session's parallelism instead
+    * (`Iterative.prepareGraphDegreed` hash-partitions the trade edges by
+    * `src`). */
   final val Buckets = 32
 
   /** Every persisted index — the single source of `SparkEntry.indexes`

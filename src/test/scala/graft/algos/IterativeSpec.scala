@@ -145,7 +145,7 @@ class IterativeSpec extends SparkSuite {
     val g = Iterative.prepareGraphDegreed(Iterative.tradeEdges.fresh(spark, sfDir))
     val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
     // the served table is bucketed 32 ways; the loop's cached copy must not be
-    val cached = g.edgesDeg.rdd.getNumPartitions
+    val cached = g.edges.getNumPartitions
     assert(cached <= parts, s"cached edge set has $cached partitions for $parts shuffle partitions")
     val got = Iterative.pageRankExactOn(g, iters = 5)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -153,5 +153,49 @@ class IterativeSpec extends SparkSuite {
     val want = Iterative.pageRankExact(Iterative.tradeEdgesBuild(spark, sfDir), iters = 5)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got.nonEmpty && got == want)
+  }
+
+  test("served trade graph: one preparation job, then one superstep job plus the collect") {
+    import java.util.concurrent.atomic.AtomicInteger
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val served = Iterative.tradeEdges.fresh(spark, sfDir)
+    val jobs = scala.collection.concurrent.TrieMap.empty[String, AtomicInteger]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(g => jobs.getOrElseUpdate(g, new AtomicInteger).incrementAndGet())
+    }
+    def jobsIn[T](group: String)(body: => T): (T, Int) = {
+      sc.setJobGroup(group, group)
+      val out = try body finally sc.clearJobGroup()
+      org.apache.spark.ListenerBusDrain(sc)
+      (out, jobs.get(group).fold(0)(_.get))
+    }
+    sc.addSparkListener(listener)
+    try {
+      val (g, prep) = jobsIn("pagerank-prepare")(Iterative.prepareGraphDegreed(served))
+      val (rows, loop) = jobsIn("pagerank-supersteps")(Iterative.pageRankExactOn(g, iters = 5).collect())
+      g.unpersist()
+      assert(rows.length.toLong == g.n)
+      assert(prep <= 1, s"preparation ran $prep jobs")
+      assert(loop <= 2, s"5 supersteps and the collect ran $loop jobs")
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("exact ranks do not depend on the shuffle partition count") {
+    def ranks(parts: Option[Int]): Map[Long, Long] = {
+      val s = spark.newSession()
+      parts.foreach(p => s.conf.set("spark.sql.shuffle.partitions", p.toLong))
+      val g = Iterative.prepareGraph(Iterative.tradeEdgesBuild(s, sfDir))
+      assert(g.edges.getNumPartitions == s.conf.get("spark.sql.shuffle.partitions").toInt)
+      val out = Iterative.pageRankExactOn(g, iters = 5)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      g.unpersist()
+      out
+    }
+    val want = ranks(None)
+    assert(want.nonEmpty)
+    Seq(1, 3).foreach(p => assert(ranks(Some(p)) == want, s"$p shuffle partitions"))
   }
 }
