@@ -1,6 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
-import java.nio.file.{Files, Paths}
+import com.fasterxml.jackson.databind.JsonNode
+import com.fasterxml.jackson.databind.node.ObjectNode
+import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
 
 /** Benchmark main: runs every SparkEntry query at SPARK_GRAFT_SF_DIR and
   * prints ONE parseable JSON line (also written to bench_last.json so sbt
@@ -48,15 +50,15 @@ object Bench {
         committed.get(name).exists(c => v > ratio * c) => name
     }.sorted
 
-  /** Per-query committed mins from a bench_detail.json written by this
-    * same object (tiny parser, zero deps; None when absent/unreadable or
-    * recorded at a different SF — ratios across SFs are meaningless). */
-  def committedMins(path: java.nio.file.Path, sf: String): Option[Map[String, Double]] =
+  /** Per-query committed mins from a bench_detail.json (None when absent,
+    * unparseable or recorded at a different SF — ratios across SFs are
+    * meaningless). */
+  def committedMins(path: Path, sf: String): Option[Map[String, Double]] =
     committedField(path, sf, "min")
 
   /** Per-query committed shuffle-read MB (for [[byteSuspects]]); None
     * when the detail predates stage tracing or is for another SF. */
-  def committedShuffleMb(path: java.nio.file.Path, sf: String): Option[Map[String, Double]] =
+  def committedShuffleMb(path: Path, sf: String): Option[Map[String, Double]] =
     committedField(path, sf, "sh_read_mb")
 
   /** Per-query committed shuffle-WRITE MB (round-12 verdict item 7): a
@@ -64,119 +66,96 @@ object Bench {
     * shows on the map output BEFORE the read side of a later stage in a
     * multi-stage plan, and a regression in the FINAL stage's write is
     * invisible to the read metric entirely. */
-  def committedShuffleWriteMb(path: java.nio.file.Path, sf: String): Option[Map[String, Double]] =
+  def committedShuffleWriteMb(path: Path, sf: String): Option[Map[String, Double]] =
     committedField(path, sf, "sh_write_mb")
 
   /** Per-query committed spill MB. The census's committed spill is zero
     * everywhere, so [[byteSuspects]]'s `v > ratio · 0` arm flags ANY
     * new spill past the floor — exactly the alarm wanted: spill is a
     * memory-pressure plan failure, not noise. */
-  def committedSpillMb(path: java.nio.file.Path, sf: String): Option[Map[String, Double]] =
+  def committedSpillMb(path: Path, sf: String): Option[Map[String, Double]] =
     committedField(path, sf, "spill_mb")
 
-  /** Index of the '}' matching the '{' at `open` (string-aware: braces
-    * inside quoted values don't count; backslash escapes honored). -1
-    * when unbalanced. */
-  private def matchBrace(txt: String, open: Int): Int = {
-    var i = open; var depth = 0; var inStr = false
-    while (i < txt.length) {
-      val c = txt.charAt(i)
-      if (inStr) {
-        if (c == '\\') i += 1
-        else if (c == '"') inStr = false
-      } else c match {
-        case '"' => inStr = true
-        case '{' => depth += 1
-        case '}' => depth -= 1; if (depth == 0) return i
-        case _ =>
-      }
-      i += 1
-    }
-    -1
+  private def committedField(path: Path, sf: String,
+      field: String): Option[Map[String, Double]] =
+    Some(fieldOf(committedBodies(path, sf), field)).filter(_.nonEmpty)
+
+  /** A numeric field read at the TOP level of each entry only, so a
+    * nested sub-object's min/med/spill_mb is never attributed to the
+    * enclosing query. */
+  private def fieldOf(bodies: Map[String, JsonNode],
+      field: String): Map[String, Double] =
+    bodies.collect { case (k, b) if b.path(field).isNumber => k -> b.path(field).asDouble }
+
+  /** A detail file as a tree; None when absent or unparseable. */
+  private def readDetail(path: Path): Option[JsonNode] =
+    try Option(Json.mapper.readTree(path.toFile)).filter(_.isObject)
+    catch { case _: java.io.IOException => None }
+
+  /** Committed per-query entries, as whole trees: the entries of the
+    * top-level "queries" object of a detail recorded at `sf` (empty for
+    * another SF or a file that is absent or does not parse). They are the
+    * source of the field readers above and of the error carry-over, which
+    * keeps an errored gate's whole entry, nested objects included. */
+  private[graft] def committedBodies(path: Path, sf: String): Map[String, JsonNode] =
+    readDetail(path).filter(_.path("sf").asText == sf).map(
+      _.path("queries").properties.asScala.collect {
+        case e if e.getValue.isObject => e.getKey -> e.getValue }.toMap)
+      .getOrElse(Map.empty)
+
+  /** Where a full census writes its detail. The canonical file is
+    * rewritten in place only when it parses and holds the same SF. One
+    * that exists but does not parse is never overwritten: it may be a
+    * hand-edited baseline, and a rewrite would lose every committed min
+    * in one step. When it is missing, only the baseline SF (sf0.1, the
+    * driver's bench SF — BASELINE.md) may create it: a lost canonical
+    * plus one census at another SF would otherwise take the file over
+    * and divert every later baseline run. Everything else goes to
+    * bench_detail_<sf>.json beside it. */
+  private[graft] def detailTarget(canonical: Path, sfName: String): Path = {
+    val inPlace =
+      if (Files.exists(canonical)) readDetail(canonical).exists(_.path("sf").asText == sfName)
+      else sfName == "sf0.1"
+    if (inPlace) canonical else canonical.resolveSibling(s"bench_detail_$sfName.json")
   }
 
-  /** Raw committed per-query object bodies — for carrying a still-live
-    * gate's whole entry through a window in which it errored, and the
-    * body source for [[committedField]]. Hardened (r16, ADVICE r15):
-    * the parse is SCOPED to the top-level "queries" object and each
-    * entry's body is captured by brace matching, so (a) a body that
-    * gains a nested object (a future structured trace field) still
-    * round-trips instead of silently vanishing from the carry, and
-    * (b) `index_trace` sub-objects can never collide with gate names.
-    * A structural surprise (e.g. a hand-edit this repair-oriented file
-    * format explicitly invites — the merge tool's docs say to
-    * hand-delete retired gates' rows) falls back to the r15 flat
-    * regex over the scoped region, so one mangled entry degrades to
-    * "flat-parse the well-formed entries" instead of silently
-    * discarding the ENTIRE committed baseline — which the same run
-    * would then overwrite, losing every ratchet min in one step. */
-  private[graft] def committedBodies(path: java.nio.file.Path,
-      sf: String): Map[String, String] =
-    try {
-      val txt = Files.readString(path)
-      val sfRe = "\"sf\"\\s*:\\s*\"([^\"]+)\"".r
-      if (!sfRe.findFirstMatchIn(txt).exists(_.group(1) == sf)) Map.empty
-      else {
-        val qKey = txt.indexOf("\"queries\"")
-        val open = if (qKey < 0) -1 else txt.indexOf('{', qKey)
-        val close = if (open < 0) -1 else matchBrace(txt, open)
-        if (close < 0) Map.empty
-        else {
-          // scan the queries object's TOP-LEVEL entries: "name":{...}
-          val out = scala.collection.mutable.Map.empty[String, String]
-          var i = open + 1
-          var ok = true
-          while (ok && i < close) {
-            val c = txt.charAt(i)
-            if (c == ',' || c.isWhitespace) i += 1
-            else if (c == '"') {
-              val kEnd = txt.indexOf('"', i + 1)
-              val colon = if (kEnd < 0) -1 else txt.indexOf(':', kEnd + 1)
-              val bOpen = if (colon < 0) -1 else txt.indexOf('{', colon + 1)
-              val bClose = if (bOpen < 0) -1 else matchBrace(txt, bOpen)
-              if (bClose < 0 || bClose > close ||
-                  txt.substring(colon + 1, bOpen).exists(!_.isWhitespace)) ok = false
-              else {
-                out.put(txt.substring(i + 1, kEnd), txt.substring(bOpen + 1, bClose))
-                i = bClose + 1
-              }
-            } else ok = false
-          }
-          if (ok) out.toMap
-          else {
-            // graceful degradation: flat-regex the scoped region (the
-            // pre-r16 parser) — captures every well-formed FLAT entry
-            // and drops only bodies with nesting, instead of all 180
-            val objRe = "\"([A-Za-z0-9_]+)\"\\s*:\\s*\\{([^{}]*)\\}".r
-            objRe.findAllMatchIn(txt.substring(open, close + 1))
-              .map(m => m.group(1) -> m.group(2)).toMap
-          }
-        }
-      }
-    } catch { case _: Throwable => Map.empty }
-
-  /** A body with nested objects elided — so field searches can never
-    * attribute a NESTED object's min/med/spill_mb to the enclosing
-    * query (e.g. a future structured trace sub-object that happens to
-    * carry a "min" of its own). */
-  private def topLevelOf(body: String): String = {
-    val sb = new StringBuilder
-    var i = 0
-    while (i < body.length) {
-      val c = body.charAt(i)
-      if (c == '{') {
-        val close = matchBrace(body, i)
-        i = if (close < 0) body.length else close + 1
-      } else { sb.append(c); i += 1 }
-    }
-    sb.toString
+  /** A stage trace as the detail stores it, MB rounded to 2 decimals. */
+  private[graft] def traceNode(a: StageMetricsListener#Agg): ObjectNode = {
+    def mb(b: Long): Double =
+      String.format(java.util.Locale.ROOT, "%.2f", b / 1048576.0).toDouble
+    Json.mapper.createObjectNode().put("stages", a.stages).put("tasks", a.tasks)
+      .put("sh_read_mb", mb(a.shuffleReadB)).put("sh_write_mb", mb(a.shuffleWriteB))
+      .put("input_mb", mb(a.inputB)).put("spill_mb", mb(a.spillB))
   }
 
-  private[graft] def jstr(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-    } + "\""
+  /** One measured gate's entry: its (min, med) seconds rounded to 3
+    * decimals, then its stage trace when it has one. */
+  private[graft] def entryNode(min: Double, med: Double,
+      trace: Option[StageMetricsListener#Agg]): ObjectNode = {
+    val n = Json.mapper.createObjectNode()
+      .put("min", fmt(min).toDouble).put("med", fmt(med).toDouble)
+    trace.foreach(a => n.setAll[ObjectNode](traceNode(a)))
+    n
+  }
+
+  /** The bench_detail.json tree: per-query entries in name order, the
+    * per-index build seconds (rounded as [[fmt2]]) and stage traces, the
+    * runs per query and the SF. */
+  private[graft] def detailTree(queries: Map[String, JsonNode],
+      indexBuildS: Seq[(String, Double)], indexTrace: Seq[(String, JsonNode)],
+      runs: Int, sf: String): ObjectNode = {
+    val root = Json.mapper.createObjectNode()
+    val qs = root.putObject("queries")
+    queries.toSeq.sortBy(_._1).foreach { case (k, v) => qs.set[JsonNode](k, v) }
+    val builds = root.putObject("index_build_s")
+    indexBuildS.foreach { case (k, v) => builds.put(k, fmt2(v).toDouble) }
+    val traces = root.putObject("index_trace")
+    indexTrace.foreach { case (k, v) => traces.set[JsonNode](k, v) }
+    root.put("runs", runs).put("sf", sf)
+  }
+
+  private[graft] def writeDetail(path: Path, detail: JsonNode): Unit =
+    Files.writeString(path, Json.mapper.writeValueAsString(detail) + "\n")
 
   // Locale.ROOT: the f-interpolator is locale-sensitive, and a
   // comma-decimal default locale would render 0,123 — unparseable JSON.
@@ -215,13 +194,14 @@ object Bench {
       nOk: Int, runs: Int, subset: Boolean, suspectField: String,
       sfName: String, indexTotal: Double, errs: Seq[(String, String)],
       total: Double, totalMed: Double, budget: Int = 1950): String = {
+    def str(v: String): String = Json.mapper.writeValueAsString(v)
     def build(n: Int, k: Int): String = {
       val (slow, fast) = byCost.splitAt(n)
-      val errField = errs.take(k).map { case (q, e) => s"${jstr(q)}:${jstr(e)}" }
+      val errField = errs.take(k).map { case (q, e) => s"${str(q)}:${str(e)}" }
         .mkString("{", ",", "}") +
         (if (errs.size > k) s""","errors_omitted":${errs.size - k}""" else "")
       val qs = slow.sortBy(_._1)
-        .map { case (q, v, _) => s"${jstr(q)}:${fmt2(v)}" }.mkString("{", ",", "}")
+        .map { case (q, v, _) => s"${str(q)}:${fmt2(v)}" }.mkString("{", ",", "}")
       val fastFields =
         if (fast.isEmpty) ""
         else s""","fast_omitted":${fast.size},"fast_total":${fmt(fast.map(_._2).sum)},"fast_total_med":${fmt(fast.map(_._3).sum)}"""
@@ -230,7 +210,7 @@ object Bench {
       // primary field) and "total_s" as the FINAL key — stdout tail
       // capture truncates the FRONT of an over-long line, so whichever
       // end survives carries the total.
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_ok":$nOk,"runs_per_query":$runs$fastFields$subsetField$suspectField,"sf":${jstr(sfName)},"index_build_total_s":${fmt2(indexTotal)},"queries":$qs,"errors":$errField,"total_med_s":${fmt(totalMed)},"total_s":${fmt(total)}}"""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_ok":$nOk,"runs_per_query":$runs$fastFields$subsetField$suspectField,"sf":${str(sfName)},"index_build_total_s":${fmt2(indexTotal)},"queries":$qs,"errors":$errField,"total_med_s":${fmt(totalMed)},"total_s":${fmt(total)}}"""
     }
     var (n, k) = (byCost.size, math.min(errs.size, MaxErrors))
     var line = build(n, k)
@@ -242,21 +222,6 @@ object Bench {
   }
 
   private[graft] val MaxErrors = 10
-
-  private def committedField(path: java.nio.file.Path, sf: String,
-      field: String): Option[Map[String, Double]] =
-    try {
-      // Bodies from the scoped brace-matching parser above; the field
-      // is then found anywhere at the body's TOP LEVEL (ADVICE r9:
-      // requiring it first would silently disable the noise defense
-      // for a serializer emitting {"med":...,"min":...}; nested
-      // sub-objects are elided so their fields can't be mis-attributed
-      // to the enclosing query).
-      val fieldRe = ("\"" + field + "\"\\s*:\\s*([0-9.]+)").r
-      val m = committedBodies(path, sf).flatMap { case (k, b) =>
-        fieldRe.findFirstMatchIn(topLevelOf(b)).map(mm => k -> mm.group(1).toDouble) }
-      if (m.isEmpty) None else Some(m)
-    } catch { case _: Throwable => None }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -352,21 +317,20 @@ object Bench {
     // byte channels), making THIS window the new baseline cleanly.
     val rebase = sys.env.get("SPARK_GRAFT_BENCH_REBASE").contains("1")
     val sfName = Paths.get(sfDir).getFileName.toString
-    val committed =
-      if (rebase) None
-      else committedMins(Paths.get("bench_detail.json"), sfName)
-    val firstSus = committed.map(c =>
-      suspects(c, results0.collect { case (n, v, _, None) => n -> v }.toMap))
-      .getOrElse(Seq.empty).toSet
+    val canonical = Paths.get("bench_detail.json")
+    val bodies = committedBodies(canonical, sfName)
+    val baseline = if (rebase) Map.empty[String, JsonNode] else bodies
+    val committedMin = fieldOf(baseline, "min")
+    val firstSus =
+      suspects(committedMin, results0.collect { case (n, v, _, None) => n -> v }.toMap).toSet
     val results = results0.map {
       case (name, v, m, None) if firstSus(name) =>
         val extra = (1 to 2).map(_ => timeOnce(selected(name))).collect { case (t, None) => t }
         (name, (v +: extra).min, m, Option.empty[String])
       case r => r
     }
-    val stillSuspect = committed.map(c =>
-      suspects(c, results.collect { case (n, v, _, None) => n -> v }.toMap))
-      .getOrElse(Seq.empty)
+    val stillSuspect =
+      suspects(committedMin, results.collect { case (n, v, _, None) => n -> v }.toMap)
     val ok = results.filter(_._4.isEmpty)
     val errs = results.collect { case (k, _, _, Some(e)) => (k, e.take(80)) } ++
       indexBuilds.collect { case (k, _, Some(e)) => ("index:" + k, e) }
@@ -377,48 +341,26 @@ object Bench {
     // bench_detail.json; the stdout line carries only the TOTAL build
     // seconds (r17: the ~370 chars the per-index map cost buy ~19 more
     // per-query entries inside the driver's 2000-char tail window).
-    val buildJson = indexBuilds.collect { case (k, v, None) => s"${jstr(k)}:${fmt2(v)}" }
-      .mkString("{", ",", "}")
     val buildTotal = indexBuilds.collect { case (_, v, None) => v }.sum
-    // Stage-trace rendering (detail file only — the stdout line is
-    // size-bounded). The listener bus is asynchronous; by this point
+    // Stage traces go to the detail file only — the stdout line is
+    // size-bounded. The listener bus is asynchronous; by this point
     // every query finished seconds ago, but give stragglers a moment.
     Thread.sleep(1500)
-    def mb(b: Long): String =
-      String.format(java.util.Locale.ROOT, "%.2f", b / 1048576.0)
-    def traceJson(g: String): String = trace.byGroup.get(g).map { a =>
-      s""","stages":${a.stages},"tasks":${a.tasks},"sh_read_mb":${mb(a.shuffleReadB)},"sh_write_mb":${mb(a.shuffleWriteB)},"input_mb":${mb(a.inputB)},"spill_mb":${mb(a.spillB)}"""
-    }.getOrElse("")
-    // Byte-level regression check: run-1 shuffle-read bytes per query
+    // Byte-level regression checks: run-1 shuffle-read bytes per query
     // vs the committed detail. Bytes are noise-free, so no retries —
     // a non-empty list IS a plan regression (or an intended plan
-    // change whose next full census re-baselines it).
-    val measuredMb = ok.flatMap { case (n, _, _, _) =>
-      trace.byGroup.get(n).map(a => n -> a.shuffleReadB / 1048576.0) }.toMap
-    val byteSus =
-      (if (rebase) None
-       else committedShuffleMb(Paths.get("bench_detail.json"), sfName))
-      .map(c => byteSuspects(c, measuredMb)).getOrElse(Seq.empty)
-    // Write-side and spill checks (round-12 verdict item 7): same pure
-    // predicate over the other two byte channels. Spill uses a lower
-    // floor — the committed census spills ZERO bytes anywhere, so any
-    // spill at all is a memory-pressure regression worth naming.
-    val measuredWriteMb = ok.flatMap { case (n, _, _, _) =>
-      trace.byGroup.get(n).map(a => n -> a.shuffleWriteB / 1048576.0) }.toMap
-    val writeSus =
-      (if (rebase) None
-       else committedShuffleWriteMb(Paths.get("bench_detail.json"), sfName))
-      .map(c => byteSuspects(c, measuredWriteMb)).getOrElse(Seq.empty)
-    val measuredSpillMb = ok.flatMap { case (n, _, _, _) =>
-      trace.byGroup.get(n).map(a => n -> a.spillB / 1048576.0) }.toMap
+    // change whose next full census re-baselines it). Write-side and
+    // spill (round-12 verdict item 7) use the same pure predicate over
+    // the other two byte channels. Spill uses a lower floor — the
+    // committed census spills ZERO bytes anywhere, so any spill at all
+    // is a memory-pressure regression worth naming.
+    def measured(bytes: StageMetricsListener#Agg => Long): Map[String, Double] =
+      ok.flatMap { case (n, _, _, _) =>
+        trace.byGroup.get(n).map(a => n -> bytes(a) / 1048576.0) }.toMap
+    val byteSus = byteSuspects(fieldOf(baseline, "sh_read_mb"), measured(_.shuffleReadB))
+    val writeSus = byteSuspects(fieldOf(baseline, "sh_write_mb"), measured(_.shuffleWriteB))
     val spillSus =
-      (if (rebase) None
-       else committedSpillMb(Paths.get("bench_detail.json"), sfName))
-      .map(c => byteSuspects(c, measuredSpillMb, floorMb = 1.0)).getOrElse(Seq.empty)
-    val indexTrace = indexBuilds.collect {
-      case (k, _, None) if trace.byGroup.contains(s"index:$k") =>
-        s"""${jstr(k)}:{${traceJson(s"index:$k").drop(1)}}"""
-    }.mkString("{", ",", "}")
+      byteSuspects(fieldOf(baseline, "spill_mb"), measured(_.spillB), floorMb = 1.0)
     // Best-of-windows merge (r14 verdict "What's wrong #1"): a full run
     // at the canonical SF must never REPLACE a better committed min with
     // a noisy window's value — the committed detail is the threshold
@@ -426,86 +368,54 @@ object Bench {
     // silently loosen every threshold it feeds. Timing (min, med) is
     // kept as a PAIR from whichever window has the lower min; the
     // byte/stage shape is always the fresh run's (bytes are
-    // deterministic and must describe the current code's plan).
-    // tools/merge_bench_detail.py is the offline twin for repairing an
-    // already-clobbered file. committedMins is SF-guarded, so a run at
-    // a non-canonical SF merges against nothing.
-    // Under the rebase escape (declared above, with the rest of the
-    // defense) the best-of merge is skipped too: this run's timings
-    // become the committed pairs. Use only on a quiet host, and say so
-    // in the commit that lands the rebased detail file.
+    // deterministic and must describe the current code's plan). The
+    // committed bodies are SF-guarded, so a run at a non-canonical SF
+    // merges against nothing. Under the rebase escape the merge is
+    // skipped too: this run's timings become the committed pairs. Use
+    // only on a quiet host, and say so in the commit that lands the
+    // rebased detail file.
+    val committedMed = fieldOf(baseline, "med")
     val priorTiming: Map[String, (Double, Double)] =
-      if (only.isEmpty && !rebase)
-        (committedMins(Paths.get("bench_detail.json"), sfName),
-         committedField(Paths.get("bench_detail.json"), sfName, "med")) match {
-          case (Some(mins), Some(meds)) =>
-            mins.flatMap { case (k, mn) => meds.get(k).map(md => k -> (mn, md)) }
-          case _ => Map.empty[String, (Double, Double)]
-        }
-      else Map.empty[String, (Double, Double)]
-    val okEntries = ok.sortBy(_._1)
-      .map { case (k, v, m, _) =>
-        val (bv, bm) = priorTiming.get(k).filter(_._1 < v).getOrElse((v, m))
-        s"""${jstr(k)}:{"min":${fmt(bv)},"med":${fmt(bm)}${traceJson(k)}}""" }
+      if (only.isEmpty)
+        committedMin.flatMap { case (k, mn) => committedMed.get(k).map(md => k -> (mn, md)) }
+      else Map.empty
+    val okEntries = ok.map { case (k, v, m, _) =>
+      val (bv, bm) = priorTiming.get(k).filter(_._1 < v).getOrElse((v, m))
+      k -> entryNode(bv, bm, trace.byGroup.get(k))
+    }
     // A still-live gate that ERRORED this window must not lose its
     // committed entry — dropping it would disable the noise defense for
     // that query and let the next (possibly elevated) window become its
     // ratchet floor, the same hole the best-of merge closes for noisy
     // mins. Carry the whole committed object through; retired gates
-    // (absent from SparkEntry.queries) are dropped as before.
+    // (absent from SparkEntry.queries) are dropped.
     val okNames = ok.map(_._1).toSet
     val carried =
-      (if (only.isEmpty)
-         committedBodies(Paths.get("bench_detail.json"), sfName)
-           .filter { case (k, _) =>
-             !okNames(k) && SparkEntry.queries.contains(k) }
-       else Map.empty[String, String])
-        .toSeq.sortBy(_._1).map { case (k, b) => s"${jstr(k)}:{$b}" }
-    val detail = (okEntries ++ carried)
-      .mkString("{\"queries\":{", ",",
-        s"""},"index_build_s":$buildJson,"index_trace":$indexTrace,"runs":$runs,"sf":${jstr(Paths.get(sfDir).getFileName.toString)}}""")
+      if (only.isEmpty)
+        bodies.filter { case (k, _) => !okNames(k) && SparkEntry.queries.contains(k) }
+      else Map.empty[String, JsonNode]
+    val detail = detailTree(carried ++ okEntries,
+      indexBuilds.collect { case (k, v, None) => k -> v },
+      indexBuilds.collect { case (k, _, None) if trace.byGroup.contains(s"index:$k") =>
+        k -> traceNode(trace.byGroup(s"index:$k")) },
+      runs, sfName)
     // Subset runs (SPARK_GRAFT_BENCH_ONLY) must not clobber the committed
-    // full-census detail file, and neither may a full run at a DIFFERENT
-    // SF (a local sf0.01 smoke would silently replace the sf0.1 baseline
-    // and disable the noise-defense compare for the next driver run) —
-    // cross-SF details go to bench_detail_<sf>.json instead. The driver's
-    // own sf0.1 runs match the committed sf and update in place.
-    if (only.isEmpty) {
-      val canonical = Paths.get("bench_detail.json")
-      // missing or unparseable existing file → safe to (re)write in place
-      val existingSf =
-        try "\"sf\"\\s*:\\s*\"([^\"]+)\"".r.findFirstMatchIn(Files.readString(canonical)).map(_.group(1))
-        catch { case _: Throwable => None }
-      // When no parseable canonical exists, only the BASELINE SF
-      // (sf0.1 — the driver's bench SF, BASELINE.md) may create it: a
-      // lost canonical plus one census at another SF would otherwise
-      // hijack the file and divert every later baseline run (and the
-      // noise defense) forever.
-      val target =
-        if (existingSf.map(_ == sfName).getOrElse(sfName == "sf0.1")) canonical
-        else Paths.get(s"bench_detail_$sfName.json")
-      Files.writeString(target, detail + "\n")
-    } else {
-      // Subset runs keep their stage trace too — in a file the defense
-      // never reads (r14: the spill-regime probe needs per-query
-      // spill_mb from a BENCH_ONLY run; without this the bytes died
-      // with the JVM).
-      Files.writeString(Paths.get(s"bench_detail_${sfName}_subset.json"),
-        detail + "\n")
-    }
+    // full-census detail file; they keep their stage trace in a file the
+    // defense never reads (r14: the spill-regime probe needs per-query
+    // spill_mb from a BENCH_ONLY run). A full run goes where
+    // [[detailTarget]] says.
+    val target =
+      if (only.isEmpty) detailTarget(canonical, sfName)
+      else Paths.get(s"bench_detail_${sfName}_subset.json")
+    writeDetail(target, detail)
     // Names that stayed >2.5× their committed same-SF min after retries —
     // normally empty (zero bytes of the tail window); a non-empty list
     // says "compare bench_detail.json to the committed one before
     // believing these numbers".
-    val suspectField =
-      (if (stillSuspect.isEmpty) ""
-       else s""","suspect":${stillSuspect.map(jstr).mkString("[", ",", "]")}""") +
-      (if (byteSus.isEmpty) ""
-       else s""","byte_suspect":${byteSus.map(jstr).mkString("[", ",", "]")}""") +
-      (if (writeSus.isEmpty) ""
-       else s""","write_suspect":${writeSus.map(jstr).mkString("[", ",", "]")}""") +
-      (if (spillSus.isEmpty) ""
-       else s""","spill_suspect":${spillSus.map(jstr).mkString("[", ",", "]")}""")
+    val suspectField = Seq("suspect" -> stillSuspect, "byte_suspect" -> byteSus,
+      "write_suspect" -> writeSus, "spill_suspect" -> spillSus)
+      .collect { case (k, v) if v.nonEmpty => s""","$k":${Json.mapper.writeValueAsString(v)}""" }
+      .mkString
     val line = renderLine(
       ok.sortBy { case (_, v, _, _) => -v }.map { case (k, v, m, _) => (k, v, m) },
       nOk = ok.size, runs = runs, subset = only.isDefined,

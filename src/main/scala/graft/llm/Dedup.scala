@@ -719,10 +719,11 @@ object Dedup {
 
     // ---- Cluster the near-dup pairs into groups and pick one keeper
     // per group — the step that turns pairwise similarity into an actual
-    // deduplicated corpus. Components via min-label propagation on Spark;
-    // the oracle recomputes them as a recursive-CTE transitive closure
-    // over the same (oracled) minhash pair set. DedupClusterSpec checks
-    // transitivity and a hand graph besides.
+    // deduplicated corpus. Components via large-star/small-star
+    // contraction on Spark (connectedComponents); the oracle recomputes
+    // them as a recursive-CTE transitive closure over the same (oracled)
+    // minhash pair set. DedupClusterSpec checks transitivity and a hand
+    // graph besides.
     QueryDef("dedup_clusters", (s, d) => {
       // served from the persisted band index (identical rows; the
       // recursive-CTE oracle replays the inline chain)

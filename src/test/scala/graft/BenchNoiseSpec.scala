@@ -1,6 +1,8 @@
 package graft
 
+import java.nio.file.{Files, Paths}
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** Bench's noise self-defense (round-8 verdict item 5): synthetic
   * slowdowns against a committed detail map must be flagged; noise-floor
@@ -115,7 +117,7 @@ class BenchNoiseSpec extends AnyFunSuite {
     // whole bodies round-trip: re-embedding the carried body must yield
     // the original entry (this is exactly what the error carry-over does)
     assert(bodies.get("pagerank").exists(b =>
-      b.contains("\"min\":6.1") && b.contains("\"stages\":9")))
+      b.toString.contains("\"min\":6.1") && b.toString.contains("\"stages\":9")))
     assert(bodies.contains("q1_pricing"))
     // r16 (ADVICE r15): the parse is scoped to the "queries" object —
     // an index_trace sub-object can NEVER collide with a gate name, so
@@ -138,7 +140,7 @@ class BenchNoiseSpec extends AnyFunSuite {
     // the nested body must be captured WHOLE — the old flat regex
     // dropped it entirely, silently disabling the errored-gate carry
     assert(bodies.get("pagerank").exists(b =>
-      b.contains("\"min\":6.1") && b.contains("\"detail\":{\"t\":1}")),
+      b.toString.contains("\"min\":6.1") && b.toString.contains("\"detail\":{\"t\":1}")),
       s"nested body not captured: ${bodies.get("pagerank")}")
     assert(bodies.contains("q1_pricing"),
       "entries AFTER a nested body must still parse")
@@ -147,21 +149,86 @@ class BenchNoiseSpec extends AnyFunSuite {
       Map("pagerank" -> 6.1, "q1_pricing" -> 0.8)))
   }
 
-  test("one hand-mangled entry degrades to flat parsing of the others, " +
-      "never to discarding the whole committed baseline") {
-    val p = java.nio.file.Files.createTempFile("detail_mangled", ".json")
-    // 'broken' has a malformed value (no object) — the r16 strict
-    // scanner rejects the region; the fallback must still flat-parse
-    // the well-formed entries instead of returning Map.empty (which
-    // the next run would silently solidify by overwriting the file)
-    java.nio.file.Files.writeString(p,
+  test("an unparseable canonical detail is never overwritten: the census " +
+      "goes to the side file and runs with no committed baseline") {
+    val dir = Files.createTempDirectory("detail_mangled")
+    val p = dir.resolve("bench_detail.json")
+    // 'broken' has a malformed value (no object): the file does not parse
+    Files.writeString(p,
       """{"queries":{"pagerank":{"min":6.1,"med":6.5},
         |"broken":,
         |"q1_pricing":{"min":0.8,"med":0.9}},"runs":3,"sf":"sf0.1"}""".stripMargin)
+    val before = Files.readAllBytes(p)
+    val target = Bench.detailTarget(p, "sf0.1")
+    assert(target == dir.resolve("bench_detail_sf0.1.json"))
+    Bench.writeDetail(target, Bench.detailTree(Map.empty, Seq.empty, Seq.empty, 3, "sf0.1"))
+    assert(java.util.Arrays.equals(Files.readAllBytes(p), before),
+      "the committed baseline's bytes must survive the run")
+    assert(Bench.committedMins(p, "sf0.1").isEmpty)
+    // junk after a well-formed object does not parse either
+    Files.writeString(p, """{"queries":{},"runs":3,"sf":"sf0.1"} x""")
+    assert(Bench.detailTarget(p, "sf0.1") == target)
+  }
+
+  test("detailTarget: same SF in place, another SF beside it, and only the " +
+      "baseline SF creates a missing canonical file") {
+    val dir = Files.createTempDirectory("detail_target")
+    val p = dir.resolve("bench_detail.json")
+    assert(Bench.detailTarget(p, "sf0.1") == p)
+    assert(Bench.detailTarget(p, "sf0.01") == dir.resolve("bench_detail_sf0.01.json"))
+    Files.writeString(p, """{"queries": {}, "runs": 3, "sf": "sf0.01"}""")
+    assert(Bench.detailTarget(p, "sf0.01") == p)
+    assert(Bench.detailTarget(p, "sf0.1") == dir.resolve("bench_detail_sf0.1.json"))
+  }
+
+  test("the detail writer round-trips through the reader: every field, an " +
+      "escaped gate name and a carried nested body") {
+    val l = new StageMetricsListener
+    val agg = new l.Agg
+    agg.stages = 9; agg.tasks = 40; agg.shuffleReadB = 43200000L
+    agg.shuffleWriteB = 3L * 1048576; agg.inputB = 524288L; agg.spillB = 0L
+    val odd = "q\"uo\\te\tta\u0001b"
+    val carried = Json.mapper.readTree(
+      """{"min":0.8,"med":0.9,"trace":{"stages":3,"detail":{"t":1,"min":0.01}}}""")
+    val tree = Bench.detailTree(
+      Map("pagerank" -> Bench.entryNode(6.1234, 6.5, Some(agg)),
+        odd -> Bench.entryNode(0.2, 0.25, None), "q1_pricing" -> carried),
+      Seq("copairs" -> 1.44, "ivf" -> 0.123), Seq("copairs" -> Bench.traceNode(agg)),
+      runs = 3, sf = "sf0.1")
+    val p = Files.createTempDirectory("detail_rt").resolve("bench_detail.json")
+    Bench.writeDetail(p, tree)
+    assert(Bench.committedMins(p, "sf0.1").contains(
+      Map("pagerank" -> 6.123, odd -> 0.2, "q1_pricing" -> 0.8)))
+    assert(Bench.committedShuffleMb(p, "sf0.1").contains(Map("pagerank" -> 41.2)))
+    assert(Bench.committedShuffleWriteMb(p, "sf0.1").contains(Map("pagerank" -> 3.0)))
+    assert(Bench.committedSpillMb(p, "sf0.1").contains(Map("pagerank" -> 0.0)))
     val bodies = Bench.committedBodies(p, "sf0.1")
-    assert(bodies.contains("pagerank") && bodies.contains("q1_pricing"),
-      s"well-formed entries must survive a mangled sibling: ${bodies.keySet}")
-    assert(Bench.committedMins(p, "sf0.1").exists(_.get("pagerank").contains(6.1)))
+    assert(bodies.keySet == Set("pagerank", odd, "q1_pricing"))
+    assert(bodies("pagerank") == Json.mapper.readTree(
+      """{"min":6.123,"med":6.5,"stages":9,"tasks":40,"sh_read_mb":41.2,
+        |"sh_write_mb":3.0,"input_mb":0.5,"spill_mb":0.0}""".stripMargin))
+    assert(bodies(odd).path("med").asDouble == 0.25)
+    assert(bodies("q1_pricing") == carried)
+    val root = Json.mapper.readTree(p.toFile)
+    assert(root.path("index_build_s") == Json.mapper.readTree("""{"copairs":1.4,"ivf":0.12}"""))
+    assert(root.path("index_trace").path("copairs") == Bench.traceNode(agg))
+    assert(root.path("runs").asInt == 3 && root.path("sf").asText == "sf0.1")
+  }
+
+  test("the committed bench_detail.json writes back as the same tree") {
+    val committed = Paths.get("bench_detail.json")
+    val root = Json.mapper.readTree(committed.toFile)
+    val sf = root.path("sf").asText
+    val bodies = Bench.committedBodies(committed, sf)
+    assert(bodies.size == root.path("queries").size && bodies.nonEmpty)
+    def entries(field: String) =
+      root.path(field).properties.asScala.toSeq.map(e => e.getKey -> e.getValue)
+    val tree = Bench.detailTree(bodies,
+      entries("index_build_s").map { case (k, v) => k -> v.asDouble },
+      entries("index_trace"), root.path("runs").asInt, sf)
+    val p = Files.createTempDirectory("detail_committed").resolve("bench_detail.json")
+    Bench.writeDetail(p, tree)
+    assert(Json.mapper.readTree(p.toFile) == root)
   }
 
   test("a NESTED sub-object's fields are never attributed to the " +
@@ -230,5 +297,16 @@ class BenchNoiseSpec extends AnyFunSuite {
     assert(line.contains("\"errors_omitted\":" + (errs.size - shown)))
     // the total still closes the line
     assert(line.endsWith("\"total_s\":0.000}"))
+  }
+
+  test("renderLine escapes gate names and errors into parseable JSON") {
+    val odd = "q\"uo\\te\tta\u0001b"
+    val line = Bench.renderLine(Seq((odd, 1.5, 1.6)), nOk = 1, runs = 3,
+      subset = false, suspectField = "", sfName = "sf0.1", indexTotal = 0.0,
+      errs = Seq(odd + "_err" -> ("boom: " + odd)), total = 1.5, totalMed = 1.6)
+    val root = Json.mapper.readTree(line)
+    assert(root.path("queries").path(odd).asDouble == 1.5)
+    assert(root.path("errors").path(odd + "_err").asText == "boom: " + odd)
+    assert(line.endsWith("\"total_s\":1.500}"))
   }
 }
