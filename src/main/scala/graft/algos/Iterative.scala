@@ -6,8 +6,10 @@ import graft.sources.IndexSpec
 import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.Decimal
 import scala.collection.mutable
 import scala.reflect.ClassTag
 
@@ -15,8 +17,9 @@ import scala.reflect.ClassTag
   * (ex/pagerank.c, ex/kmeans-kmr.c, ex/phoenix-matrix-multiply.c),
   * re-expressed as Spark iteration with explicit persist/unpersist and
   * periodic lineage truncation — the Spark idiom for KMR's
-  * loop-of-map-reduce jobs. PageRank runs on co-partitioned RDDs,
-  * k-means on DataFrames.
+  * loop-of-map-reduce jobs. PageRank runs on co-partitioned RDDs, and
+  * k-means (with the IVF quantizer) on one Lloyd kernel over cached
+  * primitive blocks, one job an iteration.
   */
 object Iterative {
 
@@ -294,111 +297,168 @@ object Iterative {
        SELECT id, r AS rank_fp FROM r$iters ORDER BY rank_fp DESC, id LIMIT 100"""
   }
 
-  /** Lloyd's k-means (ex/kmeans-kmr.c, ex/phoenix-kmeans.c):
-    * deterministic init (first k vectors by id); each iteration assigns
-    * every vector to its nearest centroid (broadcast centroids, native
-    * dot_d distance) and recomputes component-wise means via
-    * posexplode + groupBy — all shuffles are O(n·dim) rows keyed by
-    * (cluster, component). Returns (iteration, inertia) history plus
-    * final assignment. */
+  /** How the Lloyd kernel ranks centroids for a vector, the least
+    * `score(dot(e, c), dot(e, e), dot(c, c))` being the nearest. Each
+    * instance replays its SQL assignment's arithmetic bit-for-bit. */
+  private[graft] type Metric = (Double, Double, Double) => Double
+
+  /** Squared L2 as [[l2Assign]] expands it: `sq − 2·dot(e, ce) + cc`. */
+  private[graft] val L2: Metric = (dot, sq, cc) => sq - 2.0 * dot + cc
+
+  /** Negated cosine, the order of AnnOps.ivfAssign: an undefined cosine
+    * (a zero norm) scores +Infinity, after every defined one. */
+  private[graft] val NegCos: Metric = (dot, ee, cc) => {
+    val den = math.sqrt(cc) * math.sqrt(ee)
+    if (den == 0.0) Double.PositiveInfinity else -(dot / den)
+  }
+
+  /** DotProductD's sum: ascending over the shorter prefix. */
+  private def dot(a: Array[Double], b: Array[Double]): Double = {
+    var acc = 0.0
+    for (i <- 0 until math.min(a.length, b.length)) acc += a(i) * b(i)
+    acc
+  }
+
+  /** `try_cast(x AS DECIMAL(28,12))` by the steps Spark's Cast takes
+    * (HALF_UP): null for NaN, ±Infinity and magnitudes past 10^16. */
+  private def toDec(x: Double): Decimal =
+    if (x.isNaN || x.isInfinite) null
+    else { val q = Decimal(x); if (q.changePrecision(28, 12)) q else null }
+
+  /** One partition's vectors as primitive arrays, plus its `k` lowest ids
+    * as [[lloyd]] seeds them. A null vector stays null. A null component
+    * reads NaN: the scores are then NaN against every centroid, which
+    * ties exactly as SQL's all-NULL (L2) or all-+Infinity (cosine) scores
+    * do, and [[toDec]] skips it as try_cast skips the NULL. `holes` marks
+    * the vectors with a null component, whose NULL distance SQL's sum
+    * leaves out of the inertia. */
+  private final case class VecBlock(ids: Array[Long], vecs: Array[Array[Double]],
+      holes: Array[Boolean], seeds: Seq[(Long, Array[Double])])
+
+  /** Reads an `(id, e)` frame at its scan's partitioning, one [[VecBlock]]
+    * a partition. Seeds read a null vector as empty and a null component
+    * as 0.0, as a collected Row unboxes them. */
+  private def vecBlocks(vecs: DataFrame, k: Int): RDD[VecBlock] =
+    vecs.select(col("id"), col("e")).queryExecution.toRdd.mapPartitions { rows =>
+      val (ids, vs, holes) = (mutable.ArrayBuilder.make[Long],
+        mutable.ArrayBuilder.make[Array[Double]], mutable.ArrayBuilder.make[Boolean])
+      val low = mutable.PriorityQueue.empty[(Long, Array[Double])](Ordering.by(_._1))
+      rows.foreach { r =>
+        val a = if (r.isNullAt(1)) null else r.getArray(1)
+        def read(nul: Double) = if (a == null) null
+          else Array.tabulate(a.numElements())(i => if (a.isNullAt(i)) nul else a.getDouble(i))
+        ids += r.getLong(0)
+        vs += read(Double.NaN)
+        holes += a != null && (0 until a.numElements()).exists(a.isNullAt)
+        low += r.getLong(0) -> Option(read(0.0)).getOrElse(Array.emptyDoubleArray)
+        if (low.size > k) low.dequeue()
+      }
+      Iterator.single(VecBlock(ids.result(), vs.result(), holes.result(), low.toSeq))
+    }
+
+  /** The broadcast centroids of one Lloyd round, ascending by cid. */
+  private[graft] final case class Centroids(cents: Array[(Long, Array[Double])], m: Metric) {
+    val (cids, ces) = cents.sortBy(_._1).unzip
+    private val ccs = ces.map(c => dot(c, c))
+
+    /** (slot, score) of `e`'s nearest centroid: the first least score
+      * under Spark's double order (NaN above +Infinity, −0.0 = 0.0), so
+      * ties go to the lowest cid, as `least` and `min(struct)` rank
+      * `(score, cid)`. A null vector, whose SQL scores all tie, takes
+      * slot 0. */
+    def nearest(e: Array[Double]): (Int, Double) = if (e == null) (0, Double.NaN) else {
+      val ee = dot(e, e)
+      cids.indices.map(j => (j, m(dot(e, ces(j)), ee, ccs(j))))
+        .reduce((a, b) => if (SQLOrderingUtil.compareDoubles(b._2, a._2) < 0) b else a)
+    }
+  }
+
+  /** One Lloyd round's fold: the summed scores of the vectors without a
+    * null, and per (centroid slot, position) the exact sum and count of
+    * the components [[toDec]] keeps. Decimal addition is
+    * order-independent, so the merged sums do not depend on the
+    * partitioning. */
+  private final class LloydStats extends Serializable {
+    var inertia = 0.0
+    val sums = mutable.HashMap.empty[(Int, Int), (Decimal, Long)]
+    def add(slotPos: (Int, Int), q: Decimal, n: Long): Unit = if (q != null)
+      sums(slotPos) = sums.get(slotPos).fold((q, n)) { case (s, c) => (s + q, c + n) }
+    def merge(o: LloydStats): LloydStats = {
+      inertia += o.inertia
+      o.sums.foreach { case (slotPos, (q, n)) => add(slotPos, q, n) }
+      this
+    }
+  }
+
+  /** Lloyd's loop (ex/kmeans-kmr.c), shared by [[kMeans]] and the IVF
+    * quantizer (AnnOps.quantizer); `metric` is the only difference. The
+    * `(id, e)` frame is read once into cached [[VecBlock]]s, and the
+    * same job returns the seeds: the first `k` vectors by id. Each
+    * iteration is one job, KMR's map → reduce: the centroids are
+    * broadcast, one `mapPartitions` folds [[LloydStats]] and one
+    * `treeReduce` brings them to the driver. There a centroid's
+    * coordinate is the nearest double of the exact sum, then one IEEE
+    * division (both steps engine-portable, unlike a decimal quotient); a
+    * position no member carries keeps the previous coordinate (0.0 past
+    * its end), the dim grows to the highest surviving position + 1, and
+    * a centroid with nothing surviving stays put. Returns the final
+    * centroids (ascending cid) and the per-iteration inertia.
+    *
+    * The blocks keep the scan's partitioning. A repartition to the core
+    * count measured flat in a same-window A/B (r17: 2.95 → 2.92/3.21 s;
+    * OPTIMIZATION_r17.md): the cost at gate scale is the per-iteration
+    * job, not the narrow compute. */
+  private[graft] def lloyd(vecs: DataFrame, k: Int, iters: Int, metric: Metric)
+      : (Array[(Long, Array[Double])], Seq[Double]) = {
+    val blocks = vecBlocks(vecs, k).persist()
+    var cents = blocks.flatMap(_.seeds).collect().sortBy(_._1).take(k)
+    val history = for (_ <- 1 to iters if cents.nonEmpty) yield {
+      val table = vecs.sparkSession.sparkContext.broadcast(Centroids(cents, metric))
+      val stats = blocks.mapPartitions { bs =>
+        val st = new LloydStats
+        for (b <- bs; i <- b.ids.indices if b.vecs(i) != null) {
+          val (j, s) = table.value.nearest(b.vecs(i))
+          if (!b.holes(i)) st.inertia += s
+          for (p <- b.vecs(i).indices) st.add((j, p), toDec(b.vecs(i)(p)), 1L)
+        }
+        Iterator.single(st)
+      }.treeReduce(_ merge _)
+      table.destroy()
+      val means = stats.sums.groupMap(_._1._1) { case ((_, p), (q, n)) => p -> q.toDouble / n }
+      cents = cents.zipWithIndex.map { case ((cid, prev), j) =>
+        cid -> means.get(j).map(_.toMap).fold(prev)(m => Array.tabulate(
+          math.max(prev.length, m.keys.max + 1))(p => m.getOrElse(p, prev.lift(p).getOrElse(0.0))))
+      }
+      stats.inertia
+    }
+    blocks.unpersist(false)
+    (cents, history)
+  }
+
+  /** Lloyd's k-means (ex/kmeans-kmr.c, ex/phoenix-kmeans.c) over an
+    * `(id, e)` frame: [[lloyd]] under [[L2]]. Returns the final
+    * assignment (lazy, [[l2Assign]]) and the per-iteration inertia. */
   def kMeans(vecs: DataFrame, k: Int, iters: Int): (DataFrame, Seq[Double]) = {
     require(iters >= 1, s"kMeans needs at least one iteration, got $iters")
-    // NOT repartitioned to cores (r17): the embeddings scan yields one
-    // partition at bench SF, so the per-iteration distance stages run
-    // nearly serial — but a same-window A/B of a conditional
-    // repartition(cores, id) before the persist (19→300 tasks) measured
-    // 2.95→2.92/3.21 across two windows: FLAT. The gate's floor is the
-    // five driver-synchronized aggregate collects (Lloyd with
-    // driver-resident centroids), not the narrow compute; at corpus
-    // scale the scan is already wide. See OPTIMIZATION_r17.md.
-    val v = vecs.select(col("id"), col("e"), dotD(col("e"), col("e")).as("sq")).persist()
-    v.count()
-    val dim = v.select(size(col("e"))).first().getInt(0)
-    var centroids = v.orderBy("id").limit(k)
-      .select(col("id").as("cid"), col("e").as("ce"))
-      .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
+    val (cents, history) = lloyd(vecs, k, iters, L2)
+    (l2Assign(vecs, cents), history)
+  }
 
-    // Assignment is SHUFFLE-FREE: k is small, so the k centroids ride
-    // into the plan as literals and the nearest one is least() over k
-    // (d2, cid) structs — a narrow codegen'd projection over the cached
-    // vectors, no crossJoin row explosion, no per-id re-aggregation.
-    // ‖c‖² is folded on the driver (same left-to-right summation as
-    // dotD, so distances are bit-identical to the joined formulation).
-    def assign(cs: Array[(Long, Array[Double])]): DataFrame = {
-      val structs = cs.map { case (cid, ce) =>
-        val ceCol = array(ce.map(lit).toIndexedSeq: _*)
-        val cc = ce.foldLeft(0.0)((acc, x) => acc + x * x)
-        struct((col("sq") - lit(2.0) * dotD(col("e"), ceCol) + lit(cc)).as("d2"),
-          lit(cid).as("cid"))
-      }
-      val nearest = if (structs.length == 1) structs.head
-        else least(structs.toIndexedSeq: _*)
-      v.select(col("id"), col("e"), nearest.as("m"))
-        .select(col("id"), col("e"), col("m.cid").as("cid"), col("m.d2").as("d2"))
+  /** Every vector's nearest centroid under squared L2, as (id, e, cid, d2).
+    * SHUFFLE-FREE: the k centroids ride into the plan as literals and the
+    * nearest is least() over k (d2, cid) structs, a narrow codegen'd
+    * projection. ‖c‖² is folded on the driver with dotD's left-to-right
+    * sum. Returned lazy: it derives only from the source vectors and the
+    * literal centroids, so it leaves no persisted RDD behind. */
+  private[graft] def l2Assign(vecs: DataFrame, cs: Array[(Long, Array[Double])]): DataFrame = {
+    val structs = cs.map { case (cid, ce) =>
+      val ceCol = array(ce.map(lit).toIndexedSeq: _*)
+      struct((col("sq") - lit(2.0) * dotD(col("e"), ceCol) + lit(dot(ce, ce))).as("d2"),
+        lit(cid).as("cid"))
     }
-
-    val history = Seq.newBuilder[Double]
-    for (_ <- 1 to iters) {
-      val assigned = assign(centroids)
-      // ONE flat aggregate per iteration: per-cluster count, inertia
-      // contribution, and all component sums (map-side partial agg; the
-      // shuffle is k rows × (dim+2) columns) — replaces the previous
-      // posexplode + double groupBy + separate inertia job.
-      // get() (not getItem): a vector shorter than dim contributes null
-      // to the components it lacks — skipped by sum — instead of an ANSI
-      // INVALID_ARRAY_INDEX that kills the job on one malformed row. Each
-      // component carries its own non-null count as the mean denominator:
-      // dividing a null-skipping sum by the full cluster size would bias
-      // coordinates toward zero whenever short vectors are members.
-      // Component sums run in exact DECIMAL (the matmul_gram technique):
-      // decimal addition is order-independent, so the recomputed
-      // centroids — and therefore the final assignment — are identical
-      // across partitionings and engines, which is what lets the gate
-      // hash-compare this iterative pipeline against DuckDB at all.
-      // try_cast degrades NaN (and beyond-range magnitudes) to null, so
-      // the per-component denominator must count the SAME try_cast
-      // expression the sum consumed — counting raw non-null doubles
-      // would divide by members the sum skipped (and NPE on an all-NaN
-      // component whose sum is null but raw count is not).
-      // (d2 stays a double sum: it only feeds the spec-level inertia
-      // history, never the centroids or the gate output.)
-      val aggCols = count(lit(1)).as("cnt") +: sum("d2").as("sd2") +:
-        ((0 until dim).map(i =>
-          sum(expr(s"try_cast(get(e, $i) AS DECIMAL(28,12))")).as(s"s$i")) ++
-          (0 until dim).map(i =>
-            count(expr(s"try_cast(get(e, $i) AS DECIMAL(28,12))")).as(s"c$i")))
-      // stats row layout: cid(0), cnt(1), sd2(2), s0..s{dim-1} from 3,
-      // c0..c{dim-1} from 3+dim
-      val stats = assigned.groupBy("cid").agg(aggCols.head, aggCols.tail: _*).collect()
-      history += stats.map(r => if (r.isNullAt(2)) 0.0 else r.getDouble(2)).sum
-      val prev = centroids.toMap
-      val updated = stats.map { r =>
-        val cid = r.getLong(0)
-        // a component no member carries (count 0) keeps the previous
-        // centroid's coordinate
-        (cid, Array.tabulate(dim) { i =>
-          val n = r.getLong(3 + dim + i)
-          if (n == 0L)
-            prev.get(cid).collect { case ce if ce.length > i => ce(i) }.getOrElse(0.0)
-          // nearest-double of the exact decimal sum, THEN an IEEE double
-          // division — both steps are engine-portable, unlike dividing
-          // in decimal (engines disagree on quotient scale rules)
-          else r.getDecimal(3 + i).doubleValue / n
-        })
-      }.toMap
-      // a cluster that lost all members keeps its previous centroid
-      // (Lloyd's convention) instead of silently vanishing below k
-      centroids = centroids.map { case (cid, ce) => (cid, updated.getOrElse(cid, ce)) }
-    }
-    // Final assignment: returned LAZY. It derives only from the source
-    // vectors and the literal final centroids, so consumers recompute it
-    // with one narrow scan — and the loop's cache entry can be dropped
-    // here, leaving no persisted RDD behind (an eager checkpoint would
-    // itself persist the full assignment with no one to unpersist it —
-    // the round-1 review's persist-leak lesson, both directions).
-    val fin = assign(centroids)
-    v.unpersist(false)
-    (fin, history.result())
+    val nearest = if (structs.length == 1) structs.head else least(structs.toIndexedSeq: _*)
+    vecs.withColumn("sq", dotD(col("e"), col("e"))).select(col("id"), col("e"), nearest.as("m"))
+      .select("id", "e", "m.cid", "m.d2")
   }
 
   /** DuckDB oracle for [[kMeans]]: the 5 Lloyd iterations unrolled as
@@ -408,9 +468,10 @@ object Iterative {
     * least(), centroid means as exact DECIMAL(28,12) sums cast to
     * DOUBLE then IEEE-divided by the count (the same two portable steps
     * the driver-side update performs). Assumes well-formed fixed-dim
-    * vectors (like the matmul_gram oracle); the engine's short-vector /
-    * empty-cluster branches never fire on such input, so the replay is
-    * exact. */
+    * vectors (like the matmul_gram oracle). On such input every member
+    * carries every position, so the kernel's keep-the-previous-coordinate
+    * and dim-growth rules never fire and the plain per-position means
+    * replay it exactly. */
   private def kmeansOracleSql(k: Int, dim: Int, iters: Int): String = {
     def assign(out: String, cin: String) =
       s"""$out AS (
@@ -495,9 +556,9 @@ object Iterative {
     // IterativeSpec additionally asserts inertia monotonicity and
     // nearest-centroid consistency.
     QueryDef("kmeans_clusters", (s, d) => {
-      // NULL/empty vectors carry no position — exclude them up front, or
-      // centroid init NPEs when one lands in the first k rows
-      // (HostileEmbeddingsSpec pins this)
+      // NULL/empty vectors carry no position — exclude them up front, as
+      // the oracle's `v` does: seeded, one would be a centroid with no
+      // coordinates (HostileEmbeddingsSpec runs this gate on them)
       val v = Tables.load(s, d, "embeddings")
         .filter(col("embedding").isNotNull && size(col("embedding")) > 0)
         .select(col("vec_id").as("id"),

@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
   *   assigns every vector to its nearest centroid ONCE (O(nK) scan,
   *   shuffle on centroid id); queries probe only their nprobe nearest
   *   buckets, so the per-query work drops from O(n) to O(n·nprobe/K).
-  *   Centroids are Lloyd-refined ([[lloydArray]]) with K = ⌈√n⌉ —
+  *   Centroids are Lloyd-refined ([[quantizer]]) with K = ⌈√n⌉ —
   *   cells average √n members, the constant-cell-size regime the
   *   SemDeDup paper (Abbas et al. 2023) runs at production scale —
   *   and the whole iterative training is DECIMAL-exact, so every
@@ -29,7 +29,7 @@ import org.apache.spark.sql.functions._
 object AnnOps {
 
   private val MinK = 16 // IVF centroid floor (K = max(MinK, ⌈√n⌉))
-  private val LloydIters = 2 // centroid refinement rounds (oracle-unrolled)
+  private[graft] val LloydIters = 2 // centroid refinement rounds (oracle-unrolled)
   private val TrainCap = 16384L // Lloyd trains on ≤ ~this many sampled vectors
   private val CAND = 50 // ann_rerank prefilter pool per query
   private val TOPK = 5
@@ -127,7 +127,7 @@ object AnnOps {
   }
 
   /** Shared DuckDB CTE prefix replaying the Lloyd-refined IVF build
-    * bit-for-bit (see [[lloydArray]]/[[ivfAssign]]): vn (normed
+    * bit-for-bit (see [[quantizer]]/[[ivfAssign]]): vn (normed
     * vectors) → kk (K = max($MinK, ⌈√n⌉)) → c0 (first-K init) → per-
     * iteration cosine-argmax assignment + DECIMAL(28,12) component
     * means (keep-previous for empty cells) → `cents` (final
@@ -144,17 +144,17 @@ object AnnOps {
           FROM $src a, $cin c GROUP BY a.vec_id)"""
     // Training (init, assignment rounds, mean updates) runs over the
     // deterministic `tr` stride sample; K and the FINAL assignment use
-    // the full corpus — mirroring trainedCents exactly.
+    // the full corpus — mirroring quantizer exactly.
     val iters = (1 to LloydIters).map { i =>
-      // The mean update pads MISSING positions exactly like lloydArray
-      // (ADVICE r11): a component null for every member of a cell (a
-      // try_cast'd NaN) keeps the previous centroid coordinate, and the
-      // centroid dim is max(prev dim, highest observed pos + 1) with
-      // past-prev positions zero-filled — a bare list(m ORDER BY pos)
-      // would silently emit a SHORTER, position-shifted centroid and
-      // surface as a confusing hash mismatch instead. On well-formed
-      // vectors (every gate corpus) g/u reduce to the plain per-
-      // position means.
+      // The mean update pads MISSING positions exactly like the Lloyd
+      // kernel, Iterative.lloyd (ADVICE r11): a component null for every
+      // member of a cell (a try_cast'd NaN) keeps the previous centroid
+      // coordinate, and the centroid dim is max(prev dim, highest
+      // observed pos + 1) with past-prev positions zero-filled — a bare
+      // list(m ORDER BY pos) would silently emit a SHORTER,
+      // position-shifted centroid and surface as a confusing hash
+      // mismatch instead. On well-formed vectors (every gate corpus) g/u
+      // reduce to the plain per-position means.
       s"""${assign(s"a$i", s"c${i - 1}", "tr")},
          s$i AS (
            SELECT t.cid, generate_subscripts(v.e, 1) - 1 AS pos,
@@ -450,20 +450,11 @@ object AnnOps {
           Seq("band", "bk"))
         .select("delta_id", "base_id").distinct()
       val store = vecStore(s, d)
-      cand
+      nearDups(cand
         .join(store.select(col("vec_id").as("delta_id"), col("e").as("de"),
           col("nrm").as("dn")), "delta_id")
         .join(store.select(col("vec_id").as("base_id"), col("e").as("be"),
-          col("nrm").as("bn")), "base_id")
-        .withColumn("cos", cosCol("de", "be", "dn", "bn"))
-        .filter(col("cos") >= 0.4)
-        .groupBy("delta_id")
-        .agg(count(lit(1)).as("n_near"),
-          min(struct(negate(col("cos")), col("base_id"))).as("m"),
-          expr("try_cast(round(max(cos) * 1000000, 0) AS BIGINT)").as("max_cos_micro"))
-        .select(col("delta_id"), col("n_near"),
-          col("m.base_id").as("best_id"), col("max_cos_micro"))
-        .orderBy("delta_id")
+          col("nrm").as("bn")), "base_id"), 0.4)
     }, Some(
       s"""WITH $lshBucketsSql,
           base AS (SELECT vec_id, band, bk FROM (
@@ -576,18 +567,7 @@ object AnnOps {
       val base = assigned.filter(col("vec_id") % 8 =!= 7)
         .select(col("cid"), col("vec_id").as("base_id"),
           col("e").as("be"), col("nrm").as("bn"))
-      delta.join(base, Seq("cid"))
-        .withColumn("cos", cosCol("de", "be", "dn", "bn"))
-        .filter(col("cos") >= SemDedupEps)
-        .groupBy("delta_id")
-        .agg(count(lit(1)).as("n_near"),
-          // nearest EXISTING copy: highest cosine, ties → lowest id
-          // (the ivfAssign argmax-by-struct trick — map-side partials)
-          min(struct(negate(col("cos")), col("base_id"))).as("m"),
-          expr("try_cast(round(max(cos) * 1000000, 0) AS BIGINT)").as("max_cos_micro"))
-        .select(col("delta_id"), col("n_near"),
-          col("m.base_id").as("best_id"), col("max_cos_micro"))
-        .orderBy("delta_id")
+      nearDups(delta.join(base, Seq("cid")), SemDedupEps)
     }, Some(
       s"""WITH $ivfCtes,
           delta AS (SELECT cid, vec_id AS delta_id, e AS de, nrm AS dn
@@ -640,15 +620,9 @@ object AnnOps {
         .withColumn("prk", row_number().over(wPre))
         .filter(col("prk") <= CAND)
         .select("qid", "vec_id")
-      val wRank = Window.partitionBy("qid").orderBy(desc("cos"), col("vec_id"))
-      cand
+      topK(cand
         .join(broadcast(qset.select(col("qid"), col("qe"), col("qnrm"))), "qid")
-        .join(vecs(s, d), "vec_id")
-        .withColumn("cos", cosCol("qe", "e", "qnrm", "nrm"))
-        .withColumn("rk", row_number().over(wRank).cast("long"))
-        .filter(col("rk") <= TOPK)
-        .select(col("qid"), col("vec_id"), round(col("cos"), 6).as("cos_sim"), col("rk"))
-        .orderBy("qid", "rk")
+        .join(vecs(s, d), "vec_id"))
     }, Some(
       s"""WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
           sc0 AS (SELECT vec_id, e, list_max(list_transform(e, x -> abs(x))) AS scale FROM v),
@@ -672,19 +646,38 @@ object AnnOps {
           FROM ranked WHERE rk <= $TOPK ORDER BY qid, rk"""))
   )
 
+  /** The [[TOPK]] best of scored candidates per query, as every ANN
+    * gate emits them: (qid, vec_id, cos_sim, rk), ranked by the cosine
+    * of (qe, qnrm) and (e, nrm), then by vec_id. */
+  private def topK(cand: DataFrame): DataFrame =
+    cand.withColumn("cos", cosCol("qe", "e", "qnrm", "nrm"))
+      .withColumn("rk", row_number().over(
+        Window.partitionBy("qid").orderBy(desc("cos"), col("vec_id"))).cast("long"))
+      .filter(col("rk") <= TOPK)
+      .select(col("qid"), col("vec_id"), round(col("cos"), 6).as("cos_sim"), col("rk"))
+      .orderBy("qid", "rk")
+
+  /** Per delta vector, its near-dups among candidate (delta, base)
+    * pairs — (delta_id, de, dn) against (base_id, be, bn) — with cosine
+    * ≥ `eps`: how many, the nearest EXISTING copy (highest cosine, ties
+    * → lowest id: the ivfAssign argmax-by-struct trick, map-side
+    * partials) and its cosine in micro units. */
+  private def nearDups(pairs: DataFrame, eps: Double): DataFrame =
+    pairs.withColumn("cos", cosCol("de", "be", "dn", "bn"))
+      .filter(col("cos") >= eps)
+      .groupBy("delta_id")
+      .agg(count(lit(1)).as("n_near"),
+        min(struct(negate(col("cos")), col("base_id"))).as("m"),
+        expr("try_cast(round(max(cos) * 1000000, 0) AS BIGINT)").as("max_cos_micro"))
+      .select(col("delta_id"), col("n_near"), col("m.base_id").as("best_id"), col("max_cos_micro"))
+      .orderBy("delta_id")
+
   /** Exact brute-force cosine top-k for the NQUERY probe vectors. */
   def bruteForceTopk(s: SparkSession, d: String): DataFrame = {
     val v = vecs(s, d)
     val q = v.filter(col("vec_id") < NQUERY)
       .select(col("vec_id").as("qid"), col("e").as("qe"), col("nrm").as("qnrm"))
-    val w = Window.partitionBy("qid").orderBy(desc("cos"), col("vec_id"))
-    v.crossJoin(broadcast(q))
-      .filter(col("vec_id") =!= col("qid"))
-      .withColumn("cos", cosCol("qe", "e", "qnrm", "nrm"))
-      .withColumn("rk", row_number().over(w).cast("long"))
-      .filter(col("rk") <= TOPK)
-      .select(col("qid"), col("vec_id"), round(col("cos"), 6).as("cos_sim"), col("rk"))
-      .orderBy("qid", "rk")
+    topK(v.crossJoin(broadcast(q)).filter(col("vec_id") =!= col("qid")))
   }
 
   /** IVF: coarse-quantize all vectors to K = ⌈√n⌉ Lloyd-refined
@@ -727,22 +720,8 @@ object AnnOps {
     * every oracle replay still matches. */
   private val quantizers = new Memo[String, Array[(Long, Array[Double])]](8)
 
-  private def trainedCents(s: SparkSession, d: String,
-      v: DataFrame): Array[(Long, Array[Double])] =
-    quantizers(d, AlgoTag + embFingerprint(s, d)) {
-      // Train on a size-capped deterministic vec_id stride (round-11
-      // verdict item 3): at 100 TB the full-corpus O(nK) training pass
-      // per Lloyd round dominates the index build, and a quantizer only
-      // needs a representative sample — K (and the final assignment)
-      // still come from the FULL corpus. m is derived from n alone and
-      // the oracle replays the same `vec_id % m = 0` stride, so trained
-      // centroids stay engine-identical. Dormant (m = 1) below
-      // TrainCap vectors — the stride-plan/sample_stride machinery.
-      val n = v.count()
-      val m = trainStride(n)
-      val sample = if (m == 1L) v else v.filter(col("vec_id") % m === 0)
-      lloydArray(sample, kFor(n))
-    }
+  private def trainedCents(s: SparkSession, d: String, v: DataFrame): Array[(Long, Array[Double])] =
+    quantizers(d, AlgoTag + embFingerprint(s, d))(quantizer(v))
 
   /** Training-sample stride: keep every m-th vec_id so Lloyd sees
     * ≈ [[TrainCap]] vectors. Floor division, floor 1 — mirrored by the
@@ -752,60 +731,32 @@ object AnnOps {
   private[llm] def trainStride(n: Long): Long = math.max(1L, n / TrainCap)
 
   /** Lloyd-refined spherical centroids (the IVF/SemDeDup coarse
-    * quantizer): init = first k vectors by id, then [[LloydIters]]
-    * rounds of cosine-argmax assignment ([[ivfAssign]] — one O(nK)
-    * scan with a map-side argmin, never an nK shuffle) and per-
-    * component DECIMAL(28,12) mean update. Decimal sums are order-
-    * independent, so the trained centroids — and every gate downstream
-    * of them — are identical across partitionings and engines (the
-    * kmeans_clusters technique; [[ivfCtes]] is the unrolled DuckDB
-    * replay). Empty cells keep their previous centroid and a component
-    * no member carries keeps its previous coordinate (Lloyd's
-    * convention, matching algos/Iterative.kMeans). Driver carry is the
-    * bounded O(K·dim) centroid set per round — ≈ 16 MB at 10⁹ vectors
-    * — the documented O(k) class of driver-side carries. */
-  private[llm] def lloydArray(v: DataFrame, k: Int): Array[(Long, Array[Double])] = {
-    val s = v.sparkSession
-    var cents: Array[(Long, Array[Double])] = v.orderBy("vec_id").limit(k)
-      .select(col("vec_id"), col("e")).collect()
-      .map(r => r.getLong(0) ->
-        Option(r.getSeq[Double](1)).map(_.toArray).getOrElse(Array.empty[Double]))
-    for (_ <- 1 to LloydIters) {
-      val assigned = ivfAssign(v, centDf(s, cents))
-      // one scan per round: assignment argmin + posexplode + (cid, pos)
-      // partial-aggregated means ride a single job; try_cast degrades
-      // NaN / beyond-range components to null, counted out of the mean
-      // denominator by the SAME expression the sum consumed
-      val means = assigned.select(col("cid"), posexplode(col("e")))
-        .select(col("cid"), col("pos"), expr("try_cast(col AS DECIMAL(28,12))").as("q"))
-        .groupBy("cid", "pos")
-        .agg(sum("q").as("sq"), count("q").as("cq"))
-        .filter(col("cq") > 0)
-        // nearest-double of the exact decimal sum, THEN an IEEE double
-        // division — both engine-portable (dividing in decimal is not:
-        // engines disagree on quotient scale rules)
-        .select(col("cid"), col("pos"),
-          (col("sq").cast("double") / col("cq")).as("m"))
-        .collect()
-      val byCid = means.groupBy(_.getLong(0))
-      cents = cents.map { case (cid, prev) =>
-        byCid.get(cid) match {
-          case None => (cid, prev) // empty cell keeps its centroid
-          case Some(rows) =>
-            val m = rows.map(r => r.getInt(1) -> r.getDouble(2)).toMap
-            val dim = math.max(prev.length, m.keysIterator.max + 1)
-            (cid, Array.tabulate(dim)(i =>
-              m.getOrElse(i, if (i < prev.length) prev(i) else 0.0)))
-        }
-      }
-    }
-    cents
+    * quantizer): [[graft.algos.Iterative.lloyd]] under cosine argmax,
+    * K = ⌈√n⌉ seeds (the first K vectors by id), [[LloydIters]] rounds.
+    * Its decimal-exact means make the centroids, and every gate
+    * downstream of them, identical across partitionings and engines;
+    * [[ivfCtes]] is the unrolled DuckDB replay. Driver carry is the
+    * bounded O(K·dim) centroid set per round (≈ 16 MB at 10⁹ vectors). */
+  private[graft] def quantizer(v: DataFrame): Array[(Long, Array[Double])] = {
+    // Train on a size-capped deterministic vec_id stride (round-11
+    // verdict item 3): at 100 TB the full-corpus O(nK) training pass
+    // per Lloyd round dominates the index build, and a quantizer only
+    // needs a representative sample — K (and the final assignment)
+    // still come from the FULL corpus. m is derived from n alone and
+    // the oracle replays the same `vec_id % m = 0` stride, so trained
+    // centroids stay engine-identical. Dormant (m = 1) below
+    // TrainCap vectors — the stride-plan/sample_stride machinery.
+    val n = v.count()
+    val m = trainStride(n)
+    val sample = if (m == 1L) v else v.filter(col("vec_id") % m === 0)
+    graft.algos.Iterative.lloyd(sample.select(col("vec_id").as("id"), col("e")), kFor(n),
+      LloydIters, graft.algos.Iterative.NegCos)._1
   }
 
   /** Driver-held centroids as a (cid, ce, cnrm) DataFrame; the norm
     * folds ascending on the driver — bit-identical to sqrt(dot(ce, ce))
     * and to the oracle's list_dot_product. */
-  private def centDf(s: SparkSession, cs: Array[(Long, Array[Double])]): DataFrame = {
+  private[graft] def centDf(s: SparkSession, cs: Array[(Long, Array[Double])]): DataFrame = {
     import s.implicits._
     cs.toSeq.map { case (cid, ce) =>
       (cid, ce.toSeq, math.sqrt(ce.foldLeft(0.0)((a, x) => a + x * x)))
@@ -823,7 +774,7 @@ object AnnOps {
     * ranks LAST like the oracle's DESC — a struct with a null first
     * field would otherwise sort FIRST and a degenerate centroid would
     * capture the whole corpus. */
-  private def ivfAssign(v: DataFrame, cents: DataFrame): DataFrame =
+  private[graft] def ivfAssign(v: DataFrame, cents: DataFrame): DataFrame =
     v.crossJoin(broadcast(cents))
       .withColumn("ccos",
         coalesce(cosCol("ce", "e", "cnrm", "nrm"), lit(Double.NegativeInfinity)))
@@ -846,14 +797,7 @@ object AnnOps {
       .withColumn("prk", row_number().over(wProbe))
       .filter(col("prk") <= nprobe)
       .select(col("qid"), col("qe"), col("qnrm"), col("cid"))
-    val wRank = Window.partitionBy("qid").orderBy(desc("cos"), col("vec_id"))
-    assigned.join(probes, "cid")
-      .filter(col("vec_id") =!= col("qid"))
-      .withColumn("cos", cosCol("qe", "e", "qnrm", "nrm"))
-      .withColumn("rk", row_number().over(wRank).cast("long"))
-      .filter(col("rk") <= TOPK)
-      .select(col("qid"), col("vec_id"), round(col("cos"), 6).as("cos_sim"), col("rk"))
-      .orderBy("qid", "rk")
+    topK(assigned.join(probes, "cid").filter(col("vec_id") =!= col("qid")))
   }
 
   /** Cheap embeddings freshness fingerprint (count, id sum, total
