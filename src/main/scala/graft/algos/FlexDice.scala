@@ -38,10 +38,10 @@ import org.apache.spark.sql.functions._
   * (cell count, child count, threshold) scalars — never cells or
   * objects. Adjacency joins dense CELLS (≤ n/dmin rows, integer keys)
   * against their O(levels·dims) ancestor candidates — an equality
-  * join, never a spatial cross — and clustering reuses the O(log n)
-  * large-star/small-star contraction ([[graft.llm.Dedup
-  * .connectedComponents]]). Everything is integer-or-IEEE-exact, so a
-  * DuckDB oracle replays the whole pipeline: the midpoint recursion
+  * join, never a spatial cross — and clustering is a driver union-find
+  * over that adjacency, bounded by the 5,461-cell grid at any corpus
+  * size (see flexdice_clusters). Everything is integer-or-IEEE-exact,
+  * so a DuckDB oracle replays the whole pipeline: the midpoint recursion
   * unrolled per level, the layer threshold (floor of the same double
   * product the C code truncates), and the cluster merge as a recursive
   * CTE.

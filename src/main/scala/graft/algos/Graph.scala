@@ -1,6 +1,7 @@
 package graft.algos
 
 import graft.{Memo, QueryDef, Tables}
+import graft.core.Superstep
 import graft.sources.IndexSpec
 import org.apache.spark.sql.functions._
 
@@ -127,52 +128,26 @@ object Graph {
 
     // ---- Multi-source BFS: min-hop distance from a seed set, bounded
     // to 4 supersteps (the "within-k-hops neighborhood" query — spam-
-    // domain blast radius, citation depth). Per superstep: only the
-    // CURRENT frontier (nodes first reached last round) joins the edge
-    // list — a key-equality join — then one groupBy(min) folds the new
-    // reach into the distance table, so each round's shuffle is O(V),
-    // never O(paths): the path-explosion a naive expansion hits on a
-    // hubby graph is collapsed by the per-round dedup. Fixed superstep
-    // count (not convergence-tested) keeps the result engine-exact; the
-    // oracle replays it as a recursive CTE with UNION-dedup for the
-    // same O(V·k) bound. Integer hops → hash-exact.
+    // domain blast radius, citation depth). Each superstep is a min-plus
+    // round of the graph superstep primitive over the symmetrized edge
+    // blocks: every reached node offers hop + 1 to its neighbours and
+    // keeps its own hop, and the offers are folded by min per partition
+    // and then by one reduceByKey, so each round shuffles O(V) records,
+    // never O(paths) — the path explosion a naive expansion hits on a
+    // hubby graph collapses in the fold. Fixed superstep count (not
+    // convergence-tested) keeps the result engine-exact; the oracle
+    // replays it as a recursive CTE with UNION-dedup for the same O(V·k)
+    // bound. Integer hops → hash-exact. The build is one preparation
+    // job and one loop job.
     QueryDef("bfs_hops", (s, d) => {
+      import s.implicits._
       val pairs = coPairs(s, d)
-      // lazily persisted: the cache fills on first access inside the
-      // eager localCheckpoint below (no separate materialization job),
-      // the 4 supersteps reuse it, and the checkpoint cuts the result's
-      // lineage off the cache so edges can unpersist before returning
-      // (the persist-discipline — no leaked blocks in a long session)
-      val edges = pairs.select(col("u").as("src"), col("v").as("dst"))
-        .union(pairs.select(col("v").as("src"), col("u").as("dst")))
-        .persist()
-      try {
-        var dist = edges.select(col("src").as("id")).distinct()
-          .filter(col("id") % 10 === 0)
-          .select(col("id"), lit(0L).as("hop"))
-          .persist()
-        // Each generation is persisted LAZILY:
-        // superstep h references dist(h-1) TWICE (union side + frontier
-        // join side), so an unpersisted chain re-evaluates every earlier
-        // generation 2× per round — 2^k duplicated subtrees by round k
-        // (measured: 86 stages for this 4-hop gate at sf0.1; ~25 after).
-        // With the lazy persists, the single eager checkpoint below runs
-        // ONE job in which every generation is computed once, cached on
-        // first materialization, and read from cache by both consumers.
-        // Same fixpoint arithmetic, bit-identical rows.
-        val gens = scala.collection.mutable.ArrayBuffer(dist)
-        for (h <- 1 to 4) {
-          val next = dist.filter(col("hop") === (h - 1))
-            .join(edges, col("id") === col("src"))
-            .select(col("dst").as("id"), lit(h.toLong).as("hop"))
-          dist = dist.union(next).groupBy("id").agg(min("hop").as("hop"))
-            .persist()
-          gens += dist
-        }
-        val out = dist.orderBy("id").localCheckpoint(true)
-        gens.foreach(_.unpersist(false))
-        out
-      } finally edges.unpersist(false)
+      Superstep.prepare(pairs.select(explode(array(
+          struct(col("u").as("src"), col("v").as("dst")),
+          struct(col("v").as("src"), col("u").as("dst")))).as("e")).select("e.*"))
+        .use(g => Superstep.iterate(g.marks.filter(_._1 % 10 == 0).mapValues(_ => 0L), 4)(
+          Superstep.relax(g, _, keep = true)(_ + _, math.min)))
+        .toDF("id", "hop").orderBy("id")
     }, Some(
       s"WITH RECURSIVE $coPairsSql, " +
       "e AS (SELECT u AS src, v AS dst FROM pairs " +

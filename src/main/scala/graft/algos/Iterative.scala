@@ -1,9 +1,10 @@
 package graft.algos
 
 import graft.{QueryDef, Tables}
+import graft.core.Superstep
+import graft.core.Superstep.PreparedGraph
 import graft.functions.DotProductD.dotD
 import graft.sources.IndexSpec
-import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
@@ -17,27 +18,13 @@ import scala.reflect.ClassTag
   * (ex/pagerank.c, ex/kmeans-kmr.c, ex/phoenix-matrix-multiply.c),
   * re-expressed as Spark iteration with explicit persist/unpersist and
   * periodic lineage truncation — the Spark idiom for KMR's
-  * loop-of-map-reduce jobs. PageRank runs on co-partitioned RDDs, and
-  * k-means (with the IVF quantizer) on one Lloyd kernel over cached
-  * primitive blocks, one job an iteration.
+  * loop-of-map-reduce jobs. PageRank runs on the graph superstep
+  * primitive [[graft.core.Superstep]] (co-partitioned edge blocks and
+  * ranks, one `reduceByKey` a round), and k-means (with the IVF
+  * quantizer) on one Lloyd kernel over cached primitive blocks, one job
+  * an iteration.
   */
 object Iterative {
-
-  /** One partition's edges as three primitive columns: 24 bytes an edge
-    * in the block cache, where boxed `(src, (dst, deg))` tuples would
-    * cost five objects an edge. */
-  final case class EdgeBlock(src: Array[Long], dst: Array[Long], deg: Array[Long])
-
-  /** The persisted graph every PageRank variant consumes. `edges` holds
-    * one [[EdgeBlock]] per partition, hash-partitioned by `src`; `marks`
-    * maps every node id to whether it has an in-edge, under the same
-    * partitioner; `n` counts the nodes. Both RDDs are cached and filled
-    * by the one job that counts `n`, so the (possibly expensive) caller
-    * edge plan is evaluated once however many variants run over it. */
-  final case class PreparedGraph(spark: SparkSession, n: Long,
-      edges: RDD[EdgeBlock], marks: RDD[(Long, Boolean)]) {
-    def unpersist(): Unit = { edges.unpersist(false); marks.unpersist(false) }
-  }
 
   /** Trade-graph edge build (customer → supplier via orders⋈lineitem,
     * ex/pagerank.c's link-list input re-derived from the TPC-H tables) —
@@ -91,62 +78,17 @@ object Iterative {
     * warehouse. The fingerprint covers both source tables. Unlike the
     * O(2000) coPairs set, this table is SF-proportional, so it is NOT
     * localCheckpoint'ed into the block cache at build. The PageRank loop
-    * does not read the bucketed layout: [[prepareGraphDegreed]]
+    * does not read the bucketed layout: [[Superstep.prepare]]
     * hash-partitions the edges by `src` once per call, at the session's
     * parallelism, and caches them as primitive blocks. */
   private[graft] val tradeEdges: IndexSpec = IndexSpec("tradeedges", "tradeedges",
     "src BIGINT, dst BIGINT, deg BIGINT", "src", IndexSpec.Buckets,
     "lineitem, orders", tradeEdgesFp, tradeEdgesDegBuild)
 
-  /** [[prepareGraphDegreed]] over a raw (src, dst) edge frame: each edge
-    * is first annotated with its source's out-degree. */
+  /** [[Superstep.prepare]] over a raw (src, dst) edge frame, each edge
+    * weighted by its source's out-degree. */
   def prepareGraph(edges: DataFrame): PreparedGraph =
-    prepareGraphDegreed(edges.withColumn("deg", count(lit(1)).over(Window.partitionBy("src"))))
-
-  /** Build and cache the [[PreparedGraph]] of an edge frame that carries
-    * the out-degree (`src`, `dst`, `deg`, as the persisted trade-edge
-    * table does). One Spark job: the edges are hash-partitioned by `src`
-    * into `spark.sql.shuffle.partitions` blocks, and the node marks are
-    * folded from those blocks under the same partitioner. Call
-    * [[PreparedGraph.unpersist]] once every consumer has materialized
-    * its result (each variant ends on an eager localCheckpoint, so its
-    * output outlives the cache). */
-  def prepareGraphDegreed(edgesDeg: DataFrame): PreparedGraph = {
-    val spark = edgesDeg.sparkSession
-    val byId = new HashPartitioner(spark.conf.get("spark.sql.shuffle.partitions").toInt)
-    // The coalesce keeps the partitioning's map side at the session's
-    // parallelism: a served table scans one task per bucket (32).
-    val edges = edgesDeg.select(col("src"), col("dst"), col("deg"))
-      .coalesce(byId.numPartitions).queryExecution.toRdd
-      // internal rows, not Rows: no per-edge conversion; the longs are
-      // read before the scan reuses the row
-      .map(r => (r.getLong(0), (r.getLong(1), r.getLong(2))))
-      .partitionBy(byId)
-      .mapPartitions({ it =>
-        val (src, dst, deg) = (mutable.ArrayBuilder.make[Long],
-          mutable.ArrayBuilder.make[Long], mutable.ArrayBuilder.make[Long])
-        it.foreach { case (s, (d, k)) => src += s; dst += d; deg += k }
-        Iterator.single(EdgeBlock(src.result(), dst.result(), deg.result()))
-      }, preservesPartitioning = true)
-      .persist()
-    // The count fills both caches before any superstep reads them (the
-    // eager priming OPTIMIZATION_r16.md validated): the supersteps' union
-    // branches read `marks` every round.
-    val marks = edges
-      .mapPartitions { blocks =>
-        // distinct per partition first: the shuffle's map side then sees
-        // one record per node, not two boxed records per edge
-        val hasIn = mutable.LongMap.empty[Boolean]
-        blocks.foreach { b =>
-          b.src.foreach(hasIn.getOrElseUpdate(_, false))
-          b.dst.foreach(hasIn(_) = true)
-        }
-        hasIn.iterator
-      }
-      .reduceByKey(byId, _ || _)
-      .persist()
-    PreparedGraph(spark, marks.count(), edges, marks)
-  }
+    Superstep.prepare(edges, count(lit(1)).over(Window.partitionBy("src")))
 
   /** PageRank (ex/pagerank.c, damping 0.85): rank mass flows along edges
     * each superstep; see [[supersteps]] for the per-round plan. Lineage
@@ -154,12 +96,8 @@ object Iterative {
     * of iteration count (the 100-iteration-on-100TB safety property).
     * Simplified variant: dangling-node mass is not redistributed
     * (matches the reference's per-edge formulation). */
-  def pageRank(edges: DataFrame, iters: Int, damping: Double = 0.85): DataFrame = {
-    val g = prepareGraph(edges)
-    val out = pageRankOn(g, iters, damping)
-    g.unpersist()
-    out
-  }
+  def pageRank(edges: DataFrame, iters: Int, damping: Double = 0.85): DataFrame =
+    prepareGraph(edges).use(pageRankOn(_, iters, damping))
 
   /** [[pageRank]] over a prepared graph: columns (id, rank). */
   def pageRankOn(g: PreparedGraph, iters: Int, damping: Double = 0.85): DataFrame = {
@@ -186,12 +124,8 @@ object Iterative {
     * <1 femto of mass, so ranks drift low by at most iters*(deg+1)
     * femtos — deterministic, identical on both engines, and irrelevant at
     * ppm precision. */
-  def pageRankExact(edges: DataFrame, iters: Int): DataFrame = {
-    val g = prepareGraph(edges)
-    val out = pageRankExactOn(g, iters)
-    g.unpersist()
-    out
-  }
+  def pageRankExact(edges: DataFrame, iters: Int): DataFrame =
+    prepareGraph(edges).use(pageRankExactOn(_, iters))
 
   /** Femto-rank scale of [[pageRankExact]] and [[pageRankBothOn]]. */
   private final val Scale = 1000000000000000L
@@ -229,45 +163,17 @@ object Iterative {
       .toDF("id", "rank", "r")
   }
 
-  /** The superstep loop all three PageRank variants run (KMR's map →
-    * shuffle → reduce): each round zips edge partition p with rank
-    * partition p — both hash-partitioned by node id, so this is the
-    * src join without a shuffle — and folds `contrib(rank(src), deg)`
-    * per `dst` in the partition; `reduceByKey` sums those partial sums
-    * back into the node partitioner, `update` damps them, and the
+  /** The superstep loop all three PageRank variants run: each round is
+    * one [[Superstep.relax]] of `contrib(rank(src), deg)` along every
+    * edge, summed by `plus` per `dst` and damped by `update`; the
     * constant `noIn` ranks of the nodes without in-edges are unioned on
-    * (a union of two RDDs under one partitioner keeps it). Ranks start
-    * at `init`. A variant passes only its arithmetic.
-    *
-    * Each generation is read exactly once, by the next round, so nothing
-    * is persisted between truncation points: the localCheckpoint + count
-    * every 5 rounds and on the last is the loop's only job. */
+    * (a union of two RDDs under one partitioner keeps it). Ranks start at
+    * `init`. A variant passes only its arithmetic. */
   private def supersteps[R: ClassTag](g: PreparedGraph, iters: Int, init: R, noIn: R,
       contrib: (R, Long) => R, plus: (R, R) => R, update: R => R): RDD[(Long, R)] = {
-    val byId = g.edges.partitioner.get
     val noInRanks = g.marks.filter(!_._2).mapValues(_ => noIn)
-    var ranks = g.marks.mapValues(_ => init)
-    for (i <- 1 to iters) {
-      require(ranks.partitioner.contains(byId),
-        s"ranks partitioned by ${ranks.partitioner}, edges by $byId: the zip would misalign")
-      val sums = g.edges.zipPartitions(ranks) { (blocks, rs) =>
-        val rank = mutable.LongMap.from(rs)
-        val acc = mutable.LongMap.empty[R]
-        blocks.foreach { b =>
-          var j = 0
-          while (j < b.src.length) {
-            val c = contrib(rank(b.src(j)), b.deg(j))
-            acc.update(b.dst(j), acc.get(b.dst(j)).fold(c)(plus(_, c)))
-            j += 1
-          }
-        }
-        acc.iterator
-      }
-      val next = sums.reduceByKey(byId, plus).mapValues(update).union(noInRanks)
-      if (i % 5 == 0 || i == iters) { next.localCheckpoint(); next.count() }
-      ranks = next
-    }
-    ranks
+    Superstep.iterate(g.marks.mapValues(_ => init), iters)(
+      Superstep.relax(g, _, keep = false)(contrib, plus).mapValues(update).union(noInRanks))
   }
 
   /** DuckDB oracle for [[pageRankExact]] over the trade graph: the
@@ -520,10 +426,7 @@ object Iterative {
       // arithmetic, not two executions); the run ends on an eager
       // localCheckpoint, so the shared graph cache can be dropped before
       // the certificate aggregate is materialized.
-      val g = prepareGraphDegreed(tradeEdges(s, d))
-      val both = pageRankBothOn(g, iters = 5)
-      g.unpersist()
-      both
+      Superstep.prepare(tradeEdges(s, d), col("deg")).use(pageRankBothOn(_, iters = 5))
         .agg(count(lit(1)).as("n_nodes"),
           when(max(abs(col("rank") - col("r").cast("double") / 1e15)) <= 1e-9, 1L)
             .otherwise(0L).as("all_close"))
@@ -540,10 +443,7 @@ object Iterative {
     // full DuckDB CTE replay (closing the "iterative float has no
     // oracle" gap the same way kmeans_clusters did).
     QueryDef("pagerank_exact", (s, d) => {
-      val g = prepareGraphDegreed(tradeEdges(s, d))
-      val out = pageRankExactOn(g, iters = 5)
-      g.unpersist()
-      out
+      Superstep.prepare(tradeEdges(s, d), col("deg")).use(pageRankExactOn(_, iters = 5))
         .select(col("id"), col("r").as("rank_fp"))
         .orderBy(desc("rank_fp"), col("id"))
         .limit(100)

@@ -1,6 +1,7 @@
 package graft.llm
 
 import graft.{QueryDef, Tables}
+import graft.core.Superstep
 import graft.sources.IndexSpec
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -868,97 +869,53 @@ object Dedup {
     * (single digits in practice) — independent of component DIAMETER.
     * A chained near-dup family (doc A ~ B ~ C ~ … thousands deep, the
     * templated-spam shape at corpus scale) converges just as fast as a
-    * clique, where the previous min-label propagation needed
-    * O(diameter) supersteps and could hit its cap. Per round: two
-    * shuffled join+aggregate passes, each linear in |edges|; edge text
-    * never moves (ids only). `iters` stays a SAFETY CAP, not a tuning
-    * knob: hitting it before the fixpoint throws (silently returning
-    * split components would make the dedup keep duplicates). */
+    * clique, where min-label propagation needs O(diameter) supersteps.
+    * It runs on the graph superstep primitive ([[Superstep]]) over
+    * adjacency blocks — every node's distinct neighbors, ascending,
+    * keyed under the primitive's partitioner. A round is two gathers
+    * (one shuffle each, linear in |edges|; ids only, edge text never
+    * moves) and one job: the exact fixpoint test, which compares the new
+    * adjacency with the old partition by partition and truncates the
+    * new one. `iters` stays a SAFETY CAP, not a tuning knob: hitting it
+    * before the fixpoint throws (silently returning split components
+    * would make the dedup keep duplicates). */
   def connectedComponents(pairs: DataFrame, iters: Int): DataFrame = {
-    // every input endpoint must come out labeled — remember them before
-    // the star contraction drops self-loops (singleton components)
-    val nodes = pairs.select(explode(array(col("id1"), col("id2"))).as("id"))
-      .distinct().persist()
-    nodes.count()
-    // canonical (larger u → smaller v) orientation, deduped; ONE
-    // evaluation of the (possibly expensive) pairs plan feeds both this
-    // and `nodes` via the persisted parent
-    var edges = pairs.filter(col("id1") =!= col("id2"))
-      .select(greatest(col("id1"), col("id2")).as("u"),
-        least(col("id1"), col("id2")).as("v"))
-      .distinct()
-      // lazy checkpoint + count = ONE materializing job (r16
-      // optimization round): eager localCheckpoint ran a full job and
-      // the count a second pass; with eager=false the count below
-      // computes, caches and truncates in the same job
-      .localCheckpoint(false)
-    var nEdges = edges.count()
-    var converged = nEdges == 0L
-    var it = 0
-    while (!converged && it < iters) {
-      // LARGE-STAR: over the symmetrized adjacency (single evaluation
-      // via explode, not a double-scan union), attach each node a's
-      // strictly-larger neighbors b to m = min(N(a) ∪ {a}).
-      val sym = edges.select(explode(array(
-          struct(col("u").as("a"), col("v").as("b")),
-          struct(col("v").as("a"), col("u").as("b")))).as("e"))
-        .select(col("e.a").as("a"), col("e.b").as("b"))
-      val large = sym
-        .join(sym.groupBy("a").agg(min("b").as("mn")), "a")
-        .filter(col("b") > col("a"))
-        .select(col("b").as("u"), least(col("mn"), col("a")).as("v"))
-      // large is NOT distinct'd (r16 optimization round): duplicates —
-      // (b, m) minted via two different centers a — are bounded by
-      // deg(b) within the round and CANNOT compound across rounds
-      // because `next` below is distinct'd before it becomes the new
-      // edge set; min() under the small-star aggregate is duplicate-
-      // blind, so the fixpoint is unchanged (StarContractionSpec pins
-      // parity). Dropping it removes one full-edge-set Exchange per
-      // round — at corpus scale that is one fewer shuffle of the whole
-      // pair set per contraction round.
-      // SMALL-STAR: attach each node u's smaller neighbors and u itself
-      // to its minimum neighbor m (= min(N_small(u) ∪ {u}) since all
-      // neighbors here are < u); self-loop (m, m) dropped. Output stays
-      // in canonical u > v orientation by construction.
-      val next = large
-        .join(large.groupBy("u").agg(min("v").as("m")), "u")
-        .select(explode(array(
-            struct(col("v").as("x"), col("m").as("m")),
-            struct(col("u").as("x"), col("m").as("m")))).as("e"))
-        .filter(col("e.x") =!= col("e.m"))
-        .select(col("e.x").as("u"), col("e.m").as("v"))
-        .distinct()
-        // two derived plans below (count + anti-join) plus the next
-        // round read this — checkpoint truncates the per-round lineage.
-        // LAZY (r16): the count just below is the materializing action,
-        // so checkpoint+count cost one job per round instead of two
-        .localCheckpoint(false)
-      // exact fixpoint test: both sides are distinct sets, so equal
-      // cardinality plus next ⊆ edges (empty anti-join) ⇒ set equality;
-      // the only fixpoint of large∘small is the min-centered star set
-      val nNext = next.count()
-      converged = nNext == nEdges &&
-        next.join(edges, Seq("u", "v"), "left_anti").isEmpty
-      // the convergence test above was the last reader of this round's
-      // edge set; its localCheckpoint blocks are reclaimed by the
-      // ContextCleaner once the frame is unreachable (Dataset.unpersist
-      // only clears CacheManager entries, so it cannot drop them)
-      edges = next
-      nEdges = nNext
-      it += 1
+    // both orientations of every pair, self-pairs too: every input
+    // endpoint is a node of the prepared graph, so a singleton
+    // component keeps its own label
+    Superstep.prepare(pairs.select(explode(array(
+        struct(col("id1").as("src"), col("id2").as("dst")),
+        struct(col("id2").as("src"), col("id1").as("dst")))).as("e")).select("e.*")).use { g =>
+      import g.spark.implicits._
+      val adj = Superstep.gather(g.edges, g.byId) { (b, emit) =>
+        b.src.indices.foreach(j => if (b.src(j) != b.dst(j)) emit(b.src(j), b.dst(j)))
+      }
+      val stars = Superstep.iterate(adj, iters)({ adj =>
+        // LARGE-STAR: each node a links its strictly-larger neighbors b
+        // to m = min(N(a) ∪ {a})
+        val large = Superstep.gather(adj, g.byId) { case ((a, ns), emit) =>
+          ns.foreach(b => if (b > a) emit(b, math.min(ns(0), a))) }
+        // SMALL-STAR: each node u links its large-star neighbors (all
+        // smaller than u, ascending) and itself to their minimum; both
+        // ends of every new edge hear of it
+        Superstep.gather(large, g.byId) { case ((u, ls), emit) =>
+          (ls :+ u).foreach(x => if (x != ls(0)) { emit(x, ls(0)); emit(ls(0), x) }) }
+      }, until = Some((prev, next) =>
+        // the only fixpoint of large∘small is the min-centered star set
+        Superstep.zip(next, prev) { (ns, ps) =>
+          val p = scala.collection.mutable.LongMap.from(ps)
+          Iterator.single(ns.forall { case (a, xs) =>
+            p.remove(a).exists(java.util.Arrays.equals(xs, _)) } && p.isEmpty)
+        }.reduce(_ && _)))
+      // at the fixpoint a leaf's one neighbor is its star's center, and a
+      // center is the least of its closed neighborhood
+      val out = Superstep.zip(g.marks, stars) { (nodes, ss) =>
+        val star = scala.collection.mutable.LongMap.from(ss)
+        nodes.map { case (id, _) => (id, star.get(id).fold(id)(ns => math.min(ns(0), id))) }
+      }.toDF("id", "comp").localCheckpoint(true)
+      stars.unpersist(false)
+      out
     }
-    require(converged,
-      s"connectedComponents did not converge within $iters rounds — raise iters")
-    // fixpoint edges are stars centered at each component's minimum:
-    // leaf u → center v, every center → itself
-    val labels = edges.select(col("u").as("id"), col("v").as("comp"))
-      .union(edges.select(col("v").as("id"), col("v").as("comp")))
-      .groupBy("id").agg(min("comp").as("comp"))
-    val out = nodes.join(labels, Seq("id"), "left_outer")
-      .select(col("id"), coalesce(col("comp"), col("id")).as("comp"))
-      .localCheckpoint(true)
-    nodes.unpersist(false)
-    out
   }
 
   /** Exact n-gram Jaccard pairs with similarity ≥ `minJ` over an

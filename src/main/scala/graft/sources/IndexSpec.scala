@@ -54,7 +54,7 @@ object IndexSpec {
     * cluster. On a smaller session the count does not shrink: a scan of
     * a served table runs one task per bucket, so an iterative consumer
     * re-partitions the table at the session's parallelism instead
-    * (`Iterative.prepareGraphDegreed` hash-partitions the trade edges by
+    * (`graft.core.Superstep.prepare` hash-partitions the trade edges by
     * `src`). */
   final val Buckets = 32
 

@@ -34,9 +34,16 @@ class GraphSpec extends SparkSuite {
       dist = reached.foldLeft(dist)((m, id) =>
         if (m.contains(id)) m else m + (id -> h.toLong))
     }
-    val out = SparkEntry.queries("bfs_hops")(spark, sfDir).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(out == dist, s"BFS mismatch: engine ${out.size} rows, replay ${dist.size}")
+    // the session's shuffle partition count, then 1 and 3: the edge
+    // blocks and hops are keyed under it, the result must not be
+    Seq(None, Some(1), Some(3)).foreach { parts =>
+      val s = spark.newSession()
+      parts.foreach(p => s.conf.set("spark.sql.shuffle.partitions", p.toLong))
+      val out = SparkEntry.queries("bfs_hops")(s, sfDir).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(out == dist, s"BFS mismatch at $parts shuffle partitions: " +
+        s"engine ${out.size} rows, replay ${dist.size}")
+    }
   }
 
   test("clustering_coeff: corner counts sum to 3x the triangle total; coeffs in [0, 1000]") {

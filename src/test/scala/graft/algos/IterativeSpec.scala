@@ -1,6 +1,7 @@
 package graft.algos
 
 import graft.SparkSuite
+import graft.core.Superstep
 import org.apache.spark.sql.functions._
 
 class IterativeSpec extends SparkSuite {
@@ -142,7 +143,7 @@ class IterativeSpec extends SparkSuite {
   }
 
   test("served trade graph: cached edges sized to the session, exact ranks match the inline build") {
-    val g = Iterative.prepareGraphDegreed(Iterative.tradeEdges.fresh(spark, sfDir))
+    val g = Superstep.prepare(Iterative.tradeEdges.fresh(spark, sfDir), col("deg"))
     val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
     // the served table is bucketed 32 ways; the loop's cached copy must not be
     val cached = g.edges.getNumPartitions
@@ -156,31 +157,13 @@ class IterativeSpec extends SparkSuite {
   }
 
   test("served trade graph: one preparation job, then one superstep job plus the collect") {
-    import java.util.concurrent.atomic.AtomicInteger
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
     val served = Iterative.tradeEdges.fresh(spark, sfDir)
-    val jobs = scala.collection.concurrent.TrieMap.empty[String, AtomicInteger]
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .foreach(g => jobs.getOrElseUpdate(g, new AtomicInteger).incrementAndGet())
-    }
-    def jobsIn[T](group: String)(body: => T): (T, Int) = {
-      sc.setJobGroup(group, group)
-      val out = try body finally sc.clearJobGroup()
-      org.apache.spark.ListenerBusDrain(sc)
-      (out, jobs.get(group).fold(0)(_.get))
-    }
-    sc.addSparkListener(listener)
-    try {
-      val (g, prep) = jobsIn("pagerank-prepare")(Iterative.prepareGraphDegreed(served))
-      val (rows, loop) = jobsIn("pagerank-supersteps")(Iterative.pageRankExactOn(g, iters = 5).collect())
-      g.unpersist()
-      assert(rows.length.toLong == g.n)
-      assert(prep <= 1, s"preparation ran $prep jobs")
-      assert(loop <= 2, s"5 supersteps and the collect ran $loop jobs")
-    } finally sc.removeSparkListener(listener)
+    val (g, prep) = jobsIn("pagerank-prepare")(Superstep.prepare(served, col("deg")))
+    val (rows, loop) = jobsIn("pagerank-supersteps")(Iterative.pageRankExactOn(g, iters = 5).collect())
+    g.unpersist()
+    assert(rows.length.toLong == g.n)
+    assert(prep <= 1, s"preparation ran $prep jobs")
+    assert(loop <= 2, s"5 supersteps and the collect ran $loop jobs")
   }
 
   test("exact ranks do not depend on the shuffle partition count") {

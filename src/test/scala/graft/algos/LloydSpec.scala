@@ -126,33 +126,15 @@ class LloydSpec extends SparkSuite {
   }
 
   test("one job fills the cache and seeds, then one job an iteration") {
-    import java.util.concurrent.atomic.AtomicInteger
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val jobs = scala.collection.concurrent.TrieMap.empty[String, AtomicInteger]
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .foreach(g => jobs.getOrElseUpdate(g, new AtomicInteger).incrementAndGet())
-    }
-    def jobsIn[T](group: String)(body: => T): (T, Int) = {
-      sc.setJobGroup(group, group)
-      val out = try body finally sc.clearJobGroup()
-      org.apache.spark.ListenerBusDrain(sc)
-      (out, jobs.get(group).fold(0)(_.get))
-    }
     val build = Iterative.defs.find(_.name == "kmeans_clusters").get.fn
     val v = embeddings(spark, sfDir).withColumnRenamed("id", "vec_id")
     build(spark, sfDir) // loads the table's metadata outside the count
-    sc.addSparkListener(listener)
-    try {
-      val (_, kmeans) = jobsIn("kmeans-build")(build(spark, sfDir))
-      assert(kmeans <= 6, s"kmeans_clusters build ran $kmeans jobs")
-      val (_, count) = jobsIn("quantizer-count")(v.count())
-      val (cents, quantizer) = jobsIn("quantizer")(AnnOps.quantizer(v))
-      assert(cents.nonEmpty)
-      assert(quantizer - count <= 1 + AnnOps.LloydIters,
-        s"quantizer training ran ${quantizer - count} jobs after the count")
-    } finally sc.removeSparkListener(listener)
+    val (_, kmeans) = jobsIn("kmeans-build")(build(spark, sfDir))
+    assert(kmeans <= 6, s"kmeans_clusters build ran $kmeans jobs")
+    val (_, count) = jobsIn("quantizer-count")(v.count())
+    val (cents, quantizer) = jobsIn("quantizer")(AnnOps.quantizer(v))
+    assert(cents.nonEmpty)
+    assert(quantizer - count <= 1 + AnnOps.LloydIters,
+      s"quantizer training ran ${quantizer - count} jobs after the count")
   }
 }

@@ -1,0 +1,64 @@
+package graft.core
+
+import graft.{SparkEntry, SparkSuite}
+import graft.llm.Dedup
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.functions._
+
+/** Job counts and cache hygiene of the graph superstep loops: PageRank,
+  * bfs_hops and connected components. */
+class SuperstepSpec extends SparkSuite {
+
+  private def lineage(rdd: RDD[_]): Set[Int] =
+    rdd.dependencies.map(d => lineage(d.rdd)).foldLeft(Set(rdd.id))(_ ++ _)
+
+  test("the graph gates leave no edge, node or adjacency RDD cached: only their truncated output") {
+    val sc = spark.sparkContext
+    Seq("bfs_hops", "dedup_clusters", "pagerank_exact").foreach { name =>
+      val build = SparkEntry.queries(name)
+      build(spark, sfDir).collect() // session memos and served indexes fill here
+      val before = sc.getPersistentRDDs.keySet
+      val out = build(spark, sfDir)
+      val left = sc.getPersistentRDDs.keySet -- before
+      val stray = left -- lineage(out.queryExecution.toRdd)
+      assert(stray.isEmpty, s"$name left ${stray.map(sc.getPersistentRDDs)} cached")
+    }
+  }
+
+  test("min-plus rounds: one loop job at any superstep count up to the truncation cadence") {
+    import spark.implicits._
+    // the path 0 - 1 - … - 49, both orientations
+    val g = Superstep.prepare((0L until 49L).flatMap(i => Seq((i, i + 1), (i + 1, i)))
+      .toDF("src", "dst"))
+    try {
+      (1 to 5).foreach { k =>
+        val seed = g.marks.filter(_._1 == 0L).mapValues(_ => 0L)
+        val (hops, jobs) = jobsIn(s"minplus-$k")(Superstep.iterate(seed, k)(
+          Superstep.relax(g, _, keep = true)(_ + _, math.min)))
+        assert(jobs == 1, s"$k rounds ran $jobs jobs")
+        assert(hops.collect().toMap == (0L to k.toLong).map(i => i -> i).toMap)
+        hops.unpersist(false)
+      }
+    } finally g.unpersist()
+  }
+
+  test("bfs_hops builds in at most 4 jobs") {
+    val build = SparkEntry.queries("bfs_hops")
+    build(spark, sfDir) // the session's edge memo fills outside the count
+    val (_, jobs) = jobsIn("bfs-build")(build(spark, sfDir))
+    assert(jobs <= 4, s"bfs_hops build ran $jobs jobs")
+  }
+
+  test("connectedComponents runs at most rounds + 3 jobs; one round short of the fixpoint throws") {
+    import spark.implicits._
+    val pairs = (0L until 199L).map(i => (i, i + 1)).toDF("id1", "id2")
+    // the least cap that reaches the fixpoint is the round count
+    val rounds = (1 to 15).find { cap =>
+      try { Dedup.connectedComponents(pairs, cap); true }
+      catch { case _: IllegalArgumentException => false }
+    }.get
+    val (comp, jobs) = jobsIn("cc")(Dedup.connectedComponents(pairs, iters = 30))
+    assert(jobs <= rounds + 3, s"$rounds rounds ran $jobs jobs")
+    assert(comp.select(max("comp")).head.getLong(0) == 0L)
+  }
+}

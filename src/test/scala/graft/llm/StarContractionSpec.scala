@@ -2,14 +2,10 @@ package graft.llm
 
 import graft.SparkSuite
 
-/** Focused pin for the r16 optimization of
-  * [[Dedup.connectedComponents]]: the large-star output is no longer
-  * distinct'd (one less full-edge-set Exchange per round), which is
-  * only sound if duplicate (u, v) rows entering the small-star pass
-  * can never change the fixpoint labels. Parity here is against a
-  * sequential union-find on graphs chosen to maximize in-round
-  * duplicate minting (hubs joined to chains, duplicate input pairs,
-  * self-loops). */
+/** Label parity of [[Dedup.connectedComponents]] with a sequential
+  * union-find, on graphs chosen to maximize in-round duplicate minting
+  * (hubs joined to chains, duplicate input pairs, self-loops), at the
+  * session's shuffle partition count and at 1 and 3. */
 class StarContractionSpec extends SparkSuite {
 
   private def unionFind(edges: Seq[(Long, Long)]): Map[Long, Long] = {
@@ -30,10 +26,20 @@ class StarContractionSpec extends SparkSuite {
     }.toMap
   }
 
+  /** The labels, which must not depend on the shuffle partition count
+    * the adjacency blocks are keyed under: the session's, 1 and 3. */
   private def ccOf(edges: Seq[(Long, Long)], iters: Int): Map[Long, Long] = {
-    import spark.implicits._
-    Dedup.connectedComponents(edges.toDF("id1", "id2"), iters)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+    val runs = Seq(None, Some(1), Some(3)).map { parts =>
+      val s = spark.newSession()
+      parts.foreach(p => s.conf.set("spark.sql.shuffle.partitions", p.toLong))
+      import s.implicits._
+      Dedup.connectedComponents(edges.toDF("id1", "id2"), iters)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+    }
+    runs.tail.zip(Seq(1, 3)).foreach { case (got, p) =>
+      assert(got == runs.head, s"$p shuffle partitions")
+    }
+    runs.head
   }
 
   test("duplicate-heavy hub graph matches a sequential union-find") {
