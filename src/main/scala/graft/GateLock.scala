@@ -8,8 +8,9 @@ import java.nio.file.{Files, Path, Paths, StandardOpenOption}
   * until it died AND polluted the bench window). Bench, Verify and
   * tools/check_correctness.py all serialize on one `.graft_gate.lock`
   * file in the repo root: atomic create-if-absent to acquire, bounded
-  * wait (15 min) on a live holder, steal if the holder looks dead
-  * (mtime > 30 min — holders re-touch the file as they make progress).
+  * wait (15 min) on a live holder, steal if the holder is dead: its
+  * recorded pid names no live process, or the file's mtime is > 30 min
+  * old (holders re-touch the file as they make progress).
   * Best-effort by design: on wait timeout the caller PROCEEDS with a
   * stderr warning — a partially-contended run beats an empty artifact,
   * and a leaked lock can never wedge the round. */
@@ -43,20 +44,17 @@ object GateLock {
       } catch {
         case _: java.nio.file.FileAlreadyExistsException =>
           try {
-            val age = System.currentTimeMillis() -
-              Files.getLastModifiedTime(lockPath).toMillis
-            if (age > StaleMs) {
+            if (stale(lockPath)) {
               // Steal via atomic rename (ADVICE r11 TOCTOU): exactly one
               // waiter wins the rename, so a FRESH lock another waiter
               // created between our stat and our delete can never be
               // removed by mistake. If the stolen file turns out fresh
-              // after all (the holder touched it mid-race), put it back.
+              // after all (the holder touched it mid-race, or a live
+              // holder re-created it), put it back.
               val stolen = Paths.get(
                 s".graft_gate.lock.steal.${ProcessHandle.current().pid()}")
               Files.move(lockPath, stolen)
-              val stolenAge = System.currentTimeMillis() -
-                Files.getLastModifiedTime(stolen).toMillis
-              if (stolenAge > StaleMs) Files.deleteIfExists(stolen)
+              if (stale(stolen)) Files.deleteIfExists(stolen)
               else try Files.move(stolen, lockPath)
               catch {
                 // ADVICE r12: another waiter re-created the lock after
@@ -75,6 +73,18 @@ object GateLock {
     System.err.println(s"[gatelock] $who proceeding despite busy $lockPath")
     false
   }
+
+  private def stale(lock: Path): Boolean =
+    stale(new String(Files.readAllBytes(lock)),
+      System.currentTimeMillis() - Files.getLastModifiedTime(lock).toMillis)
+
+  /** Whether a lock file holding `content` ("<who> <pid>") and last
+    * touched `ageMs` ago may be stolen: untouched past the stale window,
+    * or its pid names no live process. A content without a pid (a holder
+    * between its create and its write) is judged by age alone. */
+  private[graft] def stale(content: String, ageMs: Long): Boolean =
+    ageMs > StaleMs || content.trim.split("\\s+").lastOption.flatMap(_.toLongOption)
+      .exists(pid => ProcessHandle.of(pid).filter(_.isAlive).isEmpty)
 
   /** Liveness heartbeat: holders call this as they complete work units
     * so a long (but live) run is never stolen mid-flight. Owner-gated

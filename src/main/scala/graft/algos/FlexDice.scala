@@ -1,6 +1,7 @@
 package graft.algos
 
 import graft.{Memo, QueryDef, Tables}
+import graft.core.Truncate
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -143,7 +144,7 @@ object FlexDice {
     * analysis (cells / outliers / clusters), and phase 1 is
     * deterministic, so serving the checkpointed (terminal, noise)
     * frames once per corpus fingerprint is bit-identical to
-    * recomputing. Values are eager localCheckpoints whose blocks the
+    * recomputing. Values are eager cuts ([[Truncate]]) whose blocks the
     * ContextCleaner reclaims once the entry is dropped. */
   private val dice = new Memo[String, (DataFrame, DataFrame)](8)
 
@@ -191,10 +192,9 @@ object FlexDice {
     *   SPARSE terminal; terminal cells are prefix-disjoint (everything
     *   above a terminal is MIDDLE), so the single ancestor⋈sparse join
     *   yields each old (id, level) row exactly once. */
-  private def phase1(s: SparkSession, d: String): (DataFrame, DataFrame) = {
-    import s.implicits._
-    val p = paths(s, d).persist()
-    try {
+  private def phase1(s: SparkSession, d: String): (DataFrame, DataFrame) =
+    Truncate.held(paths(s, d)) { p =>
+      import s.implicits._
       val ancStructs = (0 until NLayers).map(l =>
         struct(lit(l.toLong).as("level"), col(s"cx$l").as("cx"),
           col(s"cy$l").as("cy")))
@@ -255,10 +255,8 @@ object FlexDice {
           col("c.cy").as("cy"))
         .join(broadcast(sparseDf), Seq("level", "cx", "cy"))
         .select(col("id"), col("level"))
-      // eager: lineage over the persisted paths must not outlive it
-      (termDf.localCheckpoint(true), noise.localCheckpoint(true))
-    } finally p.unpersist(false)
-  }
+      (Truncate(termDf), Truncate(noise))
+    }
 
   /** Dense cells with their packed O(1) cell key. */
   private def denseCells(term: DataFrame): DataFrame =
@@ -478,8 +476,7 @@ object FlexDice {
     // distributed star contraction untouched.
     QueryDef("flexdice_clusters", (s, d) => {
       val (term, _) = phase1Cached(s, d)
-      val dense = denseCells(term).persist()
-      try {
+      Truncate.over(denseCells(term)) { dense =>
         val keys = dense.select("key").collect().map(_.getLong(0))
         require(keys.length <= MaxCells,
           s"${keys.length} dense cells exceed the $MaxCells-cell grid")
@@ -506,8 +503,7 @@ object FlexDice {
           .groupBy(col("comp").as("cluster_id"))
           .agg(count(lit(1)).as("n_cells"), sum("n_objects").as("n_objects"))
           .orderBy("cluster_id")
-          .localCheckpoint(true)
-      } finally dense.unpersist(false)
+      }
     }, Some(clustersOracle)),
   )
 }

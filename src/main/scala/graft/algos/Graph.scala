@@ -1,7 +1,7 @@
 package graft.algos
 
 import graft.{Memo, QueryDef, Tables}
-import graft.core.Superstep
+import graft.core.{Superstep, Truncate}
 import graft.sources.IndexSpec
 import org.apache.spark.sql.functions._
 
@@ -40,7 +40,7 @@ object Graph {
     *   SparkSession on the same warehouse reads the table back instead
     *   of re-running the self-join — the "materialize the derived edge
     *   table once" shape SURVEY §9 prescribes;
-    * - SESSION fast path: the table read is localCheckpoint'ed into the
+    * - SESSION fast path: the table read is cut ([[Truncate]]) into the
     *   block cache per (session, dir, lineitem stamp), so the
     *   four-to-five gates per session share one tiny in-memory scan and
     *   skip repeated fingerprint checks. */
@@ -49,7 +49,7 @@ object Graph {
 
   private def coPairs(s: org.apache.spark.sql.SparkSession, d: String) =
     sessionPairs((s, d), Tables.fsStamp(s, d, "lineitem"))(
-      coPairsTable.fresh(s, d).localCheckpoint(true))
+      Truncate(coPairsTable.fresh(s, d)))
 
   /** The persisted edge table. 4 buckets, not [[IndexSpec.Buckets]]: it
     * holds at most 2000 rows (the global top-2000), so more buckets only

@@ -1,7 +1,7 @@
 package graft.algos
 
 import graft.{QueryDef, Tables}
-import graft.core.Superstep
+import graft.core.{Superstep, Truncate}
 import graft.core.Superstep.PreparedGraph
 import graft.functions.DotProductD.dotD
 import graft.sources.IndexSpec
@@ -77,7 +77,7 @@ object Iterative {
     * from disk afterwards, even by a brand-new SparkSession on the same
     * warehouse. The fingerprint covers both source tables. Unlike the
     * O(2000) coPairs set, this table is SF-proportional, so it is NOT
-    * localCheckpoint'ed into the block cache at build. The PageRank loop
+    * cut into the block cache at build. The PageRank loop
     * does not read the bucketed layout: [[Superstep.prepare]]
     * hash-partitions the edges by `src` once per call, at the session's
     * parallelism, and caches them as primitive blocks. */
@@ -315,8 +315,7 @@ object Iterative {
     * OPTIMIZATION_r17.md): the cost at gate scale is the per-iteration
     * job, not the narrow compute. */
   private[graft] def lloyd(vecs: DataFrame, k: Int, iters: Int, metric: Metric)
-      : (Array[(Long, Array[Double])], Seq[Double]) = {
-    val blocks = vecBlocks(vecs, k).persist()
+      : (Array[(Long, Array[Double])], Seq[Double]) = Truncate.held(vecBlocks(vecs, k)) { blocks =>
     var cents = blocks.flatMap(_.seeds).collect().sortBy(_._1).take(k)
     val history = for (_ <- 1 to iters if cents.nonEmpty) yield {
       val table = vecs.sparkSession.sparkContext.broadcast(Centroids(cents, metric))
@@ -337,7 +336,6 @@ object Iterative {
       }
       stats.inertia
     }
-    blocks.unpersist(false)
     (cents, history)
   }
 
@@ -423,8 +421,8 @@ object Iterative {
       // table (built once per corpus — see tradeEdges).
       // Both arithmetics ride ONE fused pipeline (one kernel + one reduce
       // per superstep, late round 9 — the certificate compares the
-      // arithmetic, not two executions); the run ends on an eager
-      // localCheckpoint, so the shared graph cache can be dropped before
+      // arithmetic, not two executions); the run ends on a truncated
+      // generation, so the shared graph cache can be dropped before
       // the certificate aggregate is materialized.
       Superstep.prepare(tradeEdges(s, d), col("deg")).use(pageRankBothOn(_, iters = 5))
         .agg(count(lit(1)).as("n_nodes"),

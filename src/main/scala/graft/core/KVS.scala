@@ -3,6 +3,7 @@ package graft.core
 import scala.reflect.ClassTag
 
 import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions.col
 
@@ -116,33 +117,14 @@ final class KVS[K, V](val ds: Dataset[(K, V)]) extends Serializable {
 
   /** kmr_scan_on_values (src/kmrmoreops.c:931-972): NON-inclusive prefix
     * scan of values under an associative `plus`, in the current global
-    * order. Carry across partitions is O(numPartitions) on the driver —
-    * KMR's rank0 sequential carry (kmr_scan_across_ranks_sequentially).
-    * The input is cached during the two passes so both see identical
-    * partitioning, then unpersisted. */
+    * order, on the two-phase kernel [[KVS.scan]]. The input is cached so
+    * both phases see identical partitioning. */
   def scanOnValues(zero: V)(plus: (V, V) => V)(
-      implicit e: Encoder[(K, V)], ctK: ClassTag[K], ctV: ClassTag[V]): KVS[K, V] = {
-    val cached = ds.persist()
-    try {
-      val partSums = cached.rdd
-        .mapPartitionsWithIndex { (i, it) =>
-          Iterator((i, it.foldLeft(zero)((a, kv) => plus(a, kv._2))))
-        }
-        .collect().sortBy(_._1).map(_._2)
-      val offsets = partSums.scanLeft(zero)(plus)
-      val offB = spark.sparkContext.broadcast(offsets)
-      val scanned = cached.rdd.mapPartitionsWithIndex { (i, it) =>
-        var acc = offB.value(i)
-        it.map { case (k, v) => val pre = acc; acc = plus(acc, v); (k, pre) }
-      }
-      // eager localCheckpoint: materializes before the input cache drops
-      // AND truncates lineage, and its blocks are released by the
-      // ContextCleaner once the Dataset is unreferenced (a plain persist
-      // here would pin cache for the session's lifetime with no handle
-      // for the caller to unpersist).
-      new KVS(spark.createDataset(scanned)(e).localCheckpoint(true))
-    } finally cached.unpersist(false)
-  }
+      implicit e: Encoder[(K, V)], ctK: ClassTag[K], ctV: ClassTag[V]): KVS[K, V] =
+    new KVS(Truncate.over(ds) { cached =>
+      val scanned = KVS.scan(cached.rdd, zero)(_._2, plus) { case ((k, _), pre) => (k, pre) }
+      spark.createDataset(scanned)(e)
+    })
 
   /** Grand total under `plus` — the companion value kmr_scan_on_values
     * also returns on every rank. */
@@ -341,6 +323,25 @@ object KVS {
       implicit e: Encoder[(K, V)]): KVS[K, V] = {
     val base = spark.createDataset(pairs)(e)
     new KVS(if (numPartitions > 0) base.repartition(numPartitions) else base)
+  }
+
+  /** KMR's scan (kmr_scan_on_values, src/kmrmoreops.c:931-972) over an
+    * RDD in partition order: `emit(r, pre)` for every record `r`, where
+    * `pre` is the NON-inclusive prefix of `value` under `plus`. Phase 1
+    * folds each partition and collects the sums — O(numPartitions) on
+    * the driver, KMR's rank0 sequential carry
+    * (kmr_scan_across_ranks_sequentially); phase 2 re-walks each
+    * partition from its carry-in. `rows` is read by both phases: cache it
+    * so they see the same records. */
+  private[graft] def scan[T, V: ClassTag, U: ClassTag](rows: RDD[T], zero: V)(
+      value: T => V, plus: (V, V) => V)(emit: (T, V) => U): RDD[U] = {
+    val sums = rows.mapPartitions(it => Iterator(it.foldLeft(zero)((a, r) => plus(a, value(r)))))
+      .collect()
+    val carry = rows.sparkContext.broadcast(sums.scanLeft(zero)(plus))
+    rows.mapPartitionsWithIndex { (i, it) =>
+      var acc = carry.value(i)
+      it.map { r => val pre = acc; acc = plus(acc, value(r)); emit(r, pre) }
+    }
   }
 
   /** Lift a 2-column DataFrame-shaped Dataset. */

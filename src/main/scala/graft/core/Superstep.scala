@@ -22,8 +22,8 @@ import scala.reflect.ClassTag
   *   next state;
   * - the truncation cadence and the iteration cap ([[iterate]]). A
   *   generation is read only by the next round, so none is persisted
-  *   between truncation points, and each truncation point is
-  *   unpersisted once the next one is filled.
+  *   between truncation points; a truncation point is a
+  *   [[Truncate.mark]], unpersisted once the next one is filled.
   */
 object Superstep {
 
@@ -132,7 +132,7 @@ object Superstep {
     * many as it takes for `until(prev, next)` to hold — at most `cap`,
     * past which it throws, since a loop cut short returns a wrong answer,
     * never a rougher one. A fixed loop truncates its lineage every 5
-    * rounds and after the last (a localCheckpoint and the count that
+    * rounds and after the last (a [[Truncate.mark]] and the count that
     * fills it, the loop's only job), so the plan stays O(1) deep at any
     * iteration count; a tested loop truncates every round, filled by the
     * test's job. Returns the last generation, truncated. */
@@ -143,7 +143,7 @@ object Superstep {
       i += 1
       val next = round(s)
       if (until.isDefined || i % 5 == 0 || i == cap) {
-        next.localCheckpoint()
+        Truncate.mark(next)
         done = until.fold { next.count(); false }(_(s, next))
         cut.foreach(_.unpersist(false))
         cut = Some(next)

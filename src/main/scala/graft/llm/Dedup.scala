@@ -1,7 +1,7 @@
 package graft.llm
 
 import graft.{QueryDef, Tables}
-import graft.core.Superstep
+import graft.core.{Superstep, Truncate}
 import graft.sources.IndexSpec
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -181,11 +181,11 @@ object Dedup {
     * fingerprint (alignment-independent, unlike stride sampling). */
   def substringPairs(documents: org.apache.spark.sql.DataFrame,
       dfCap: Long): org.apache.spark.sql.DataFrame =
-    // fingerprints materialized once (eager localCheckpoint): the df
-    // stop-list and both self-join sides otherwise each re-run the
-    // whole winnow expression over the corpus — 3 full winnow passes
-    // per query (same duplicated-subtree class as [[jaccardPairs]])
-    substringPairsFrom(winnowFps(documents).localCheckpoint(true), dfCap)
+    // fingerprints materialized once (an eager cut): the df stop-list
+    // and both self-join sides otherwise each re-run the whole winnow
+    // expression over the corpus — 3 full winnow passes per query (same
+    // duplicated-subtree class as [[jaccardPairs]])
+    substringPairsFrom(Truncate(winnowFps(documents)), dfCap)
 
   /** The winnow pipeline up to distinct (doc_id, fp) — the front half
     * of [[substringPairs]], also materialized verbatim by the persisted
@@ -753,11 +753,11 @@ object Dedup {
       // memoized (ADVICE r13): the banding-mode choice needs n once
       // per corpus, not a full count scan per gate/bench invocation
       val nDocs = Tables.cachedCount(s, d, "documents")
-      // signatures materialized once (eager localCheckpoint): the band
-      // self-join otherwise re-runs the explode + 60-vote aggregate
-      // over the corpus on each side (same duplicated-subtree class as
+      // signatures materialized once (an eager cut): the band self-join
+      // otherwise re-runs the explode + 60-vote aggregate over the
+      // corpus on each side (same duplicated-subtree class as
       // [[minhashPairs]])
-      simhashPairsFromSigs(simhashSigs(s, d).localCheckpoint(true),
+      simhashPairsFromSigs(Truncate(simhashSigs(s, d)),
         combos = nDocs > SimComboThreshold)
     }, Some(
       s"""WITH toks AS (SELECT doc_id, $normSql AS w FROM documents),
@@ -909,12 +909,12 @@ object Dedup {
         }.reduce(_ && _)))
       // at the fixpoint a leaf's one neighbor is its star's center, and a
       // center is the least of its closed neighborhood
-      val out = Superstep.zip(g.marks, stars) { (nodes, ss) =>
-        val star = scala.collection.mutable.LongMap.from(ss)
-        nodes.map { case (id, _) => (id, star.get(id).fold(id)(ns => math.min(ns(0), id))) }
-      }.toDF("id", "comp").localCheckpoint(true)
-      stars.unpersist(false)
-      out
+      Truncate.over(stars) { stars =>
+        Superstep.zip(g.marks, stars) { (nodes, ss) =>
+          val star = scala.collection.mutable.LongMap.from(ss)
+          nodes.map { case (id, _) => (id, star.get(id).fold(id)(ns => math.min(ns(0), id))) }
+        }.toDF("id", "comp")
+      }
     }
   }
 
@@ -930,7 +930,7 @@ object Dedup {
     // NOT materialized (r16 optimization round): the static plan shows
     // the shingle subtree 12×, but AQE's runtime exchange reuse dedupes
     // the identical self-join sides, and a same-window A/B of an eager
-    // localCheckpoint here measured FLAT at 32 cores and WORSE at 8
+    // cut here measured FLAT at 32 cores and WORSE at 8
     // (2.3→2.5 min-of-5 at sf0.1) — the materialization barrier costs
     // more than the residual duplicate scans. See OPTIMIZATION_r16.md.
     // NOT restructured to sizes-riding slim posting rows (r17): three
@@ -939,7 +939,7 @@ object Dedup {
     // in the self-join condition + sizes folded through the pair
     // aggregate" cut sh_read 31.7→13-18 MB (−42..59%) but ran 1.93→2.28
     // (bare), 2.30 (pinned-N gram repartition — AQE re-planned the
-    // subtree and dropped it), and 2.30 (repartition+localCheckpoint,
+    // subtree and dropped it), and 2.30 (repartition + eager cut,
     // 110 tasks): this shape tokenizes ONCE into one exchange that AQE
     // reuse already fans to every consumer, so the byte cut only buys a
     // barrier job + block writes that cost ~0.35 s locally. The
@@ -955,7 +955,20 @@ object Dedup {
     * re-aggregation of the posting list. */
   def jaccardPairsFrom(grams: DataFrame, minJ: Double, dfCap: Long,
       sizesOpt: Option[DataFrame] = None,
-      dfOpt: Option[DataFrame] = None): DataFrame = {
+      dfOpt: Option[DataFrame] = None): DataFrame =
+    postingPairs(grams, dfCap, sizesOpt, dfOpt)
+      .withColumn("jaccard",
+        round(col("inter").cast("double") / (col("n1") + col("n2") - col("inter")), 6))
+      .filter(col("jaccard") >= minJ)
+      .select("id1", "id2", "jaccard")
+      .orderBy("id1", "id2")
+
+  /** The df-capped posting self-join behind [[jaccardPairsFrom]] and
+    * [[containmentPairsFrom]]: (id1, id2, inter, n1, n2) for every doc
+    * pair sharing a kept gram, `inter` counting the kept grams they
+    * share and n1, n2 their FULL shingle counts. */
+  private def postingPairs(grams: DataFrame, dfCap: Long,
+      sizesOpt: Option[DataFrame], dfOpt: Option[DataFrame]): DataFrame = {
     val sizes = sizesOpt.getOrElse(
       grams.groupBy("doc_id").agg(count(lit(1)).as("n")))
     // df stop list: served callers pass the persisted (gram, df) stat
@@ -965,18 +978,12 @@ object Dedup {
       dfOpt.getOrElse(grams.groupBy("gram").agg(count(lit(1)).as("df")))
         .filter(col("df") <= dfCap).select("gram"),
       "gram")
-    val pairs = kept.as("a")
+    kept.as("a")
       .join(kept.as("b"), col("a.gram") === col("b.gram") && col("a.doc_id") < col("b.doc_id"))
       .groupBy(col("a.doc_id").as("id1"), col("b.doc_id").as("id2"))
       .agg(count(lit(1)).as("inter"))
-    pairs
       .join(sizes.select(col("doc_id").as("id1"), col("n").as("n1")), "id1")
       .join(sizes.select(col("doc_id").as("id2"), col("n").as("n2")), "id2")
-      .withColumn("jaccard",
-        round(col("inter").cast("double") / (col("n1") + col("n2") - col("inter")), 6))
-      .filter(col("jaccard") >= minJ)
-      .select("id1", "id2", "jaccard")
-      .orderBy("id1", "id2")
   }
 
   /** Prefix-filtered exact-Jaccard pairs — the AllPairs/PPJoin family
@@ -1030,7 +1037,7 @@ object Dedup {
       .select(col("doc_id"), col("n"),
         expr("transform(sg, x -> x.h)").as("gs"),
         size(col("sg")).as("nk"))
-      // NOT materialized: an eager localCheckpoint here measured WORSE
+      // NOT materialized: an eager cut here measured WORSE
       // at both 32 and 8 cores (1.9→2.4 / 2.1→2.7 min, same-window A/B
       // at sf0.1) — the barrier outweighs the duplicate-subtree cost
       // AQE's runtime exchange reuse already mitigates
@@ -1090,25 +1097,12 @@ object Dedup {
   /** [[containmentPairs]] over an explicit (doc_id, gram) frame. */
   def containmentPairsFrom(grams: DataFrame, minMilli: Long, dfCap: Long,
       sizesOpt: Option[DataFrame] = None,
-      dfOpt: Option[DataFrame] = None): DataFrame = {
-    val sizes = sizesOpt.getOrElse(
-      grams.groupBy("doc_id").agg(count(lit(1)).as("n")))
-    val kept = grams.join(
-      dfOpt.getOrElse(grams.groupBy("gram").agg(count(lit(1)).as("df")))
-        .filter(col("df") <= dfCap).select("gram"),
-      "gram")
-    val pairs = kept.as("a")
-      .join(kept.as("b"), col("a.gram") === col("b.gram") && col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("id1"), col("b.doc_id").as("id2"))
-      .agg(count(lit(1)).as("inter"))
-    pairs
-      .join(sizes.select(col("doc_id").as("id1"), col("n").as("n1")), "id1")
-      .join(sizes.select(col("doc_id").as("id2"), col("n").as("n2")), "id2")
+      dfOpt: Option[DataFrame] = None): DataFrame =
+    postingPairs(grams, dfCap, sizesOpt, dfOpt)
       .withColumn("c_milli", expr("(1000 * inter) div least(n1, n2)"))
       .filter(col("c_milli") >= minMilli)
       .select("id1", "id2", "n1", "n2", "c_milli")
       .orderBy("id1", "id2")
-  }
 
   /** Per-doc 64-long MinHash signatures. Each shingle is hashed ONCE
     * (two independent md5-portable hashes); the 64 permutations are the
@@ -1308,7 +1302,7 @@ object Dedup {
     * recall spec. */
   def minhashPairs(s: SparkSession, d: String, est: Double): DataFrame = {
     // sig NOT materialized — AQE reuses the identical self-join-side
-    // exchanges at runtime; an eager localCheckpoint A/B'd flat at both
+    // exchanges at runtime; an eager cut A/B'd flat at both
     // 8 and 32 cores (OPTIMIZATION_r16.md)
     val sig = minhashSigs(s, d)
     // band key = the 4 signature values themselves (array equality join):

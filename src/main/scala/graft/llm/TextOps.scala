@@ -1,6 +1,7 @@
 package graft.llm
 
 import graft.{QueryDef, Tables}
+import graft.core.Truncate
 import org.apache.spark.sql.functions._
 
 /** Text-analysis operators for training-data pipelines: corpus stats,
@@ -326,15 +327,14 @@ object TextOps {
     // provably never fires at test scale and the oracle (which replays
     // the same guard) stays hash-identical to the uncapped form.
     QueryDef("fuzzy_pairs", (s, d) => {
-      val docs = Tables.load(s, d, "documents")
+      // materialized once (an eager cut): the block-cap aggregate and
+      // BOTH pair-join sides consume this projection, and the
+      // normalization regex is the expensive part — unmaterialized, it
+      // ran 4× per query
+      val docs = Truncate(Tables.load(s, d, "documents")
         .select(col("doc_id"),
           substring(TextNorm.normText, 1, 32).as("prefix"),
-          TextNorm.toks.getItem(0).as("blk"))
-        // materialized once (eager localCheckpoint): the block-cap
-        // aggregate and BOTH pair-join sides consume this projection,
-        // and the normalization regex is the expensive part —
-        // unmaterialized, it ran 4× per query
-        .localCheckpoint(true)
+          TextNorm.toks.getItem(0).as("blk")))
       val keep = docs.groupBy("blk").agg(count(lit(1)).as("bn"))
         .filter(col("bn") <= FuzzyBlockCap).select("blk")
       val kept = docs.join(keep, "blk")
@@ -388,13 +388,12 @@ object TextOps {
       val docs = Tables.load(s, d, "documents")
         .select(col("doc_id"), toks.as("w"))
         .filter(size(col("w")) >= 2)
-      val bg = docs.select(col("doc_id"), explode(expr(
-        "transform(sequence(0, size(w)-2), i -> concat(w[i], ' ', w[i+1]))")).as("gram"))
-        // materialized once (eager localCheckpoint): the frequency
-        // aggregate AND the re-join both consume the bigram stream, and
-        // Catalyst inlines the subtree — unmaterialized, the corpus was
-        // tokenized + exploded twice per query
-        .localCheckpoint(true)
+      // materialized once (an eager cut): the frequency aggregate AND
+      // the re-join both consume the bigram stream, and Catalyst inlines
+      // the subtree — unmaterialized, the corpus was tokenized + exploded
+      // twice per query
+      val bg = Truncate(docs.select(col("doc_id"), explode(expr(
+        "transform(sequence(0, size(w)-2), i -> concat(w[i], ' ', w[i+1]))")).as("gram")))
       val cnt = bg.groupBy("gram").agg(count(lit(1)).as("df"))
       bg.join(cnt, "gram")
         .groupBy("doc_id")

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{QueryDef, Tables}
+import graft.core.{KVS, Truncate}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, LongType, StructField, StructType}
@@ -13,7 +14,7 @@ import org.apache.spark.sql.types.{DecimalType, LongType, StructField, StructTyp
   * - ranking          — kmr_ranking global contiguous index
   *                      (src/kmrmoreops.c:742-805)
   * - scan_prefix      — kmr_scan_on_values non-inclusive prefix scan
-  *                      (src/kmrmoreops.c:931-972), two-phase scalable
+  *                      (src/kmrmoreops.c:931-972) on KVS's one scan kernel
   * - count_keys       — kmr_count_keys (src/kmrmoreops.c:1008-1024)
   * - minmax           — kmr_minmax2_fn-style aggregate (src/kmrmoreops.c:357-378)
   * - match_join       — kmr_match equi-join kernel (src/kmrmoreops.c:695-728)
@@ -224,51 +225,29 @@ object CoreOps {
       "SELECT event_id % 32 AS rank, CAST(count(*) AS BIGINT) AS cnt FROM events GROUP BY 1) t"))
   )
 
-  /** Two-phase distributed non-inclusive prefix sum over a unique total
-    * order. Phase 1 range-partitions and sorts, computes per-partition
-    * sums (collected to the driver — O(numPartitions), like KMR's rank0
-    * carry pass). Phase 2 re-walks each partition with its carry-in.
-    * The sorted frame is persisted so both phases see identical
-    * partitioning, and unpersisted once the result is materialized. */
+  /** Distributed non-inclusive prefix sum over a unique total order, on
+    * the two-phase scan kernel [[KVS.scan]]: range-partitioned and sorted
+    * within partitions, so the partition-order concatenation is the
+    * global order; a null value counts as 0. With `keepVal` the value
+    * rides along, saving the caller a re-scan and join. The sorted frame
+    * is cached so both phases see identical partitioning. */
   def prefixSumLong(spark: SparkSession, df: DataFrame, orderCol: String,
       valCol: String, outCol: String, keepVal: Boolean = false): DataFrame = {
     val parts = spark.conf.getOption("spark.sql.shuffle.partitions").map(_.toInt).getOrElse(32)
-    val sorted = df
-      .repartitionByRange(parts, col(orderCol))
-      .sortWithinPartitions(orderCol)
-      .select(col(orderCol).cast("long"),
-        coalesce(col(valCol), lit(0L)).cast("long"))
-      .persist()
-    try {
-      val partSums = sorted.rdd
-        .mapPartitionsWithIndex { (i, it) =>
-          var acc = 0L
-          it.foreach(r => acc += r.getLong(1))
-          Iterator((i, acc))
-        }
-        .collect().sortBy(_._1).map(_._2)
-      val offsets = partSums.scanLeft(0L)(_ + _) // offsets(i) = carry-in of partition i
-      val offB = spark.sparkContext.broadcast(offsets)
-      val rows = sorted.rdd.mapPartitionsWithIndex { (i, it) =>
-        var acc = offB.value(i)
-        it.map { r =>
-          val pre = acc
-          acc += r.getLong(1)
-          // phase 2 already holds the value — emit it when the caller
-          // wants it, saving a re-scan + join on their side
-          if (keepVal) Row(r.getLong(0), r.getLong(1), pre) else Row(r.getLong(0), pre)
-        }
+    val schema = StructType(
+      StructField(orderCol, LongType, nullable = false) +:
+        (if (keepVal) Seq(StructField(valCol, LongType, nullable = false)) else Nil) :+
+        StructField(outCol, LongType, nullable = false))
+    Truncate.over(df
+        .repartitionByRange(parts, col(orderCol))
+        .sortWithinPartitions(orderCol)
+        .select(col(orderCol).cast("long"), coalesce(col(valCol), lit(0L)).cast("long"))) { sorted =>
+      val rows = KVS.scan(sorted.rdd, 0L)(_.getLong(1), _ + _) { (r, pre) =>
+        if (keepVal) Row(r.getLong(0), r.getLong(1), pre) else Row(r.getLong(0), pre)
       }
-      val schema = StructType(
-        StructField(orderCol, LongType, nullable = false) +:
-          (if (keepVal) Seq(StructField(valCol, LongType, nullable = false)) else Nil) :+
-          StructField(outCol, LongType, nullable = false))
-      // Materialize before unpersist so phase 2 never recomputes unsorted.
-      val out = spark.createDataFrame(rows, schema)
+      spark.createDataFrame(rows, schema)
         .orderBy(orderCol) // deterministic row order for the oracle gate
-        .localCheckpoint(true)
-      out
-    } finally sorted.unpersist(false)
+    }
   }
 
   /** Global 0-based contiguous index in the given sort order — KMR's

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{QueryDef, Tables}
+import graft.core.Truncate
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -453,25 +454,25 @@ object Analytics {
       val e = Tables.load(s, d, "events")
         .select(col("event_type"), cents.as("c"))
         .filter(col("c").isNotNull)
-      val hist = e.groupBy("event_type", "c").agg(count(lit(1)).as("f"))
-        .persist()
-      val tot = hist.groupBy("event_type").agg(sum("f").as("n"))
-      val wc = Window.partitionBy("event_type").orderBy("c")
-      val med = hist.withColumn("cum", sum("f").over(wc))
-        .join(broadcast(tot), "event_type")
-        .filter(col("cum") >= expr("(n + 1) div 2"))
-        .groupBy("event_type").agg(min("c").as("median_cents"))
-      val dhist = hist.join(broadcast(med), "event_type")
-        .groupBy(col("event_type"), abs(col("c") - col("median_cents")).as("dv"))
-        .agg(sum("f").as("f"))
-      val wd = Window.partitionBy("event_type").orderBy("dv")
-      val mad = dhist.withColumn("cum", sum("f").over(wd))
-        .join(broadcast(tot), "event_type")
-        .filter(col("cum") >= expr("(n + 1) div 2"))
-        .groupBy("event_type").agg(min("dv").as("mad_cents"))
-      tot.join(med, "event_type").join(mad, "event_type")
-        .select(col("event_type"), col("n"), col("median_cents"), col("mad_cents"))
-        .orderBy("event_type")
+      Truncate.over(e.groupBy("event_type", "c").agg(count(lit(1)).as("f"))) { hist =>
+        val tot = hist.groupBy("event_type").agg(sum("f").as("n"))
+        val wc = Window.partitionBy("event_type").orderBy("c")
+        val med = hist.withColumn("cum", sum("f").over(wc))
+          .join(broadcast(tot), "event_type")
+          .filter(col("cum") >= expr("(n + 1) div 2"))
+          .groupBy("event_type").agg(min("c").as("median_cents"))
+        val dhist = hist.join(broadcast(med), "event_type")
+          .groupBy(col("event_type"), abs(col("c") - col("median_cents")).as("dv"))
+          .agg(sum("f").as("f"))
+        val wd = Window.partitionBy("event_type").orderBy("dv")
+        val mad = dhist.withColumn("cum", sum("f").over(wd))
+          .join(broadcast(tot), "event_type")
+          .filter(col("cum") >= expr("(n + 1) div 2"))
+          .groupBy("event_type").agg(min("dv").as("mad_cents"))
+        tot.join(med, "event_type").join(mad, "event_type")
+          .select(col("event_type"), col("n"), col("median_cents"), col("mad_cents"))
+          .orderBy("event_type")
+      }
     }, Some(
       "WITH e AS (SELECT event_type, " + graft.Tables.centsSql + " AS c " +
       "FROM events WHERE " + graft.Tables.centsSql + " IS NOT NULL), " +

@@ -137,4 +137,13 @@ class LloydSpec extends SparkSuite {
     assert(quantizer - count <= 1 + AnnOps.LloydIters,
       s"quantizer training ran ${quantizer - count} jobs after the count")
   }
+
+  test("an iteration that throws leaves no persisted RDD behind") {
+    val sc = spark.sparkContext
+    val boom: Iterative.Metric = (_, _, _) => throw new IllegalStateException("boom")
+    val before = sc.getPersistentRDDs.keySet
+    intercept[Exception](Iterative.lloyd(hostile, 8, 3, boom))
+    val left = sc.getPersistentRDDs.keySet -- before
+    assert(left.isEmpty, s"left ${left.map(sc.getPersistentRDDs)} cached")
+  }
 }

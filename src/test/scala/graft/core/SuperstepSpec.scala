@@ -5,16 +5,18 @@ import graft.llm.Dedup
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.functions._
 
-/** Job counts and cache hygiene of the graph superstep loops: PageRank,
-  * bfs_hops and connected components. */
+/** Job counts and cache hygiene of the graph superstep loops (PageRank,
+  * bfs_hops and connected components) and of the gates that cache an
+  * input through [[Truncate]]; and that [[Truncate]] owns every cut. */
 class SuperstepSpec extends SparkSuite {
 
   private def lineage(rdd: RDD[_]): Set[Int] =
     rdd.dependencies.map(d => lineage(d.rdd)).foldLeft(Set(rdd.id))(_ ++ _)
 
-  test("the graph gates leave no edge, node or adjacency RDD cached: only their truncated output") {
+  /** Each gate, called warm, leaves cached only RDDs its output reads. */
+  private def leavesOnlyItsOutput(names: String*): Unit = {
     val sc = spark.sparkContext
-    Seq("bfs_hops", "dedup_clusters", "pagerank_exact").foreach { name =>
+    names.foreach { name =>
       val build = SparkEntry.queries(name)
       build(spark, sfDir).collect() // session memos and served indexes fill here
       val before = sc.getPersistentRDDs.keySet
@@ -23,6 +25,14 @@ class SuperstepSpec extends SparkSuite {
       val stray = left -- lineage(out.queryExecution.toRdd)
       assert(stray.isEmpty, s"$name left ${stray.map(sc.getPersistentRDDs)} cached")
     }
+  }
+
+  test("the graph gates leave no edge, node or adjacency RDD cached: only their truncated output") {
+    leavesOnlyItsOutput("bfs_hops", "dedup_clusters", "pagerank_exact")
+  }
+
+  test("the gates that cache an input through Truncate release it: only their output stays") {
+    leavesOnlyItsOutput("scan_prefix", "flexdice_clusters", "kmeans_clusters", "median_mad")
   }
 
   test("min-plus rounds: one loop job at any superstep count up to the truncation cadence") {
@@ -60,5 +70,18 @@ class SuperstepSpec extends SparkSuite {
     val (comp, jobs) = jobsIn("cc")(Dedup.connectedComponents(pairs, iters = 30))
     assert(jobs <= rounds + 3, s"$rounds rounds ran $jobs jobs")
     assert(comp.select(max("comp")).head.getLong(0) == 0L)
+  }
+
+  test("only core/Truncate.scala cuts lineage") {
+    import scala.jdk.CollectionConverters._
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+    val files =
+      try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+      finally walk.close()
+    val cut = "localCheckpoint|\\.checkpoint\\(".r
+    val cutters = files.filter(p => cut.findFirstIn(
+      new String(java.nio.file.Files.readAllBytes(p), "UTF-8")).isDefined)
+    assert(cutters.map(_.getFileName.toString) == Seq("Truncate.scala"),
+      s"lineage cut outside Truncate: $cutters")
   }
 }

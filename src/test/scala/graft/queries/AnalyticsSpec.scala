@@ -154,6 +154,19 @@ class AnalyticsSpec extends SparkSuite {
     }
   }
 
+  test("median_mad releases its histogram cache once its output is collected") {
+    // a fresh copy of events: a plan no earlier call has cached, so a
+    // left-behind histogram is a new CacheManager entry, not a repeat
+    // persist deduplicated into an old one
+    val dir = java.nio.file.Files.createTempDirectory("median_mad_cache")
+    java.nio.file.Files.copy(java.nio.file.Paths.get(s"$sfDir/events.parquet"),
+      dir.resolve("events.parquet"))
+    val before = org.apache.spark.sql.CachedEntries(spark)
+    SparkEntry.queries("median_mad")(spark, dir.toString).collect()
+    assert(org.apache.spark.sql.CachedEntries(spark) == before,
+      "median_mad left a cached frame behind")
+  }
+
   test("equidepth_bins: thresholds equal brute-force percentile_disc; monotone; d5 = median") {
     val out = q("equidepth_bins").collect()
       .map(r => (r.getString(0), r.getLong(1)) -> r.getLong(2)).toMap
