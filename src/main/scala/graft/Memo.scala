@@ -2,7 +2,8 @@ package graft
 
 /** A bounded in-JVM memo: the one mechanism behind every driver-side
   * cache of a value derived from corpus state (reader frames, counts,
-  * fingerprints, trained models, session-scoped edge sets).
+  * fingerprints, trained models, session-scoped edge sets, prepared
+  * graphs).
   *
   * Contract:
   * - ONE ENTRY PER KEY. `apply(key, stamp)` serves the entry only while
@@ -17,7 +18,7 @@ package graft
   *   on other keys proceed in parallel, and a compute may call another
   *   memo. A compute that throws caches nothing: the next call retries.
   * - `onEvict` sees every computed value the memo drops (bound or
-  *   restamp), e.g. to unpersist a cached DataFrame.
+  *   restamp), e.g. to unpersist a cached DataFrame ([[Memo.released]]).
   *
   * Keys compare by `equals`; a `SparkSession` in a key compares by
   * reference, which scopes the entry to that session. */
@@ -54,4 +55,16 @@ final class Memo[K, V](capacity: Int, onEvict: V => Unit = (_: V) => ()) {
     try cell.get
     catch { case e: Throwable => cells.synchronized(cells.remove(key, cell)); throw e }
   }
+}
+
+object Memo {
+
+  /** An `onEvict` that frees a value's cached blocks by `release`, and
+    * does nothing once the SparkContext of the value's `session` has
+    * stopped: the blocks died with it, and an `unpersist` there throws (a
+    * NullPointerException from the block manager master) out of the
+    * unrelated call whose insert dropped the entry. */
+  def released[V](session: V => org.apache.spark.sql.SparkSession)(
+      release: V => Unit): V => Unit =
+    v => if (!session(v).sparkContext.isStopped) release(v)
 }

@@ -95,25 +95,25 @@ object FlexDice {
     * stateless projection. */
   private[graft] def pathsFor(p: DataFrame, xmin: Double, xmax: Double,
       ymin: Double, ymax: Double): DataFrame = {
-    var df = p
-      .withColumn("lox", lit(xmin)).withColumn("hix", lit(xmax))
-      .withColumn("loy", lit(ymin)).withColumn("hiy", lit(ymax))
-      .withColumn("cx0", lit(0L)).withColumn("cy0", lit(0L))
-    for (l <- 1 until NLayers) {
-      df = df
-        .withColumn("cenx", col("lox") + (col("hix") - col("lox")) / 2)
-        .withColumn("ceny", col("loy") + (col("hiy") - col("loy")) / 2)
-        .withColumn("bx", (col("x") > col("cenx")).cast("long"))
-        .withColumn("by", (col("y") > col("ceny")).cast("long"))
-        .withColumn(s"cx$l", col(s"cx${l - 1}") * 2 + col("bx"))
-        .withColumn(s"cy$l", col(s"cy${l - 1}") * 2 + col("by"))
-        .withColumn("lox", when(col("bx") === 1, col("cenx")).otherwise(col("lox")))
-        .withColumn("hix", when(col("bx") === 1, col("hix")).otherwise(col("cenx")))
-        .withColumn("loy", when(col("by") === 1, col("ceny")).otherwise(col("loy")))
-        .withColumn("hiy", when(col("by") === 1, col("hiy")).otherwise(col("ceny")))
-    }
-    df.select(col("id") +:
-      (0 until NLayers).flatMap(l => Seq(col(s"cx$l"), col(s"cy$l"))): _*)
+    // one select per level (a chained withColumn re-analyses the whole
+    // plan on every call): each step carries the coordinates so far and
+    // the point's current cell bounds
+    val cells = (l: Int) => (0 until l).flatMap(k => Seq(col(s"cx$k"), col(s"cy$k")))
+    val init = p.select(col("id"), col("x"), col("y"), lit(xmin).as("lox"),
+      lit(xmax).as("hix"), lit(ymin).as("loy"), lit(ymax).as("hiy"),
+      lit(0L).as("cx0"), lit(0L).as("cy0"))
+    (1 until NLayers).foldLeft(init) { (df, l) =>
+      val cenx = col("lox") + (col("hix") - col("lox")) / 2
+      val ceny = col("loy") + (col("hiy") - col("loy")) / 2
+      val (bx, by) = (col("x") > cenx, col("y") > ceny)
+      df.select(Seq(col("id"), col("x"), col("y"),
+        when(bx, cenx).otherwise(col("lox")).as("lox"),
+        when(bx, col("hix")).otherwise(cenx).as("hix"),
+        when(by, ceny).otherwise(col("loy")).as("loy"),
+        when(by, col("hiy")).otherwise(ceny).as("hiy")) ++ cells(l) ++ Seq(
+        (col(s"cx${l - 1}") * 2 + bx.cast("long")).as(s"cx$l"),
+        (col(s"cy${l - 1}") * 2 + by.cast("long")).as(s"cy$l")): _*)
+    }.select(col("id") +: cells(NLayers): _*)
   }
 
   /** Every (level, cx, cy) ancestor candidate of each point — ≤ 1 of

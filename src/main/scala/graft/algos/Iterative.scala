@@ -1,6 +1,6 @@
 package graft.algos
 
-import graft.{QueryDef, Tables}
+import graft.{Memo, QueryDef, Tables}
 import graft.core.{Superstep, Truncate}
 import graft.core.Superstep.PreparedGraph
 import graft.functions.DotProductD.dotD
@@ -78,12 +78,29 @@ object Iterative {
     * warehouse. The fingerprint covers both source tables. Unlike the
     * O(2000) coPairs set, this table is SF-proportional, so it is NOT
     * cut into the block cache at build. The PageRank loop
-    * does not read the bucketed layout: [[Superstep.prepare]]
-    * hash-partitions the edges by `src` once per call, at the session's
+    * does not read the bucketed layout: [[tradeGraph]] hash-partitions
+    * the edges by `src` once per corpus version, at the session's
     * parallelism, and caches them as primitive blocks. */
   private[graft] val tradeEdges: IndexSpec = IndexSpec("tradeedges", "tradeedges",
     "src BIGINT, dst BIGINT, deg BIGINT", "src", IndexSpec.Buckets,
     "lineitem, orders", tradeEdgesFp, tradeEdgesDegBuild)
+
+  /** One prepared trade graph per JVM, stamped by the corpus fingerprint
+    * (memoized per [[Tables.fsStamp]], so a hit costs a few file stats
+    * and no job) and the partition count it was prepared at. One entry:
+    * a graph is SF-proportional cached blocks, held on the driver heap
+    * in local mode; a dropped graph is unpersisted. */
+  private val tradeGraphs = new Memo[(SparkSession, String), PreparedGraph](1,
+    Memo.released[PreparedGraph](_.spark)(_.unpersist()))
+
+  /** The [[PreparedGraph]] of the served [[tradeEdges]], each edge
+    * weighted by its source's out-degree: both pagerank gates loop over
+    * it, so only the first call per corpus version pays the preparation
+    * job. The loops end on truncated generations, so no gate output
+    * reads the graph. */
+  private[graft] def tradeGraph(s: SparkSession, d: String): PreparedGraph =
+    tradeGraphs((s, d), (tradeEdgesFp(s, d), s.conf.get("spark.sql.shuffle.partitions")))(
+      Superstep.prepare(tradeEdges(s, d), col("deg")))
 
   /** [[Superstep.prepare]] over a raw (src, dst) edge frame, each edge
     * weighted by its source's out-degree. */
@@ -418,13 +435,13 @@ object Iterative {
     // additionally validates against a sequential reference fold.
     QueryDef("pagerank", (s, d) => {
       // Edge set (WITH out-degrees) served from the durable bucketed
-      // table (built once per corpus — see tradeEdges).
+      // table (built once per corpus — see tradeEdges) and prepared once
+      // per corpus version (tradeGraph).
       // Both arithmetics ride ONE fused pipeline (one kernel + one reduce
       // per superstep, late round 9 — the certificate compares the
       // arithmetic, not two executions); the run ends on a truncated
-      // generation, so the shared graph cache can be dropped before
-      // the certificate aggregate is materialized.
-      Superstep.prepare(tradeEdges(s, d), col("deg")).use(pageRankBothOn(_, iters = 5))
+      // generation, so the certificate aggregate never reads the graph.
+      pageRankBothOn(tradeGraph(s, d), iters = 5)
         .agg(count(lit(1)).as("n_nodes"),
           when(max(abs(col("rank") - col("r").cast("double") / 1e15)) <= 1e-9, 1L)
             .otherwise(0L).as("all_close"))
@@ -441,7 +458,7 @@ object Iterative {
     // full DuckDB CTE replay (closing the "iterative float has no
     // oracle" gap the same way kmeans_clusters did).
     QueryDef("pagerank_exact", (s, d) => {
-      Superstep.prepare(tradeEdges(s, d), col("deg")).use(pageRankExactOn(_, iters = 5))
+      pageRankExactOn(tradeGraph(s, d), iters = 5)
         .select(col("id"), col("r").as("rank_fp"))
         .orderBy(desc("rank_fp"), col("id"))
         .limit(100)

@@ -33,6 +33,13 @@ object Superstep {
     * out-degree for PageRank, one hop for BFS. */
   final case class EdgeBlock(src: Array[Long], dst: Array[Long], w: Array[Long])
 
+  /** An [[EdgeBlock]] being filled one edge at a time. */
+  private final class EdgeBuilder {
+    val src, dst, w = new mutable.ArrayBuilder.ofLong
+    def add(s: Long, d: Long, k: Long): Unit = { src += s; dst += d; w += k }
+    def result(): EdgeBlock = EdgeBlock(src.result(), dst.result(), w.result())
+  }
+
   /** A persisted graph. `edges` holds one [[EdgeBlock]] per partition,
     * hash-partitioned by `src`; `marks` maps every node id to whether it
     * has an in-edge, under the same partitioner; `n` counts the nodes.
@@ -63,13 +70,22 @@ object Superstep {
       .coalesce(byId.numPartitions).queryExecution.toRdd
       // internal rows, not Rows: no per-edge conversion; the longs are
       // read before the scan reuses the row
-      .map(r => (r.getLong(0), (r.getLong(1), r.getLong(2))))
-      .partitionBy(byId)
+      .mapPartitions { rows =>
+        // the map side buckets its edges by target partition, so one
+        // primitive block per (map task, target) crosses the shuffle,
+        // keyed by the target itself, not one boxed tuple per edge
+        val out = Array.fill(byId.numPartitions)(new EdgeBuilder)
+        rows.foreach { r =>
+          val s = r.getLong(0)
+          out(byId.getPartition(s)).add(s, r.getLong(1), r.getLong(2))
+        }
+        out.iterator.zipWithIndex.collect { case (b, p) if b.src.length > 0 => p -> b.result() }
+      }
+      .partitionBy(byId) // key p < numPartitions hashes to partition p
       .mapPartitions({ it =>
-        val (src, dst, wt) = (mutable.ArrayBuilder.make[Long],
-          mutable.ArrayBuilder.make[Long], mutable.ArrayBuilder.make[Long])
-        it.foreach { case (s, (d, k)) => src += s; dst += d; wt += k }
-        Iterator.single(EdgeBlock(src.result(), dst.result(), wt.result()))
+        val parts = it.map(_._2).toSeq
+        Iterator.single(EdgeBlock(Array.concat(parts.map(_.src): _*),
+          Array.concat(parts.map(_.dst): _*), Array.concat(parts.map(_.w): _*)))
       }, preservesPartitioning = true)
       .persist()
     // The count fills both caches before any round reads them (the

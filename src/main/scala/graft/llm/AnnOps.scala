@@ -699,16 +699,19 @@ object AnnOps {
     * quantizer it derives from. The value is an O(n) DataFrame, so it
     * stays DISTRIBUTED via persist(MEMORY_AND_DISK), never a driver
     * carry, and a dropped entry is unpersisted so a many-corpus session
-    * can't pin executor storage. Assignment is deterministic given the
+    * can't pin executor storage. Keyed by session as well: a persisted
+    * frame serves only the session that cached it (one from a stopped
+    * session fails in the next). Assignment is deterministic given the
     * centroids, so a hit is bit-identical to recomputation. The
     * PRODUCTION answer to this cost remains the persisted index
     * (ann_ivf_indexed); this memo just stops the correctness twin from
     * paying the scan per invocation on a warm session. */
-  private val assigns = new Memo[String, DataFrame](4, _.unpersist())
+  private val assigns = new Memo[(SparkSession, String), DataFrame](4,
+    Memo.released[DataFrame](_.sparkSession)(_.unpersist()))
 
   private def cachedAssign(s: SparkSession, d: String, v: DataFrame,
       cs: Array[(Long, Array[Double])]): DataFrame =
-    assigns(d, AlgoTag + embFingerprint(s, d))(
+    assigns((s, d), AlgoTag + embFingerprint(s, d))(
       ivfAssign(v, centDf(s, cs))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 

@@ -52,6 +52,35 @@ class SuperstepSpec extends SparkSuite {
     } finally g.unpersist()
   }
 
+  test("the preparation's block shuffle places every edge and mark where a per-edge tuple shuffle does") {
+    // duplicate edges, self-loops, sources without in-edges
+    val list = (0L until 300L).map(i => (i % 37, i * 7919 % 101, i % 5)) ++
+      Seq((3L, 3L, 1L), (3L, 3L, 1L), (500L, 3L, 2L))
+    Seq(4, 3, 1).foreach { parts =>
+      val s = spark.newSession()
+      s.conf.set("spark.sql.shuffle.partitions", parts.toLong)
+      import s.implicits._
+      val edges = list.toDF("src", "dst", "w")
+      val g = Superstep.prepare(edges, col("w"))
+      try {
+        assert(g.edges.partitioner.contains(g.byId) && g.byId.numPartitions == parts)
+        val byId = g.byId
+        // one boxed (src, (dst, w)) record per edge, as the shuffle once ran
+        val want = edges.as[(Long, Long, Long)].rdd.map { case (a, b, k) => (a, (b, k)) }
+          .partitionBy(byId).glom().map(_.map { case (a, (b, k)) => (a, b, k) }.toSeq.sorted)
+          .collect().toSeq
+        val got = g.edges.map(b => b.src.indices.map(j => (b.src(j), b.dst(j), b.w(j))).sorted)
+          .collect().toSeq
+        assert(got == want, s"$parts partitions")
+        val hasIn = list.flatMap { case (a, b, _) => Seq(a -> false, b -> true) }
+          .groupMapReduce(_._1)(_._2)(_ || _)
+        val wantMarks = (0 until parts).map(p => hasIn.filter(m => byId.getPartition(m._1) == p))
+        assert(g.marks.glom().map(_.toMap).collect().toSeq == wantMarks, s"$parts partitions")
+        assert(g.n == hasIn.size)
+      } finally g.unpersist()
+    }
+  }
+
   test("bfs_hops builds in at most 4 jobs") {
     val build = SparkEntry.queries("bfs_hops")
     build(spark, sfDir) // the session's edge memo fills outside the count
