@@ -3,6 +3,7 @@ package graft.llm
 import graft.{QueryDef, Tables}
 import graft.core.{Superstep, Truncate}
 import graft.sources.IndexSpec
+import graft.streaming.StreamOps
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -14,6 +15,9 @@ import org.apache.spark.sql.functions._
   * on (band, band-hash), SimHash on (band, band-bits). There is no
   * all-pairs crossJoin anywhere; candidate generation is always a
   * key-equality join, so the 100 TB plan is shuffle+join, not O(n²).
+  * Every inverted-index variant — jaccard, containment and substring,
+  * their index-served twins, and the delta gates with their streaming
+  * probes — matches through ONE df-capped kernel, [[postingJoin]].
   * Signature computation (minhash/simhash) is per-row with higher-order
   * array functions — whole-stage-codegen'd, no UDFs, no extra shuffle.
   */
@@ -31,14 +35,14 @@ object Dedup {
       .distinct()
 
   /** Distinct shingles per doc WITH the per-doc count riding every row
-    * as a map-only column: (delta_id, n1, gram). The gram set equals
+    * as a map-only column: (doc_id, n1, gram). The gram set equals
     * [[shinglesOf]]'s rows (array_distinct within one row's own tokens
     * — doc_id is unique per row, so per-row and global distinct
     * coincide), and n1 = size(grams) is the Jaccard denominator
-    * WITHOUT a second scan+aggregate over the batch. Shared by the
-    * dedup_jaccard_delta gate and the streaming
-    * [[graft.streaming.StreamOps]].gramProbe (where a streaming-side
-    * aggregate would be stateful — here it is simply a saved pass).
+    * WITHOUT a second scan+aggregate over the batch. The left side of
+    * [[graft.streaming.StreamOps]].gramProbe, which the
+    * dedup_jaccard_delta gate rolls up (a streaming-side aggregate
+    * would be stateful — in the batch gate it is simply a saved pass).
     *
     * explode_OUTER is load-bearing: a plain explode makes Catalyst
     * derive `isnotnull(grams) AND size(grams) > 0` constraints and
@@ -54,10 +58,10 @@ object Dedup {
     docs
       .select(col("doc_id"), toks.as("w"))
       .filter(size(col("w")) >= 3)
-      .select(col("doc_id").as("delta_id"), expr(
+      .select(col("doc_id"), expr(
         "array_distinct(transform(sequence(0, size(w)-3), " +
         "i -> concat(w[i],' ',w[i+1],' ',w[i+2])))").as("grams"))
-      .select(col("delta_id"), size(col("grams")).cast("long").as("n1"),
+      .select(col("doc_id"), size(col("grams")).cast("long").as("n1"),
         explode_outer(col("grams")).as("gram"))
       .filter(col("gram").isNotNull)
 
@@ -211,25 +215,19 @@ object Dedup {
       .select(col("doc_id"),
         explode(graft.functions.WinnowFps.winnow(col("text"))).as("fp"))
 
-  /** Candidate-pair join over a (doc_id, fp) frame — the back half of
-    * [[substringPairs]], shared by the inline and index-served paths.
-    * When `fps` is the bucketed index table, the df-cap groupBy AND the
+  /** Candidate-pair count over a (doc_id, fp) frame — the back half of
+    * [[substringPairs]], shared by the inline and index-served paths:
+    * [[postingJoin]]'s self form rolled up to (id1, id2, n_shared).
+    * Served callers pass the persisted (fp, df) stat ([[winnowDf]],
+    * identical values): one posting scan per query instead of two, and
+    * when `fps` is the bucketed index table the df cap AND the
     * fingerprint self-join are bucket-co-located on fp. */
-  private[llm] def substringPairsFrom(fps: org.apache.spark.sql.DataFrame,
-      dfCap: Long,
-      dfOpt: Option[org.apache.spark.sql.DataFrame] = None)
-      : org.apache.spark.sql.DataFrame = {
-    // served callers pass the persisted (fp, df) stat ([[winnowDf]],
-    // identical values): one posting scan per query instead of two
-    val rare = dfOpt.getOrElse(fps.groupBy("fp").agg(count(lit(1)).as("df")))
-      .filter(col("df") <= dfCap).select("fp")
-    val kept = fps.join(rare, "fp")
-    val right = kept.select(col("fp").as("fp2"), col("doc_id").as("id2"))
-    kept.join(right, col("fp") === col("fp2") && col("doc_id") < col("id2"))
-      .groupBy(col("doc_id").as("id1"), col("id2"))
+  private[llm] def substringPairsFrom(fps: DataFrame, dfCap: Long,
+      dfOpt: Option[DataFrame] = None): DataFrame =
+    postingJoin(fps, None, "fp", dfCap, dfOpt)
+      .groupBy("id1", "id2")
       .agg(count(lit(1)).as("n_shared"))
       .orderBy("id1", "id2")
-  }
 
   /** DuckDB replays of the inverted-shingle-index pipelines — each
     * shared by the inline gate and its index-served twin (a stale
@@ -364,23 +362,18 @@ object Dedup {
     // h-bucketed, written once with the base corpus). The per-ingest
     // plan contains NO base-side aggregate (the r15 form re-derived
     // `DISTINCT h` over the whole index per batch; DeltaDedupSpec pins
-    // the new shape structurally). The oracle replays chunking,
-    // hashing, the split, and the membership probe — a stale or
-    // mis-split base table fails the hash gate.
-    QueryDef("dedup_paragraph_delta", (s, d) => {
-      val delta = paragraphChunks(Tables.load(s, d, "documents")
-        .filter(col("source") =!= BaseSource))
-      delta
-        .join(chunkHashesBase(s, d).withColumn("in_corpus", lit(1L)),
-          Seq("h"), "left")
-        .groupBy("doc_id")
-        .agg(count(lit(1)).as("n_chunks"),
-          sum(coalesce(col("in_corpus"), lit(0L))).as("n_dup"))
-        .select(col("doc_id"), col("n_chunks"), col("n_dup"),
-          when(col("n_dup") * 2 <= col("n_chunks"), 1L).otherwise(0L)
-            .as("keep_doc"))
-        .orderBy("doc_id")
-    }, Some(
+    // the new shape structurally). The gate IS the streaming probe
+    // plus its sink-side roll-up, run as one batch:
+    // [[graft.streaming.StreamOps]].chunkKeepDecisions over
+    // chunkProbeFor. The oracle replays chunking, hashing, the split,
+    // and the membership probe — a stale or mis-split base table fails
+    // the hash gate.
+    QueryDef("dedup_paragraph_delta", (s, d) =>
+      StreamOps.chunkKeepDecisions(StreamOps.chunkProbeFor(
+          Tables.load(s, d, "documents").filter(col("source") =!= BaseSource), s, d))
+        .withColumnRenamed("delta_id", "doc_id")
+        .orderBy("doc_id"),
+    Some(
       chunksSql +
       s""", srcs AS (SELECT doc_id, source FROM documents),
           corpus_h AS (SELECT DISTINCT h FROM chunks JOIN srcs USING (doc_id)
@@ -428,36 +421,20 @@ object Dedup {
     // per-ingest plan contains NO base-side aggregate at all
     // (DeltaDedupSpec pins this structurally), so per-batch cost is
     // O(delta grams · df≤cap) data motion plus bucket-co-located index
-    // scans. The probe is a gram-equality join delta-vs-base bounded
-    // by the same O(Σ df²) guard as the inline gate, then
-    // J = |∩|/(n1+n2−|∩|) with n1 from the delta batch itself. Same
-    // rounding + threshold as dedup_jaccard, so the oracle replays
+    // scans. The gate IS the streaming probe plus its sink-side
+    // roll-up, run as one batch: [[graft.streaming.StreamOps]].gramProbeFor
+    // ([[postingJoin]]'s probe form, n1 riding every delta row
+    // map-only) rolled up by gramPairJaccard to J = |∩|/(n1+n2−|∩|).
+    // Same rounding + threshold as dedup_jaccard, so the oracle replays
     // shingling, the split, the base-side df-cap, the sizes, and the
     // similarity arithmetic exactly — a stale or mis-split base index
     // fails the hash gate.
-    QueryDef("dedup_jaccard_delta", (s, d) => {
-      val docs = Tables.load(s, d, "documents")
-      // n1 rides every delta row map-only ([[shingleRowsWithN1]]) —
-      // the r16 first-cut derived the delta shingles TWICE (once for
-      // the probe, once for an n1 groupBy); first(n1) under the pair
-      // aggregate recovers it with zero extra passes
-      val deltaG = shingleRowsWithN1(docs.filter(col("source") =!= BaseSource))
-      val base = shingleIndexBase(s, d)
-        .select(col("doc_id").as("base_id"), col("gram"))
-      val rare = shingleDfBase(s, d)
-        .filter(col("df") <= JaccardDfCap).select("gram")
-      val n2s = shingleSizesBase(s, d)
-        .select(col("doc_id").as("base_id"), col("n").as("n2"))
-      deltaG.join(base.join(rare, "gram"), "gram")
-        .groupBy("delta_id", "base_id")
-        .agg(count(lit(1)).as("inter"), first("n1").as("n1"))
-        .join(n2s, "base_id")
-        .withColumn("jaccard",
-          round(col("inter").cast("double") / (col("n1") + col("n2") - col("inter")), 6))
-        .filter(col("jaccard") >= 0.6)
-        .select("delta_id", "base_id", "jaccard")
-        .orderBy("delta_id", "base_id")
-    }, Some(
+    QueryDef("dedup_jaccard_delta", (s, d) =>
+      StreamOps.gramPairJaccard(StreamOps.gramProbeFor(
+          Tables.load(s, d, "documents").filter(col("source") =!= BaseSource), s, d),
+          shingleSizesBase(s, d), minJ = 0.6)
+        .orderBy("delta_id", "base_id"),
+    Some(
       shinglesSql +
       s""",
          srcs AS (SELECT doc_id, source FROM documents),
@@ -562,25 +539,18 @@ object Dedup {
     // reshape the corpus stop-list) — the per-ingest plan contains NO
     // base-side aggregate (DeltaDedupSpec pins this structurally) —
     // and the probe itself is an fp-equality join delta-vs-base, so
-    // the per-ingest cost is O(delta·fps·df≤cap). Reference anchor:
-    // the kmr_match-as-persisted-index reading of
-    // src/kmrmoreops.c:695-728 the sibling delta gates cite. The
-    // oracle replays winnowing, the source split, the base-side
-    // df-cap, and the pair count — a stale or mis-split winnow index
-    // fails the hash gate.
-    QueryDef("dedup_substring_delta", (s, d) => {
-      val docs = Tables.load(s, d, "documents")
-      val deltaFps = winnowFps(docs.filter(col("source") =!= BaseSource))
-        .select(col("doc_id").as("delta_id"), col("fp"))
-      val base = winnowIndexBase(s, d)
-        .select(col("doc_id").as("base_id"), col("fp"))
-      val rare = winnowDfBase(s, d)
-        .filter(col("df") <= WinnowDfCap).select("fp")
-      deltaFps.join(base.join(rare, "fp"), "fp")
-        .groupBy("delta_id", "base_id")
-        .agg(count(lit(1)).as("n_shared"))
-        .orderBy("delta_id", "base_id")
-    }, Some(
+    // the per-ingest cost is O(delta·fps·df≤cap). The gate IS the
+    // streaming probe plus its sink-side roll-up, run as one batch:
+    // [[graft.streaming.StreamOps]].fpPairCounts over fpProbeFor
+    // ([[postingJoin]]'s probe form — kmr_match as a persisted index,
+    // src/kmrmoreops.c:695-728). The oracle replays winnowing, the
+    // source split, the base-side df-cap, and the pair count — a stale
+    // or mis-split winnow index fails the hash gate.
+    QueryDef("dedup_substring_delta", (s, d) =>
+      StreamOps.fpPairCounts(StreamOps.fpProbeFor(
+          Tables.load(s, d, "documents").filter(col("source") =!= BaseSource), s, d))
+        .orderBy("delta_id", "base_id"),
+    Some(
       winnowCtesSql +
       s""",
          srcs AS (SELECT doc_id, source FROM documents),
@@ -956,31 +926,65 @@ object Dedup {
   def jaccardPairsFrom(grams: DataFrame, minJ: Double, dfCap: Long,
       sizesOpt: Option[DataFrame] = None,
       dfOpt: Option[DataFrame] = None): DataFrame =
-    postingPairs(grams, dfCap, sizesOpt, dfOpt)
-      .withColumn("jaccard",
-        round(col("inter").cast("double") / (col("n1") + col("n2") - col("inter")), 6))
+    sharedGrams(grams, dfCap, sizesOpt, dfOpt)
+      .withColumn("jaccard", jaccardOf(col("inter"), col("n1"), col("n2")))
       .filter(col("jaccard") >= minJ)
       .select("id1", "id2", "jaccard")
       .orderBy("id1", "id2")
 
-  /** The df-capped posting self-join behind [[jaccardPairsFrom]] and
-    * [[containmentPairsFrom]]: (id1, id2, inter, n1, n2) for every doc
-    * pair sharing a kept gram, `inter` counting the kept grams they
-    * share and n1, n2 their FULL shingle counts. */
-  private def postingPairs(grams: DataFrame, dfCap: Long,
+  /** THE Jaccard score column: |∩| / (n1 + n2 − |∩|) rounded to 6
+    * places — the value every Jaccard gate and its DuckDB oracle
+    * compare, so one expression keeps them in step. */
+  def jaccardOf(inter: Column, n1: Column, n2: Column): Column =
+    round(inter.cast("double") / (n1 + n2 - inter), 6)
+
+  /** The df-capped posting join — the one inverted-index match kernel
+    * of the dedup family (KMR's kmr_match, src/kmrmoreops.c:695-728):
+    * one row per (left doc, right doc, shared `key`) whose document
+    * frequency df is at most `dfCap`, with no aggregate; callers roll
+    * the rows up. The cap is the O(Σ df²) guard of [[JaccardDfCap]].
+    *
+    *  - Self form (`right = None`): `left` (doc_id, key) joins itself
+    *    under a.doc_id < b.doc_id → (id1, id2, key). df comes from `df`
+    *    when given (a persisted stat table), otherwise from `left`.
+    *  - Probe form (`right = Some(base)`): `left` (doc_id, key, extra
+    *    columns) probes the base postings (doc_id, key) → (delta_id,
+    *    extra columns, base_id, key). df counts BASE postings only —
+    *    `df` is the persisted base stat table, else `base` itself — so
+    *    an arriving batch never reshapes the corpus stop-list.
+    *
+    * The cap folds into the indexed side before the match, so when the
+    * postings and the df table are bucketed on `key` the whole join is
+    * bucket-co-located. */
+  def postingJoin(left: DataFrame, right: Option[DataFrame], key: String,
+      dfCap: Long, df: Option[DataFrame]): DataFrame = {
+    val rare = df.getOrElse(right.getOrElse(left).groupBy(key).agg(count(lit(1)).as("df")))
+      .filter(col("df") <= dfCap).select(key)
+    right match {
+      case None =>
+        val kept = left.select("doc_id", key).join(rare, key)
+        kept.as("a")
+          .join(kept.as("b"),
+            col(s"a.$key") === col(s"b.$key") && col("a.doc_id") < col("b.doc_id"))
+          .select(col("a.doc_id").as("id1"), col("b.doc_id").as("id2"), col(s"a.$key"))
+      case Some(base) =>
+        val extra = left.columns.filterNot(Set("doc_id", key)).map(col).toSeq
+        left.withColumnRenamed("doc_id", "delta_id")
+          .join(base.select(col("doc_id").as("base_id"), col(key)).join(rare, key), key)
+          .select((col("delta_id") +: extra) ++ Seq(col("base_id"), col(key)): _*)
+    }
+  }
+
+  /** [[postingJoin]]'s self form rolled up for [[jaccardPairsFrom]] and
+    * [[containmentPairsFrom]]: (id1, id2, inter, n1, n2), `inter`
+    * counting the kept grams a pair shares and n1, n2 the docs' FULL
+    * shingle counts. */
+  private def sharedGrams(grams: DataFrame, dfCap: Long,
       sizesOpt: Option[DataFrame], dfOpt: Option[DataFrame]): DataFrame = {
     val sizes = sizesOpt.getOrElse(
       grams.groupBy("doc_id").agg(count(lit(1)).as("n")))
-    // df stop list: served callers pass the persisted (gram, df) stat
-    // ([[shingleDf]], identical values) so the guard costs a tiny
-    // bucket-co-located scan instead of a SECOND full posting scan
-    val kept = grams.join(
-      dfOpt.getOrElse(grams.groupBy("gram").agg(count(lit(1)).as("df")))
-        .filter(col("df") <= dfCap).select("gram"),
-      "gram")
-    kept.as("a")
-      .join(kept.as("b"), col("a.gram") === col("b.gram") && col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("id1"), col("b.doc_id").as("id2"))
+    postingJoin(grams, None, "gram", dfCap, dfOpt)
+      .groupBy("id1", "id2")
       .agg(count(lit(1)).as("inter"))
       .join(sizes.select(col("doc_id").as("id1"), col("n").as("n1")), "id1")
       .join(sizes.select(col("doc_id").as("id2"), col("n").as("n2")), "id2")
@@ -1073,8 +1077,7 @@ object Dedup {
       .join(docs.select(col("doc_id").as("id2"), col("gs").as("g2"),
         col("n").as("n2")), "id2")
       .withColumn("inter", size(array_intersect(col("g1"), col("g2"))).cast("long"))
-      .withColumn("jaccard",
-        round(col("inter").cast("double") / (col("n1") + col("n2") - col("inter")), 6))
+      .withColumn("jaccard", jaccardOf(col("inter"), col("n1"), col("n2")))
       .filter(col("jaccard") >= minJ)
       .select("id1", "id2", "jaccard")
       .orderBy("id1", "id2")
@@ -1098,7 +1101,7 @@ object Dedup {
   def containmentPairsFrom(grams: DataFrame, minMilli: Long, dfCap: Long,
       sizesOpt: Option[DataFrame] = None,
       dfOpt: Option[DataFrame] = None): DataFrame =
-    postingPairs(grams, dfCap, sizesOpt, dfOpt)
+    sharedGrams(grams, dfCap, sizesOpt, dfOpt)
       .withColumn("c_milli", expr("(1000 * inter) div least(n1, n2)"))
       .filter(col("c_milli") >= minMilli)
       .select("id1", "id2", "n1", "n2", "c_milli")

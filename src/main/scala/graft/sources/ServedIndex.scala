@@ -10,9 +10,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Contract: the index lives under a stable EXTERNAL root at
   * target/graft-index/<dirName>/ holding immutable VERSIONED data
   * directories (v_<token>/) plus one small `_graft_meta` pointer file
-  * (active version + previous version + corpus fingerprint) that is
-  * committed ATOMICALLY (temp file + rename) and only AFTER the data
-  * dir is fully written. Three paths:
+  * (active version + previous version + corpus fingerprint + a CRC32
+  * of those three) that is committed ATOMICALLY (temp file + rename)
+  * and only AFTER the data dir is fully written. Three paths:
   * - meta missing/stale fingerprint → (re)build into a FRESH version
   *   dir, swing the pointer, then GC superseded versions — keeping the
   *   immediately-previous version as a grace copy so a reader that
@@ -150,103 +150,57 @@ object ServedIndex {
 
   /** Read the pointer file: (activeToken, prevToken, fingerprint).
     * Exposed private[graft] so specs can tamper with the fingerprint /
-    * locate the active version dir through the same parser. */
+    * locate the active version dir through the same parser. A pointer
+    * whose fourth line is not the CRC32 of the first three (a torn or
+    * foreign write, or a pointer from before that line existed) reads
+    * as None, like a malformed one: the next serve rebuilds. */
   private[graft] def readMeta(fs: org.apache.hadoop.fs.FileSystem,
       root: org.apache.hadoop.fs.Path): Option[(String, String, String)] = {
+    val raw = rawFs(fs)
     val metaFile = new org.apache.hadoop.fs.Path(root, "_graft_meta")
-    if (!fs.exists(metaFile)) None
+    if (!raw.exists(metaFile)) None
     else {
-      val in = fs.open(metaFile)
+      val in = raw.open(metaFile)
       val txt = try new String(in.readAllBytes(), UTF8) finally in.close()
-      // active \n prev \n fp (fp may itself contain anything but \n —
-      // fingerprints are single-line by construction)
-      txt.split("\n", 3) match {
-        case Array(a, p, f) => Some((a, p, f))
+      // active \n prev \n fp \n crc (fp may itself contain anything but
+      // \n — fingerprints are single-line by construction)
+      txt.split("\n", 4) match {
+        case Array(a, p, f, _) if metaText(a, p, f) == txt => Some((a, p, f))
         case _ => None
       }
     }
   }
 
-  /** Atomically publish the pointer: write a temp sibling, then a
-    * rename-with-overwrite (FileContext — atomic where the filesystem
-    * supports it; local FS and HDFS both do). A reader concurrent with
-    * the commit sees either the old complete pointer or the new one,
-    * never a torn write. */
-  private[graft] def writeMeta(s: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, root: org.apache.hadoop.fs.Path,
-      active: String, prev: String, fp: String): Unit = {
-    val metaFile = new org.apache.hadoop.fs.Path(root, "_graft_meta")
+  /** Atomically publish the pointer: write a temp sibling, then rename
+    * it over `_graft_meta`. Both go through the RAW filesystem, so the
+    * pointer is ONE file with no `.crc` sibling to keep in step — the
+    * checksum is the pointer's own fourth line — and the rename is one
+    * rename(2) (the root is always a local directory), which replaces
+    * the old pointer atomically. A reader concurrent with the commit
+    * sees either the old complete pointer or the new one, never a torn
+    * write; racing publishers are last-writer-wins. */
+  private[graft] def writeMeta(fs: org.apache.hadoop.fs.FileSystem,
+      root: org.apache.hadoop.fs.Path, active: String, prev: String,
+      fp: String): Unit = {
+    val raw = rawFs(fs)
     val tmp = new org.apache.hadoop.fs.Path(root, s"_graft_meta.tmp.$active")
-    val out = fs.create(tmp, true)
-    try out.write(s"$active\n$prev\n$fp".getBytes(UTF8)) finally out.close()
-    val fc = org.apache.hadoop.fs.FileContext
-      .getFileContext(root.toUri, s.sparkContext.hadoopConfiguration)
-    // ChecksumFs wart (IndexChaosSpec, two builders racing the commit):
-    // Rename.OVERWRITE replaces the DATA file atomically but the `.crc`
-    // sibling rename has no overwrite arm — when a concurrent publisher
-    // just committed, our crc rename collides with its fresh
-    // `._graft_meta.crc` and throws FileAlreadyExistsException, possibly
-    // AFTER our data rename already landed. The crc is derived state:
-    // drop it and retry (bounded). If our tmp is already gone, the data
-    // rename succeeded — the pointer IS ours; with the stale crc
-    // removed, readers verify nothing rather than a mismatched sum.
-    val crc = new org.apache.hadoop.fs.Path(root, "._graft_meta.crc")
-    val tmpCrc = new org.apache.hadoop.fs.Path(root, s"._graft_meta.tmp.$active.crc")
-    var attempt = 0
-    var done = false
-    while (!done) {
-      try {
-        fc.rename(tmp, metaFile, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-        done = true
-      } catch {
-        case e: org.apache.hadoop.fs.FileAlreadyExistsException =>
-          attempt += 1
-          if (attempt > 5) throw e
-          fs.delete(crc, false)
-          fs.delete(tmpCrc, false)
-          if (!fs.exists(tmp)) done = true // data rename already landed
-      }
-    }
-    // ADVICE r14: the retry path above deleted the pointer's `.crc`, so
-    // whichever publisher won is served with checksum verification
-    // DISABLED until the next commit — weakened torn-read detection on
-    // exactly the file that needs it. Repair: re-land OUR OWN bytes
-    // once through the normal create+rename path (minting a fresh crc
-    // sibling) — but ONLY if the current pointer still IS our commit.
-    // Re-publishing whatever readMeta returns would be a rollback
-    // hazard: a third writer can commit a NEWER version (possibly a new
-    // fingerprint) between the read and the rename, and the rename's
-    // data file can land even when the crc sibling then throws — the
-    // pointer would silently revert to superseded content. Comparing
-    // against our own (active, prev, fp) makes the repair value-neutral
-    // by construction: we only ever re-write bytes that are already the
-    // current content. If another publisher superseded us, we skip —
-    // their commit minted its own fresh crc. ADVICE r15 narrowed the
-    // residual compare-then-rename window further: the repair also
-    // requires the destination crc sibling to be ABSENT. A publisher
-    // that fully committed between our readMeta and our rename has
-    // minted a fresh `._graft_meta.crc` (its rename carries the crc
-    // sibling along), so the crc-present case is exactly "someone else
-    // owns the pointer now" — and a crc-less pointer is the only state
-    // this repair exists to fix in the first place. What remains is
-    // the base protocol's inherent last-write-wins race (a publisher
-    // landing between the crc stat and our rename), not widened by
-    // the repair; the downstream fingerprint recheck bounds it.
-    if (attempt > 0 && !fs.exists(crc)) {
-      val stillOurs = readMeta(fs, root).contains((active, prev, fp))
-      if (stillOurs) {
-        val tmp2 = new org.apache.hadoop.fs.Path(root, s"_graft_meta.tmp.recrc.$active")
-        val o2 = fs.create(tmp2, true)
-        try o2.write(s"$active\n$prev\n$fp".getBytes(UTF8)) finally o2.close()
-        try fc.rename(tmp2, metaFile, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-        catch {
-          case _: org.apache.hadoop.fs.FileAlreadyExistsException =>
-            fs.delete(tmp2, false)
-            fs.delete(new org.apache.hadoop.fs.Path(
-              root, s"._graft_meta.tmp.recrc.$active.crc"), false)
-        }
-      }
-    }
+    val out = raw.create(tmp, true)
+    try out.write(metaText(active, prev, fp).getBytes(UTF8)) finally out.close()
+    if (!raw.rename(tmp, new org.apache.hadoop.fs.Path(root, "_graft_meta")))
+      throw new java.io.IOException(s"could not publish $tmp as the index pointer")
+  }
+
+  /** The pointer's bytes: the three fields, then their CRC32. */
+  private def metaText(active: String, prev: String, fp: String): String = {
+    val body = s"$active\n$prev\n$fp"
+    val crc = new java.util.zip.CRC32
+    crc.update(body.getBytes(UTF8))
+    s"$body\n${crc.getValue}"
+  }
+
+  private def rawFs(fs: org.apache.hadoop.fs.FileSystem) = fs match {
+    case c: org.apache.hadoop.fs.ChecksumFileSystem => c.getRawFileSystem
+    case f => f
   }
 
   /** The active version's data directory as a local File (spec helper —
@@ -289,7 +243,7 @@ object ServedIndex {
       // pointer LAST and atomic: a torn build can never serve; racing
       // cross-process builders are last-writer-wins on the rename
       val prev = meta.map(_._1).getOrElse("")
-      writeMeta(s, fs, root, token, prev, fp)
+      writeMeta(fs, root, token, prev, fp)
       // GC superseded versions — never the new active, never the grace
       // copy, and never anything recent enough to be a concurrent
       // builder's in-progress dir (age guard)

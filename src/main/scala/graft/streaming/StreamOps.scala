@@ -158,22 +158,7 @@ object StreamOps {
     * can never collide, matching the batch semantics. */
   def bandKeys(docs: DataFrame): Dataset[BandRow] = {
     import docs.sparkSession.implicits._
-    val h1 = "cast(conv(substr(md5(g), 1, 15), 16, 10) AS bigint) % 2147483647"
-    val h2 = "cast(conv(substr(md5(concat(g, '!')), 1, 15), 16, 10) AS bigint) % 2147483646 + 1"
-    docs
-      .select(col("doc_id"), graft.llm.TextNorm.toks.as("w"))
-      .filter(size(col("w")) >= 3)
-      .withColumn("hs", expr(
-        "transform(transform(sequence(0, size(w)-3), i -> concat(w[i],' ',w[i+1],' ',w[i+2])), " +
-        s"g -> struct($h1 AS h1, $h2 AS h2))"))
-      .withColumn("sig", expr(
-        "transform(sequence(0, 63), j -> " +
-        "aggregate(hs, 9223372036854775807L, (acc, h) -> least(acc, (h.h1 + j * h.h2) % 2147483647)))"))
-      .select(col("doc_id"), explode(expr(
-        "transform(sequence(0, 15), b -> " +
-        "concat(b, ':', array_join(transform(slice(sig, b*4+1, 4), x -> cast(x AS string)), ',')))"))
-        .as("bkey"))
-      .as[BandRow]
+    bandSigRows(docs).select("doc_id", "bkey").as[BandRow]
   }
 
   /** Stream-side signature rows in the persisted index's OWN shape
@@ -317,11 +302,7 @@ object StreamOps {
     * per-doc keep roll-up ([[chunkKeepDecisions]]) belongs in the sink
     * where batch semantics apply. */
   def chunkProbe(deltaDocs: DataFrame, corpusChunks: DataFrame): DataFrame =
-    graft.llm.Dedup.paragraphChunks(deltaDocs)
-      .join(corpusChunks.select("h").distinct().withColumn("in_corpus", lit(1L)),
-        Seq("h"), "left")
-      .select(col("doc_id").as("delta_id"), col("idx"), col("h"),
-        coalesce(col("in_corpus"), lit(0L)).as("in_corpus"))
+    chunkMembership(deltaDocs, corpusChunks.select("h").distinct())
 
   /** [[chunkProbe]] pre-wired to a corpus directory's PERSISTED
     * base-split chunk-hash set (graft.llm.Dedup.chunkHashesBase) —
@@ -331,15 +312,19 @@ object StreamOps {
     * distinct whatever corpus frame it is handed). */
   def chunkProbeFor(deltaDocs: DataFrame, s: org.apache.spark.sql.SparkSession,
       d: String): DataFrame =
+    chunkMembership(deltaDocs, graft.llm.Dedup.chunkHashesBase(s, d))
+
+  /** Delta chunks left-joined to a DISTINCT corpus hash set `hashes` (h). */
+  private def chunkMembership(deltaDocs: DataFrame, hashes: DataFrame): DataFrame =
     graft.llm.Dedup.paragraphChunks(deltaDocs)
-      .join(graft.llm.Dedup.chunkHashesBase(s, d).withColumn("in_corpus", lit(1L)),
-        Seq("h"), "left")
+      .join(hashes.withColumn("in_corpus", lit(1L)), Seq("h"), "left")
       .select(col("doc_id").as("delta_id"), col("idx"), col("h"),
         coalesce(col("in_corpus"), lit(0L)).as("in_corpus"))
 
   /** Per-doc keep decision over [[chunkProbe]] rows (sink-side batch
     * roll-up): the dedup_paragraph_delta majority rule — keep iff at
-    * most half the chunks already exist in the corpus. */
+    * most half the chunks already exist in the corpus. That gate IS
+    * this roll-up over [[chunkProbeFor]], run as one batch. */
   def chunkKeepDecisions(probe: DataFrame): DataFrame =
     probe.groupBy("delta_id")
       .agg(count(lit(1)).as("n_chunks"), sum("in_corpus").as("n_dup"))
@@ -347,27 +332,23 @@ object StreamOps {
         when(col("n_dup") * 2 <= col("n_chunks"), 1L).otherwise(0L)
           .as("keep_doc"))
 
-  /** Stream-static winnow-fingerprint probe — the STREAMING sibling of
+  /** Stream-static winnow-fingerprint probe — the STREAMING form of
     * the dedup_substring_delta gate (r16, completing the probe family
     * for the substring family): arriving documents winnow ONLY their
     * own text map-only (the codegen'd graft.functions.WinnowFps pass —
     * the SAME expression the batch gate and the index build use), then
-    * equality-join the PERSISTED fp-bucketed base-split index with the
-    * df stop-list read from the PERSISTED [[graft.llm.Dedup.winnowDfBase]]
-    * stat table (a static-static join folded into the base side — no
-    * aggregate anywhere in the plan, the r16 production-stop-list
-    * discipline the batch gate pins). Stateless pure append: no
-    * watermark, no streaming state — one row per shared (delta, base,
-    * fp); the per-pair n_shared roll-up ([[fpPairCounts]]) belongs in
-    * the sink where batch semantics apply (the spec replays it there
-    * and pins equality with the batch gate). */
+    * probe the PERSISTED fp-bucketed base-split index through
+    * [[graft.llm.Dedup.postingJoin]]'s probe form, the df stop-list
+    * read from the PERSISTED [[graft.llm.Dedup.winnowDfBase]] stat
+    * table (a static-static join folded into the base side — no
+    * aggregate anywhere in the plan). Stateless pure append: no
+    * watermark, no streaming state — one row per shared (delta_id,
+    * base_id, fp). The per-pair n_shared roll-up is [[fpPairCounts]];
+    * the batch gate is exactly that roll-up over [[fpProbeFor]]. */
   def fpProbe(deltaDocs: DataFrame, baseIndex: DataFrame, baseDf: DataFrame,
       dfCap: Long): DataFrame =
-    graft.llm.Dedup.winnowFps(deltaDocs)
-      .select(col("doc_id").as("delta_id"), col("fp"))
-      .join(baseIndex.select(col("doc_id").as("base_id"), col("fp"))
-        .join(baseDf.filter(col("df") <= dfCap).select("fp"), "fp"), "fp")
-      .select(col("delta_id"), col("base_id"), col("fp"))
+    graft.llm.Dedup.postingJoin(graft.llm.Dedup.winnowFps(deltaDocs),
+      Some(baseIndex), "fp", dfCap, Some(baseDf))
 
   /** [[fpProbe]] pre-wired to a corpus directory's persisted base-split
     * winnow artifacts — the streaming twin of dedup_substring_delta. */
@@ -381,27 +362,25 @@ object StreamOps {
   def fpPairCounts(probe: DataFrame): DataFrame =
     probe.groupBy("delta_id", "base_id").agg(count(lit(1)).as("n_shared"))
 
-  /** Stream-static shingle probe — the STREAMING sibling of the
+  /** Stream-static shingle probe — the STREAMING form of the
     * dedup_jaccard_delta gate (r16; with [[fpProbe]] this makes the
     * probe family symmetric with the batch O(delta) family across
     * every index type): arriving documents derive their distinct word
-    * 3-grams map-only — array_distinct over one row's own tokens, the
-    * same gram set graft.llm.Dedup.shinglesOf produces, with NO
-    * streaming-side distinct (that would be a stateful aggregate) —
-    * and carry their own denominator n1 = size(grams) as a map-only
-    * column on every emitted row. The probe equality-joins the
-    * PERSISTED gram-bucketed base-split index with the stop-gram list
-    * read from the PERSISTED [[graft.llm.Dedup.shingleDfBase]] stat
-    * table. Stateless pure append; the per-pair intersection count,
-    * the [[graft.llm.Dedup.shingleSizesBase]] n2 lookup, and the
-    * Jaccard arithmetic belong in the sink ([[gramPairJaccard]] — the
-    * spec pins the roll-up against the batch gate). */
+    * 3-grams map-only (graft.llm.Dedup.shingleRowsWithN1 — the gram set
+    * graft.llm.Dedup.shinglesOf produces, with NO streaming-side
+    * distinct, which would be a stateful aggregate) and carry their own
+    * denominator n1 as a map-only column on every row. The probe is
+    * [[graft.llm.Dedup.postingJoin]]'s probe form against the PERSISTED
+    * gram-bucketed base-split index, the stop-gram list read from the
+    * PERSISTED [[graft.llm.Dedup.shingleDfBase]] stat table: rows
+    * (delta_id, n1, base_id, gram). Stateless pure append; the per-pair
+    * intersection count, the n2 lookup and the Jaccard arithmetic are
+    * [[gramPairJaccard]], and the batch gate is exactly that roll-up
+    * over [[gramProbeFor]]. */
   def gramProbe(deltaDocs: DataFrame, baseIndex: DataFrame, baseDf: DataFrame,
       dfCap: Long): DataFrame =
-    graft.llm.Dedup.shingleRowsWithN1(deltaDocs)
-      .join(baseIndex.select(col("doc_id").as("base_id"), col("gram"))
-        .join(baseDf.filter(col("df") <= dfCap).select("gram"), "gram"), "gram")
-      .select(col("delta_id"), col("n1"), col("base_id"), col("gram"))
+    graft.llm.Dedup.postingJoin(graft.llm.Dedup.shingleRowsWithN1(deltaDocs),
+      Some(baseIndex), "gram", dfCap, Some(baseDf))
 
   /** [[gramProbe]] pre-wired to a corpus directory's persisted
     * base-split shingle artifacts — the streaming twin of
@@ -414,15 +393,16 @@ object StreamOps {
   /** Sink-side Jaccard roll-up over [[gramProbe]] rows: per-pair
     * intersection count (n1 rides every row, so first() recovers it
     * without a second stream pass), n2 from the persisted base size
-    * table, then the batch gate's rounding + threshold. */
+    * table `baseSizes` (doc_id, n), then the batch gate's rounding
+    * ([[graft.llm.Dedup.jaccardOf]]) + threshold. */
   def gramPairJaccard(probe: DataFrame, baseSizes: DataFrame,
       minJ: Double): DataFrame =
     probe.groupBy("delta_id", "base_id")
       .agg(count(lit(1)).as("inter"), first("n1").as("n1"))
       .join(baseSizes.select(col("doc_id").as("base_id"), col("n").as("n2")),
         "base_id")
-      .withColumn("jaccard", round(
-        col("inter").cast("double") / (col("n1") + col("n2") - col("inter")), 6))
+      .withColumn("jaccard",
+        graft.llm.Dedup.jaccardOf(col("inter"), col("n1"), col("n2")))
       .filter(col("jaccard") >= minJ)
       .select("delta_id", "base_id", "jaccard")
 

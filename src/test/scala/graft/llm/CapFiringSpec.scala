@@ -72,6 +72,94 @@ class CapFiringSpec extends SparkSuite {
       s"fixture no longer adversarial: $uncapped")
   }
 
+  test("probe-form df cap fires on base postings only") {
+    // the delta-vs-base probe of the streaming probes and the delta
+    // gates. cap = 2. Base docs 1..3; the delta docs are NOT in the
+    // base, and their own occurrences must not count toward df.
+    val cap = 2L
+    // shingle probe: delta 100 holds grams A, B, C (n1 = 3), delta 101
+    // holds only A (n1 = 1). A sits in base docs 1, 2 (df = 2 = cap —
+    // kept, though with both delta docs it occurs 4 times); B in base
+    // docs 1, 2, 3 (df = 3 = cap + 1 — dropped); C in base doc 1 only.
+    // Base sizes: doc 1 = {A, B, C, Z} → 4, doc 2 = {A, B} → 2,
+    // doc 3 = {B} → 1.
+    val (a, b, c) = ("alpha beta gamma", "beta gamma delta", "gamma delta epsilon")
+    val delta = Seq(100L -> "alpha beta gamma delta epsilon", 101L -> "alpha beta gamma")
+      .toDF("doc_id", "text")
+    val baseGrams = Seq(1L -> a, 1L -> b, 1L -> c, 1L -> "zeta eta theta",
+      2L -> a, 2L -> b, 3L -> b).toDF("doc_id", "gram")
+    val gramDf = Seq(a -> 2L, b -> 3L, c -> 1L, "zeta eta theta" -> 1L).toDF("gram", "df")
+    val probe = graft.streaming.StreamOps.gramProbe(delta, baseGrams, gramDf, cap)
+    assert(probe.collect().map(r =>
+        (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3))).toSet ==
+      Set((100L, 3L, 1L, a), (100L, 3L, 2L, a), (100L, 3L, 1L, c),
+        (101L, 1L, 1L, a), (101L, 1L, 2L, a)),
+      "A (df = cap) kept for both delta docs, B (df = cap + 1) dropped")
+    val sizes = Seq(1L -> 4L, 2L -> 2L, 3L -> 1L).toDF("doc_id", "n")
+    // (100, 1): A, C shared → 2 / (3 + 4 − 2) = 0.4; (100, 2): A → 1/4;
+    // (101, 1): A → 1/4; (101, 2): A → 1/2; no (100, 3) — only B links it
+    val jac = graft.streaming.StreamOps.gramPairJaccard(probe, sizes, minJ = 0.0)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    assert(jac == Set((100L, 1L, 0.4), (100L, 2L, 0.25), (101L, 1L, 0.25), (101L, 2L, 0.5)),
+      s"probe-form Jaccard roll-up: $jac")
+
+    // winnow probe: two identical delta docs (their fingerprints occur
+    // twice on the delta side); three of those fingerprints are planted
+    // in the base: fa in docs 1, 2 (df = cap), fb in docs 1, 2, 3
+    // (df = cap + 1), fc in doc 3
+    val text = "the quick brown fox jumps over the lazy dog while " +
+      "a patient heron waits in the reeds for the morning tide to turn"
+    val deltaFp = Seq(200L -> text, 201L -> text).toDF("doc_id", "text")
+    val fps = Dedup.winnowFps(deltaFp.limit(1)).collect().map(_.getLong(1)).distinct.sorted
+    assert(fps.length >= 3, s"fixture text winnows to too few fingerprints: ${fps.toSeq}")
+    val Array(fa, fb, fc) = fps.take(3)
+    val baseFps = Seq(1L -> fa, 2L -> fa, 1L -> fb, 2L -> fb, 3L -> fb, 3L -> fc)
+      .toDF("doc_id", "fp")
+    val fpDf = Seq(fa -> 2L, fb -> 3L, fc -> 1L).toDF("fp", "df")
+    val want = for (d <- Set(200L, 201L); (bid, f) <- Seq((1L, fa), (2L, fa), (3L, fc)))
+      yield (d, bid, f)
+    val fpRows = graft.streaming.StreamOps.fpProbe(deltaFp, baseFps, fpDf, cap)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    assert(fpRows == want, s"fa (df = cap) kept, fb (df = cap + 1) dropped: $fpRows")
+    // without the persisted stat, the probe form counts df over the BASE
+    // postings — the delta side's two copies of fa must not push it over
+    val derived = Dedup.postingJoin(Dedup.winnowFps(deltaFp), Some(baseFps), "fp", cap, None)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    assert(derived == want, s"df must count base postings only: $derived")
+    assert(graft.streaming.StreamOps.fpPairCounts(
+        graft.streaming.StreamOps.fpProbe(deltaFp, baseFps, fpDf, cap))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet ==
+      want.map { case (d, bid, _) => (d, bid, 1L) })
+  }
+
+  test("the df-cap filter lives in src/main/scala only inside Dedup.postingJoin") {
+    import scala.jdk.CollectionConverters._
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+    val files =
+      try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+      finally walk.close()
+    val capFilter = """\.filter\(col\("df"\) <=""".r
+    // postingJoin's body: from its def to the first line back at the
+    // object's member indent (the closing brace)
+    def kernel(src: String): Option[(Int, Int)] = {
+      val at = src.indexOf("def postingJoin(")
+      if (at < 0) None
+      else Some((at, "\n  \\S".r.findFirstMatchIn(src.substring(at)).fold(src.length)(at + _.start)))
+    }
+    val (inside, outside) = files.flatMap { p =>
+      val src = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+      val span = kernel(src)
+      capFilter.findAllMatchIn(src).map { m =>
+        val line = src.substring(0, m.start).count(_ == '\n') + 1
+        (span.exists { case (a, b) => m.start > a && m.start < b }, s"${p.getFileName}:$line")
+      }
+    }.partition(_._1)
+    assert(outside.isEmpty,
+      s"df-capped posting join written outside Dedup.postingJoin: ${outside.map(_._2)}")
+    assert(inside.map(_._2.takeWhile(_ != ':')) == Seq("Dedup.scala"),
+      s"postingJoin must hold the one df-cap filter: ${inside.map(_._2)}")
+  }
+
   test("semdedup cell cap fires: an over-cap cell is dropped WHOLE, " +
       "small cells still pair") {
     // cell 1 holds cap+1 identical unit vectors — every pair is an exact

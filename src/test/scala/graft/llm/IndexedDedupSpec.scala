@@ -82,8 +82,9 @@ class IndexedDedupSpec extends SparkSuite {
     Dedup.minhashIndex.fresh(spark, sfDir) // ensure built
     // tamper with the pointer's FINGERPRINT field through ServedIndex's
     // own meta reader/writer (the versioned layout keeps active/prev
-    // tokens beside the fp; direct java.io writes would leave a stale
-    // .crc sidecar and fail with ChecksumException, not staleness)
+    // tokens beside the fp, and a fourth line checksums all three: a
+    // direct write that left the old checksum line would read as no
+    // pointer at all — a rebuild for a torn pointer, not for staleness)
     val dirName = s"minhash${sfDir.replaceAll("[^A-Za-z0-9]", "_")}"
     val root = graft.sources.ServedIndex.rootPath(dirName)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -92,7 +93,7 @@ class IndexedDedupSpec extends SparkSuite {
 
     // 1. stale fingerprint → rebuild into a NEW version dir (fingerprint
     // restored to current; old active dir retained as the grace copy)
-    graft.sources.ServedIndex.writeMeta(spark, fs, root, a0, p0, "0|0|0")
+    graft.sources.ServedIndex.writeMeta(fs, root, a0, p0, "0|0|0")
     Dedup.minhashIndex.fresh(spark, sfDir)
     val (a1, p1, fp1) = meta()
     assert(fp1 == fp0, "rebuild must restore the current corpus fingerprint")
