@@ -257,10 +257,11 @@ object Bench {
     // med 5.6 s vs min 0.58 s in BENCH_r09), conflating ingest-time and
     // query-time cost. After this loop the gates measure SERVE cost;
     // the builds are reported as their own index_build_s map. On a warm
-    // corpus these are cheap serves (fingerprint check only) — the map
-    // then records ~0 s, which is itself the signal that nothing was
-    // rebuilt. Build failures go to the errors map (prefixed) rather
-    // than killing the bench.
+    // corpus these are cheap serves (one content-fingerprint aggregate per
+    // scope table, then a pointer read) — the map then records well under
+    // a build, which is itself the signal that nothing was rebuilt. Build
+    // failures go to the errors map (prefixed) rather than killing the
+    // bench.
     val indexBuilds = SparkEntry.indexes.toSeq.sortBy(_._1).map { case (name, fn) =>
       val t0 = System.nanoTime()
       val err: Option[String] =

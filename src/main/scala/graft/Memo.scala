@@ -2,8 +2,10 @@ package graft
 
 /** A bounded in-JVM memo: the one mechanism behind every driver-side
   * cache of a value derived from corpus state (reader frames, counts,
-  * fingerprints, trained models, session-scoped edge sets, prepared
-  * graphs).
+  * content fingerprints, trained models, session-scoped edge sets,
+  * prepared graphs). Persisted indexes keep no cache of their own: each
+  * serve compares a memoized content fingerprint with the on-disk
+  * pointer.
   *
   * Contract:
   * - ONE ENTRY PER KEY. `apply(key, stamp)` serves the entry only while

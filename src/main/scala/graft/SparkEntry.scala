@@ -65,9 +65,9 @@ object SparkEntry {
 
   /** Build-or-serve entry points for every PERSISTED index table, keyed
     * by row name and derived from [[graft.sources.IndexSpec.all]], so no
-    * index can be missing here. Each entry is the row's session-cached
-    * serve: it forces the build when stale and is a cheap serve when
-    * fresh. Bench drives these during warmup, timing each, so the
+    * index can be missing here. Each entry is the row's serve
+    * (`IndexSpec.apply`): it forces the build when stale and is a cheap
+    * serve when fresh. Bench drives these during warmup, timing each, so the
     * one-off index-build cost is reported as its own `index_build_s`
     * metric instead of being silently charged to whichever indexed gate
     * happens to run first in a cold window — exactly the split a
@@ -77,9 +77,7 @@ object SparkEntry {
     * Keys changed when the map became derived: `chunks` (the
     * paragraph-chunk index) is new, so Bench now pre-builds and times it
     * too; `vecstore` is now `vec_store`; `ivf` is now two rows,
-    * `ivf_cents` and `ivf_assign`. The `copairs` and `tradeedges`
-    * entries now take the session-cached serve like every other row
-    * (they re-checked the fingerprint on every call before). */
+    * `ivf_cents` and `ivf_assign`. */
   def indexes: Map[String, (SparkSession, String) => DataFrame] =
     graft.sources.IndexSpec.all.map(r => r.name -> (r.apply _)).toMap
 }

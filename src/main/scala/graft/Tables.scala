@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{coalesce, col, count, lit, shiftright, sum, xxhash64}
 
 /** Loaders for the driver-generated parquet tables (TESTDATA.md).
   *
@@ -105,7 +106,7 @@ object Tables {
   /** Filesystem freshness stamp of one table's parquet dir — total
     * length, dir + newest part mtimes, and a SHA-256 of the per-file
     * (name, length) manifest. The stamp of every table-derived
-    * [[Memo]] ([[load]], [[cachedCount]], [[fingerprint]]): any
+    * [[Memo]] ([[load]], [[cachedCount]], [[contentFp]]): any
     * metadata-visible rewrite changes it, so those memos miss naturally
     * on a corpus regen. Unstampable (exotic FS) → a unique value, i.e.
     * never cached.
@@ -150,16 +151,35 @@ object Tables {
   def cachedCount(spark: SparkSession, sfDir: String, name: String): Long =
     counts((sfDir, name), fsStamp(spark, sfDir, name))(load(spark, sfDir, name).count())
 
-  /** A corpus fingerprint memoized per (tag, dir) and stamped by the
-    * [[fsStamp]]s of the `tables` it reads: an index's freshness check
-    * costs one aggregate per corpus version instead of one per serve,
-    * and a regen misses without a data scan. `compute` must read only
-    * `tables`. */
-  private val fingerprints = new Memo[(String, String), String](64)
+  /** Content fingerprints, memoized per (dir, table, cols, where) and
+    * stamped by the table's [[fsStamp]]: a warm call costs file stats
+    * only, and a rewrite misses without a data scan. */
+  private val fingerprints =
+    new Memo[(String, String, Seq[String], Column), String](64)
 
-  private[graft] def fingerprint(spark: SparkSession, sfDir: String,
-      tag: String, tables: String*)(compute: => String): String =
-    fingerprints((tag, sfDir), tables.map(fsStamp(spark, sfDir, _)))(compute)
+  /** THE freshness key of everything derived from `table` (persisted
+    * indexes, corpus memos): the count of rows passing `where`, plus the
+    * order-insensitive sum of a per-row `xxhash64` over `cols` — the
+    * columns the derived data reads. A per-row hash sees a changed value
+    * and a changed key pairing (a permutation of one column keeps every
+    * column sum but moves the hash sum); partitioning and row order do
+    * not move it.
+    *
+    * The sum is taken in three 21-bit limbs (the top one signed), each
+    * exact in a long for 2^42 rows, and recombined exactly: a plain
+    * `sum(xxhash64(…))` overflows — and throws under ANSI — within a few
+    * rows. */
+  private[graft] def contentFp(spark: SparkSession, sfDir: String,
+      table: String, cols: Seq[String], where: Column = lit(true)): String =
+    fingerprints((sfDir, table, cols, where), fsStamp(spark, sfDir, table)) {
+      val h = xxhash64(cols.map(col): _*)
+      val limbs = Seq(shiftright(h, 42), shiftright(h, 21).bitwiseAND(0x1FFFFFL),
+        h.bitwiseAND(0x1FFFFFL))
+      val r = load(spark, sfDir, table).filter(where)
+        .agg(count(lit(1)), limbs.map(l => coalesce(sum(l), lit(0L))): _*).head()
+      val total = (BigInt(r.getLong(1)) << 42) + (BigInt(r.getLong(2)) << 21) + r.getLong(3)
+      s"${r.getLong(0)}|$total"
+    }
 
   /** Drop a managed table AND its warehouse location. A directory left
     * by a previous session is invisible to a fresh session's in-memory

@@ -143,19 +143,15 @@ object FlexDice {
   /** Memo for the dice: the three gates are three VIEWS of one
     * analysis (cells / outliers / clusters), and phase 1 is
     * deterministic, so serving the checkpointed (terminal, noise)
-    * frames once per corpus fingerprint is bit-identical to
-    * recomputing. Values are eager cuts ([[Truncate]]) whose blocks the
-    * ContextCleaner reclaims once the entry is dropped. */
+    * frames once per content fingerprint of the columns [[pts]] reads
+    * is bit-identical to recomputing. Values are eager cuts
+    * ([[Truncate]]) whose blocks the ContextCleaner reclaims once the
+    * entry is dropped. */
   private val dice = new Memo[String, (DataFrame, DataFrame)](8)
 
-  private def phase1Cached(s: SparkSession, d: String): (DataFrame, DataFrame) = {
-    val fp = Tables.fingerprint(s, d, "events", "events") {
-      val r = Tables.load(s, d, "events").agg(
-        count(lit(1)).cast("long"), coalesce(sum("event_id"), lit(0L))).head()
-      s"${r.getLong(0)}|${r.getLong(1)}"
-    }
-    dice(d, fp)(phase1(s, d))
-  }
+  private def phase1Cached(s: SparkSession, d: String): (DataFrame, DataFrame) =
+    dice(d, Tables.contentFp(s, d, "events", Seq("event_id", "value", "user_id")))(
+      phase1(s, d))
 
   /** Phase 1. Returns (terminal cells, noise objects):
     * terminal = (level, cx, cy, density ∈ DENSE|SPARSE, n_objects);

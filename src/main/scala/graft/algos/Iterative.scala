@@ -38,23 +38,14 @@ object Iterative {
       .distinct()
   }
 
-  // Fingerprint memoized per corpus version: each pagerank gate would
-  // otherwise re-run two full-table aggregates per invocation.
+  /** Freshness key of the trade graph: the content fingerprints of the
+    * two key pairs [[tradeEdgesBuild]] reads (the lineitem half is the
+    * one [[Graph.coPairsTable]] keys on). */
   private[graft] def tradeEdgesFp(s: SparkSession, d: String): String =
-    Tables.fingerprint(s, d, "tradeedges", "lineitem", "orders") {
-      // sum(hash(k1,k2)) rather than sum(k1)+sum(k2): plain column sums
-      // are permutation-blind (swapping o_custkey between two orders
-      // preserves count and sum but changes the edge set), while a
-      // per-ROW hash folds the key PAIRING into the aggregate, so any
-      // reassignment moves it.
-      val rl = Tables.load(s, d, "lineitem").agg(
-        count(lit(1)).cast("long"),
-        coalesce(sum(hash(col("l_orderkey"), col("l_suppkey")).cast("long")), lit(0L))).head()
-      val ro = Tables.load(s, d, "orders").agg(
-        count(lit(1)).cast("long"),
-        coalesce(sum(hash(col("o_orderkey"), col("o_custkey")).cast("long")), lit(0L))).head()
-      s"${rl.getLong(0)}|${rl.getLong(1)}|${ro.getLong(0)}|${ro.getLong(1)}"
-    }
+    Tables.contentFp(s, d, "lineitem", LineitemKeys) + "|" +
+      Tables.contentFp(s, d, "orders", Seq("o_orderkey", "o_custkey"))
+
+  private[graft] val LineitemKeys = Seq("l_orderkey", "l_suppkey")
 
   /** [[tradeEdgesBuild]] with the out-degree annotated at build time —
     * the degree is a pure function of the edge set, so persisting it in
@@ -83,7 +74,8 @@ object Iterative {
     * parallelism, and caches them as primitive blocks. */
   private[graft] val tradeEdges: IndexSpec = IndexSpec("tradeedges", "tradeedges",
     "src BIGINT, dst BIGINT, deg BIGINT", "src", IndexSpec.Buckets,
-    "lineitem, orders", tradeEdgesFp, tradeEdgesDegBuild)
+    "lineitem (l_orderkey, l_suppkey), orders (o_orderkey, o_custkey)",
+    tradeEdgesFp, tradeEdgesDegBuild)
 
   /** One prepared trade graph per JVM, stamped by the corpus fingerprint
     * (memoized per [[Tables.fsStamp]], so a hit costs a few file stats

@@ -803,17 +803,12 @@ object AnnOps {
     topK(assigned.join(probes, "cid").filter(col("vec_id") =!= col("qid")))
   }
 
-  /** Cheap embeddings freshness fingerprint (count, id sum, total
-    * element count) for the persisted IVF index — same contract as
-    * Dedup's corpus fingerprint. */
+  /** Freshness key of every embeddings-derived index and memo: the
+    * content fingerprint of the two columns [[vecs]] reads. */
   private def embFingerprint(s: SparkSession, d: String): String =
-    Tables.fingerprint(s, d, "embeddings", "embeddings") {
-      val r = Tables.load(s, d, "embeddings").agg(
-        count(lit(1)).cast("long"),
-        coalesce(sum("vec_id"), lit(0L)),
-        coalesce(sum(size(col("embedding"))).cast("long"), lit(0L))).head()
-      s"${r.getLong(0)}|${r.getLong(1)}|${r.getLong(2)}"
-    }
+    Tables.contentFp(s, d, "embeddings", Seq("vec_id", "embedding"))
+
+  private val EmbScope = "embeddings (vec_id, embedding)"
 
   /** Corpus size for the SRP bit-width choice — memoized per corpus
     * stamp (Tables.cachedCount; a production catalog supplies this for
@@ -959,7 +954,7 @@ object AnnOps {
     * added with, outside the sf1 join tail the 32-bucket retune
     * targeted (a change rebuilds every served copy). */
   val vecStore: IndexSpec = IndexSpec("vec_store", "vec_store",
-    "vec_id BIGINT, e ARRAY<DOUBLE>, nrm DOUBLE", "vec_id", 8, "embeddings",
+    "vec_id BIGINT, e ARRAY<DOUBLE>, nrm DOUBLE", "vec_id", 8, EmbScope,
     (s, d) => "vecstore1|" + embFingerprint(s, d), vecs)
 
   /** The PERSISTED SRP band index (r14): (vec_id, band, bk) for the
@@ -971,7 +966,7 @@ object AnnOps {
     * serving stale-width buckets (which would silently miss every
     * cross-width collision). */
   val lshIndex: IndexSpec = IndexSpec("lsh_bands", "lsh_bands",
-    "vec_id BIGINT, band BIGINT, bk BIGINT", "bk", 8, "embeddings, band width",
+    "vec_id BIGINT, band BIGINT, bk BIGINT", "bk", 8, s"$EmbScope, band width",
     (s, d) => s"lshband1|nb=${bandBitsFor(embCount(s, d))}|" + embFingerprint(s, d),
     (s, d) => lshBuckets(s, vecs(s, d), bandBitsFor(embCount(s, d))))
 
@@ -986,7 +981,7 @@ object AnnOps {
     * index minus the arriving batch, and base-side occupancy is not
     * derivable from the whole-corpus list.) */
   val lshHot: IndexSpec = IndexSpec("lsh_hot", "lsh_hot",
-    "band BIGINT, bk BIGINT", "bk", 0, "embeddings, band width, cap",
+    "band BIGINT, bk BIGINT", "bk", 0, s"$EmbScope, band width, cap",
     (s, d) => s"lshhot1|cap=$LshBucketCap|nb=${bandBitsFor(embCount(s, d))}|" +
       embFingerprint(s, d),
     (s, d) => lshIndex(s, d).groupBy("band", "bk").agg(count(lit(1)).as("occ"))
@@ -1027,12 +1022,12 @@ object AnnOps {
   /** The PERSISTED IVF index (round-8 verdict item 2): the centroids
     * and the vec→cid assignment, so the one-off O(nK) assignment scan
     * leaves the per-query plan. The centroid table is unbucketed (0):
-    * K = ⌈√n⌉ rows, always broadcast. It shares the session-cached
+    * K = ⌈√n⌉ rows, always broadcast. It shares the memoized
     * quantizer with ann_ivf_topk — a rebuild right after the inline twin
     * trained (or vice versa) runs Lloyd once, not twice. */
   val ivfCentroids: IndexSpec = IndexSpec("ivf_cents", "ivf_cents",
     "cid BIGINT, ce ARRAY<DOUBLE>, cnrm DOUBLE", "cid", 0,
-    "embeddings, quantizer", (s, d) => AlgoTag + embFingerprint(s, d),
+    s"$EmbScope, quantizer", (s, d) => AlgoTag + embFingerprint(s, d),
     (s, d) => centDf(s, trainedCents(s, d, vecs(s, d))))
 
   /** The IVF assignment, bucketed on cid (8, as [[vecStore]]); its
@@ -1040,7 +1035,7 @@ object AnnOps {
     * runs once per rebuild, never once per table. */
   val ivfAssignment: IndexSpec = IndexSpec("ivf_assign", "ivf_assign",
     "vec_id BIGINT, e ARRAY<DOUBLE>, nrm DOUBLE, cid BIGINT", "cid", 8,
-    "embeddings, quantizer", (s, d) => AlgoTag + embFingerprint(s, d),
+    s"$EmbScope, quantizer", (s, d) => AlgoTag + embFingerprint(s, d),
     (s, d) => ivfAssign(vecs(s, d), ivfCentroids(s, d)))
 
   /** (assignment, centroids), centroids served first. */

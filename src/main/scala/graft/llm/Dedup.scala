@@ -1143,42 +1143,32 @@ object Dedup {
         "concat(bb.band, ':', array_join(transform(bb.bk, x -> cast(x AS string)), ','))")
         .as("bkey"))
 
-  /** Cheap corpus freshness fingerprint for the whole-corpus index rows:
-    * row count, id sum, and total char length — a driver data regen
-    * changes it (and forces a rebuild) without the fingerprint pass
-    * paying anything close to the signature pipeline it guards. */
+  /** Freshness key of the whole-corpus index rows: the content
+    * fingerprint of the two columns every document-derived build reads. */
   private[llm] def corpusFingerprint(s: SparkSession, d: String): String =
-    Tables.fingerprint(s, d, "corpus", "documents") {
-      val r = Tables.load(s, d, "documents").agg(
-        count(lit(1)).cast("long"),
-        coalesce(sum("doc_id"), lit(0L)),
-        coalesce(sum(length(col("text"))).cast("long"), lit(0L))).head()
-      s"${r.getLong(0)}|${r.getLong(1)}|${r.getLong(2)}"
-    }
+    Tables.contentFp(s, d, "documents", DocCols)
+
+  private val DocCols = Seq("doc_id", "text")
 
   /** The deterministic "existing corpus" split every delta-ingest gate
     * stands in on: documents with source = BaseSource are the
     * already-ingested corpus; everything else is the arriving batch. */
   private[llm] val BaseSource = "src0"
-  private val BaseScope = s"documents where source = $BaseSource"
+  private val BaseScope = s"$CorpusScope where source = $BaseSource"
+
+  private val isBase = col("source") === BaseSource
 
   private def baseDocs(s: SparkSession, d: String): DataFrame =
-    Tables.load(s, d, "documents").filter(col("source") === BaseSource)
+    Tables.load(s, d, "documents").filter(isBase)
 
   /** [[corpusFingerprint]] over the BASE split only, tagged so it can
     * never collide with a whole-corpus fingerprint — the freshness key
     * of the base-split index family below. */
   private[llm] def baseFingerprint(s: SparkSession, d: String): String =
-    Tables.fingerprint(s, d, "base", "documents") {
-      val r = baseDocs(s, d).agg(
-        count(lit(1)).cast("long"),
-        coalesce(sum("doc_id"), lit(0L)),
-        coalesce(sum(length(col("text"))).cast("long"), lit(0L))).head()
-      s"base:$BaseSource|${r.getLong(0)}|${r.getLong(1)}|${r.getLong(2)}"
-    }
+    s"base:$BaseSource|" + Tables.contentFp(s, d, "documents", DocCols, isBase)
 
   // a constant (inlined), so rows declared above this line may use it
-  private final val CorpusScope = "documents"
+  private final val CorpusScope = "documents (doc_id, text)"
 
   /** One document-derived index as its whole-corpus row plus its
     * BASE-SPLIT twin (r16). The twin appends `_base` to name and table,

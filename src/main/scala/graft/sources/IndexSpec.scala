@@ -16,13 +16,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *   version otherwise. The stored fingerprint is `fp(s, d)` plus the
   *   layout (`schema`, `bucketCol`, `buckets`), so a layout edit rebuilds
   *   every served copy — CATALOG.md pins the layout for that reason;
-  * - `fp` covers the data `scope` names and nothing else; it is cheap
-  *   next to `build` (a memoized aggregate, see `Tables.fingerprint`);
-  * - `apply(s, d)` is the session-cached serve ([[ServedIndex.cached]]):
-  *   `fp` is evaluated only on a serve-cache miss, so a warm session
-  *   pays one `_graft_meta` read per call and no corpus scan;
-  * - `fresh(s, d)` re-evaluates `fp` and re-registers a cold catalog on
-  *   every call ([[ServedIndex.apply]]).
+  * - `fp` covers the columns `scope` names and nothing else, through
+  *   [[graft.Tables.contentFp]] (plus a version prefix where the build
+  *   has parameters of its own); it is memoized per table stamp, so a
+  *   warm `apply(s, d)` pays file stats, one `_graft_meta` read and a
+  *   catalog lookup, and runs no Spark job;
+  * - `apply(s, d)` is the per-table-locked serve ([[ServedIndex.apply]]):
+  *   it re-evaluates `fp` on every call, so a rewrite of a scope table
+  *   is served fresh on the next call, with no hook to reset.
   *
   * `buckets` = 0 writes the table unbucketed (`bucketCol` then only
   * rides the fingerprint). */
@@ -32,12 +33,6 @@ final case class IndexSpec(name: String, table: String, schema: String,
     build: (SparkSession, String) => DataFrame) {
 
   def apply(s: SparkSession, d: String): DataFrame = {
-    val sfx = ServedIndex.suffix(d)
-    ServedIndex.cached(s, table + sfx, name + sfx, fp(s, d), schema,
-      bucketCol, buckets)(build(s, d))
-  }
-
-  def fresh(s: SparkSession, d: String): DataFrame = {
     val sfx = ServedIndex.suffix(d)
     ServedIndex(s, table + sfx, name + sfx, fp(s, d), schema,
       bucketCol, buckets)(build(s, d))

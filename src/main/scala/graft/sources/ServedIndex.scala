@@ -12,14 +12,19 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * directories (v_<token>/) plus one small `_graft_meta` pointer file
   * (active version + previous version + corpus fingerprint + a CRC32
   * of those three) that is committed ATOMICALLY (temp file + rename)
-  * and only AFTER the data dir is fully written. Three paths:
+  * and only AFTER the data dir is fully written. Every serve compares
+  * the caller's fingerprint with the pointer's — there is no session
+  * cache in between, so a rewrite inside a session is noticed on the
+  * next serve. Three paths:
   * - meta missing/stale fingerprint → (re)build into a FRESH version
   *   dir, swing the pointer, then GC superseded versions — keeping the
   *   immediately-previous version as a grace copy so a reader that
   *   resolved its file listing before the swing never observes a
   *   mid-rebuild delete;
   * - fingerprint fresh, this process registered the active version →
-  *   serve as-is (the hot path — zero I/O beyond the meta read);
+  *   serve as-is (the hot path: the meta read and a catalog lookup, no
+  *   Spark job — the caller's fingerprint is a [[graft.Tables.contentFp]]
+  *   memo hit, i.e. file stats);
   * - fingerprint fresh but the catalog is cold (a NEW SparkSession /
   *   JVM) or points at a superseded version (ANOTHER process rebuilt)
   *   → re-register DDL against the active files, no rewrite.
@@ -51,15 +56,6 @@ object ServedIndex {
     * so a collision fix lands at every index site at once. */
   def suffix(d: String): String = d.replaceAll("[^A-Za-z0-9]", "_")
 
-  // Build epoch per table, bumped on every rebuild (and on observing a
-  // cross-process rebuild): session-scoped serve caches (below) hold
-  // verified-fresh markers — the epoch lets them invalidate instead of
-  // serving a superseded version for the rest of the session.
-  private val epochs =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-  private def epoch(tbl: String): Long =
-    Option(epochs.get(tbl)).map(_.longValue).getOrElse(0L)
-
   // The version dir this PROCESS last registered the table against —
   // lets a serve detect that another process swung the pointer (the
   // catalog entry still resolves, but to a superseded dir).
@@ -72,74 +68,6 @@ object ServedIndex {
     locks.computeIfAbsent(tbl, _ => new Object).synchronized {
       serve(s, tbl, dirName, fp, schemaDdl, bucketCol, buckets)(build)
     }
-
-  /** Session-scoped serve: skip the per-call freshness fingerprint (a
-    * full corpus scan — it was costing every serve-path gate one corpus
-    * read per invocation, twice for dedup_eval) after the first serve in
-    * a session. `fp` is by-name and only evaluated on a cache miss. The
-    * cached value is ONLY the build epoch the table was last verified
-    * fresh under in this session — NOT the DataFrame: a Dataset strongly
-    * references its SparkSession, and a DataFrame value would pin the
-    * WeakHashMap's weak session key forever (session leak). A hit
-    * re-derives the lazy plan via s.table(tbl) (a catalog lookup — the
-    * expensive part being skipped is the fingerprint corpus scan). A
-    * same-JVM rebuild bumps the epoch and the next call re-serves. */
-  private val serveCache = new java.util.WeakHashMap[SparkSession,
-    scala.collection.mutable.Map[String, Long]]()
-
-  /** Invalidate every session's serve cache (ADVICE r9): a long-lived
-    * session (e.g. the Python entry path) otherwise never re-checks the
-    * corpus fingerprint, silently serving a stale index after an on-disk
-    * corpus regen. Call after any external data regen; the next serve of
-    * each table redoes the freshness check. */
-  def resetCaches(): Unit = serveCache.synchronized { serveCache.clear() }
-
-  def cached(s: SparkSession, tbl: String, dirName: String, fp: => String,
-      schemaDdl: String, bucketCol: String, buckets: Int)(
-      build: => DataFrame): DataFrame = {
-    // Capture the epoch BEFORE the serve (ADVICE r9 TOCTOU): a rebuild
-    // landing between apply() and the cache put would otherwise tag the
-    // pre-rebuild plan with the post-rebuild epoch and serve a plan over
-    // deleted part files. Under the pre-read epoch a concurrent rebuild
-    // merely invalidates this entry → one extra re-serve, never staleness.
-    val preEpoch = epoch(tbl)
-    val hit = serveCache.synchronized {
-      serveCache.computeIfAbsent(s,
-        _ => scala.collection.mutable.Map.empty[String, Long])
-        .get(tbl).contains(preEpoch)
-    }
-    // A hit must still notice ANOTHER process swinging the pointer
-    // (possibly twice — beyond the grace copy) mid-session (ADVICE r10):
-    // re-stat the tiny _graft_meta and fall back to the full serve —
-    // which re-registers DDL against the new active version and bumps
-    // the epoch — when the active token moved. This is a local
-    // metadata-file read: no Spark job, no corpus scan; the expensive
-    // fingerprint evaluation stays cache-skipped.
-    if (hit && activeUnmoved(s, dirName, tbl)) s.table(tbl)
-    else {
-      // fingerprint + build-or-serve OUTSIDE the cache lock (they run
-      // Spark jobs); concurrent misses race benignly — apply() is
-      // per-table-locked and the loser takes the serve path
-      val df = apply(s, tbl, dirName, fp, schemaDdl, bucketCol, buckets)(build)
-      serveCache.synchronized {
-        serveCache.computeIfAbsent(s,
-          _ => scala.collection.mutable.Map.empty[String, Long])
-          .put(tbl, preEpoch)
-      }
-      df
-    }
-  }
-
-  /** True iff the on-disk active version token still equals the one
-    * this process registered the table against. Unreadable/missing meta
-    * or an unregistered table count as "moved" — the caller then takes
-    * the full serve path, which rebuilds or re-registers as needed. */
-  private def activeUnmoved(s: SparkSession, dirName: String, tbl: String): Boolean =
-    try {
-      val root = rootPath(dirName)
-      val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-      readMeta(fs, root).exists(m => Option(registered.get(tbl)).contains(m._1))
-    } catch { case _: java.io.IOException => false }
 
   private val UTF8 = java.nio.charset.StandardCharsets.UTF_8
 
@@ -257,11 +185,19 @@ object ServedIndex {
             fs.delete(st.getPath, true)
         }
       registered.put(tbl, token)
-      epochs.merge(tbl, 1L, (a, b) => a + b)
+      s.table(tbl)
     } else {
       val active = meta.get._1
       val crossProcessSwing = Option(registered.get(tbl)).exists(_ != active)
-      if (crossProcessSwing || !s.catalog.tableExists(tbl)) {
+      // the lookup itself is the catalog check: a cold catalog (a NEW
+      // session or JVM) fails it, and `catalog.tableExists` first would
+      // cost a second lookup (~20 ms) on every warm serve
+      val hit =
+        if (crossProcessSwing) None
+        else try Some(s.table(tbl)) catch {
+          case _: org.apache.spark.sql.AnalysisException => None
+        }
+      hit.getOrElse {
         val loc = new org.apache.hadoop.fs.Path(root, active)
         s.sql(s"DROP TABLE IF EXISTS $tbl")
         val cluster =
@@ -271,11 +207,8 @@ object ServedIndex {
         s.sql(s"CREATE TABLE $tbl ($schemaDdl) USING PARQUET " +
           cluster + s"LOCATION '${loc.toString}'")
         registered.put(tbl, active)
-        // another process rebuilt: cached serves in this JVM verified an
-        // older epoch — invalidate them so they re-resolve the pointer
-        if (crossProcessSwing) epochs.merge(tbl, 1L, (a, b) => a + b)
+        s.table(tbl)
       }
     }
-    s.table(tbl)
   }
 }

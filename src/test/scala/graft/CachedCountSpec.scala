@@ -60,4 +60,44 @@ class CachedCountSpec extends SparkSuite {
     assert(Tables.cachedCount(spark, d1, "documents") == 7L)
     assert(Tables.cachedCount(spark, d2, "documents") == 9L)
   }
+
+  /** `contentFp` of (k, v) rows written to a fresh dir as `documents`. */
+  private def fpOf(df: org.apache.spark.sql.DataFrame,
+      cols: Seq[String] = Seq("k", "v")): String = {
+    val dir = java.nio.file.Files.createTempDirectory("content_fp").toString
+    df.write.parquet(s"$dir/documents.parquet")
+    Tables.contentFp(spark, dir, "documents", cols)
+  }
+
+  private val kv = (1L to 50L).map(k => (k, k * 7 % 13)).toDF("k", "v")
+
+  test("contentFp ignores partitioning and row order") {
+    val fp = fpOf(kv.coalesce(1))
+    assert(fpOf(kv.repartition(5)) == fp)
+    assert(fpOf(kv.orderBy(desc("k")).coalesce(1)) == fp)
+  }
+
+  test("contentFp moves on a duplicated row, a swapped key pairing, and one changed value") {
+    val fp = fpOf(kv)
+    assert(fpOf(kv.union(kv.filter(col("k") === 3))) != fp, "duplicated row")
+    // swap v between k = 1 and k = 2: every column sum is unchanged
+    val v1 = kv.filter(col("k") === 1).head.getLong(1)
+    val v2 = kv.filter(col("k") === 2).head.getLong(1)
+    assert(v1 != v2)
+    val swapped = kv.withColumn("v", when(col("k") === 1, v2)
+      .when(col("k") === 2, v1).otherwise(col("v")))
+    assert(fpOf(swapped) != fp, "swapped key pairing")
+    assert(fpOf(kv.withColumn("v", when(col("k") === 9, col("v") + 1)
+      .otherwise(col("v")))) != fp, "changed value")
+    // a column outside `cols` is outside the fingerprint
+    assert(fpOf(kv.withColumn("w", lit(1)), Seq("k", "v")) == fp)
+  }
+
+  test("contentFp is the exact hash sum where a long sum overflows") {
+    val big = spark.range(10000).toDF("k").withColumn("v", col("k") * 3)
+    val exact = big.select(xxhash64(col("k"), col("v"))).collect()
+      .map(r => BigInt(r.getLong(0))).sum
+    assert(!exact.isValidLong, "the fixture must overflow a long sum")
+    assert(fpOf(big) == s"10000|$exact")
+  }
 }

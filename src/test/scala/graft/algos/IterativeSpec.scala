@@ -143,7 +143,7 @@ class IterativeSpec extends SparkSuite {
   }
 
   test("served trade graph: cached edges sized to the session, exact ranks match the inline build") {
-    val g = Superstep.prepare(Iterative.tradeEdges.fresh(spark, sfDir), col("deg"))
+    val g = Superstep.prepare(Iterative.tradeEdges(spark, sfDir), col("deg"))
     val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
     // the served table is bucketed 32 ways; the loop's cached copy must not be
     val cached = g.edges.getNumPartitions
@@ -157,7 +157,7 @@ class IterativeSpec extends SparkSuite {
   }
 
   test("served trade graph: one preparation job, then one superstep job plus the collect") {
-    val served = Iterative.tradeEdges.fresh(spark, sfDir)
+    val served = Iterative.tradeEdges(spark, sfDir)
     val (g, prep) = jobsIn("pagerank-prepare")(Superstep.prepare(served, col("deg")))
     val (rows, loop) = jobsIn("pagerank-supersteps")(Iterative.pageRankExactOn(g, iters = 5).collect())
     g.unpersist()

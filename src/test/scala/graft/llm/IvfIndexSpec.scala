@@ -54,8 +54,6 @@ class IvfIndexSpec extends SparkSuite {
       val before = rows(AnnOps.ivfTopkIndexed(spark, dir))
       emb.filter(col("vec_id") % 3 =!= 1)
         .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-      // the documented hook for an external regen (session serve cache)
-      graft.sources.ServedIndex.resetCaches()
       val served = rows(AnnOps.ivfTopkIndexed(spark, dir))
       assert(served == rows(AnnOps.ivfTopk(spark, dir)),
         "the second serve must match the inline build over the new rows")

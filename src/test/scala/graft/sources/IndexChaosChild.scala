@@ -6,7 +6,7 @@ import org.apache.spark.sql.SparkSession
   * ServedIndex table from a SEPARATE JVM, so the spec can exercise the
   * cross-process paths (pointer swing observed by another process,
   * racing builders) that an in-JVM test cannot reach — the per-table
-  * build lock and epoch map are JVM-local by design.
+  * build lock and registered-version map are JVM-local by design.
   *
   * args: dirName tbl fp nRows sleepMsInsideBuild
   * prints `CHAOS_OK count=<n>` on success. */

@@ -45,7 +45,7 @@ class IndexRegistrySpec extends AnyFunSuite {
     val files =
       try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
       finally walk.close()
-    val call = "ServedIndex(\\.cached)?\\(".r
+    val call = "ServedIndex\\(".r
     val callers = files.filter(p => call.findFirstIn(
       new String(java.nio.file.Files.readAllBytes(p), "UTF-8")).isDefined)
     assert(callers.map(_.getFileName.toString) == Seq("IndexSpec.scala"),
