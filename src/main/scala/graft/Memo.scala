@@ -3,9 +3,9 @@ package graft
 /** A bounded in-JVM memo: the one mechanism behind every driver-side
   * cache of a value derived from corpus state (reader frames, counts,
   * content fingerprints, trained models, session-scoped edge sets,
-  * prepared graphs). Persisted indexes keep no cache of their own: each
-  * serve compares a memoized content fingerprint with the on-disk
-  * pointer.
+  * prepared graphs, FlexDice's terminal cells and bounds). Persisted
+  * indexes keep no cache of their own: each serve compares a memoized
+  * content fingerprint with the on-disk pointer.
   *
   * Contract:
   * - ONE ENTRY PER KEY. `apply(key, stamp)` serves the entry only while
@@ -21,6 +21,8 @@ package graft
   *   memo. A compute that throws caches nothing: the next call retries.
   * - `onEvict` sees every computed value the memo drops (bound or
   *   restamp), e.g. to unpersist a cached DataFrame ([[Memo.released]]).
+  * - [[hits]], [[misses]] and [[evictions]] count lookups and drops
+  *   since the memo was made.
   *
   * Keys compare by `equals`; a `SparkSession` in a key compares by
   * reference, which scopes the entry to that session. */
@@ -36,11 +38,23 @@ final class Memo[K, V](capacity: Int, onEvict: V => Unit = (_: V) => ()) {
 
   private val cells = new java.util.LinkedHashMap[K, Cell](16, 0.75f, true)
 
+  @volatile private var nHits, nMisses, nEvictions = 0L
+
+  /** Lookups served an entry already in place (its compute may still
+    * be running in another thread). */
+  def hits: Long = nHits
+
+  /** Lookups that put a new entry in place: a new key or a new stamp. */
+  def misses: Long = nMisses
+
+  /** Entries dropped, by the bound or by a restamp. */
+  def evictions: Long = nEvictions
+
   def apply(key: K, stamp: Any = ())(compute: => V): V = {
     var dropped = List.empty[Cell]
     val cell = cells.synchronized {
       val old = cells.get(key)
-      if (old != null && old.stamp == stamp) old
+      if (old != null && old.stamp == stamp) { nHits += 1; old }
       else {
         val c = new Cell(stamp, () => compute)
         if (old != null) dropped ::= old
@@ -50,6 +64,8 @@ final class Memo[K, V](capacity: Int, onEvict: V => Unit = (_: V) => ()) {
           dropped ::= eldest.next().getValue
           eldest.remove()
         }
+        nMisses += 1
+        nEvictions += dropped.length
         c
       }
     }

@@ -1,9 +1,11 @@
 package graft.algos
 
 import graft.{Memo, QueryDef, Tables}
-import graft.core.Truncate
+import graft.core.{Fold, Truncate}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import scala.collection.mutable
 
 /** FlexDice — the reference's bundled grid/density cluster-analysis
   * program, "particularly suited to outlier detection"
@@ -30,19 +32,21 @@ import org.apache.spark.sql.functions._
   * set_direct_adjacency (tool/flexdice.c:1095-1149) — merge into
   * clusters (connected components).
   *
-  * Spark shape, designed for the 100 TB case: the per-object path is
-  * ONE map-only projection (no shuffle — every level's cell coordinate
-  * is a deterministic midpoint comparison, unrolled nlayers deep);
-  * each layer is one hash aggregate on the layer's integer cell key
-  * (map-side partials collapse objects to cells before the wire) plus
-  * one O(cells) stats aggregate; the driver carries only the per-layer
-  * (cell count, child count, threshold) scalars — never cells or
-  * objects. Adjacency joins dense CELLS (≤ n/dmin rows, integer keys)
-  * against their O(levels·dims) ancestor candidates — an equality
-  * join, never a spatial cross — and clustering is a driver union-find
-  * over that adjacency, bounded by the 5,461-cell grid at any corpus
-  * size (see flexdice_clusters). Everything is integer-or-IEEE-exact,
-  * so a DuckDB oracle replays the whole pipeline: the midpoint recursion
+  * Spark shape, designed for the 100 TB case: phase 1 is two folds
+  * over one cached primitive read of the points — the bounds, then a
+  * per-partition histogram of every level's cells (a fixed 5,461-slot
+  * array: the grid is bounded by construction) merged by `treeReduce`
+  * — and the layer cascade runs on the driver over ≤ 5,461 cells; no
+  * object ever reaches the driver. The outliers are a lazy map-only
+  * probe of each object's ancestor cells (every level's coordinate is
+  * a deterministic midpoint comparison, unrolled nlayers deep) against
+  * the broadcast sparse cells. Adjacency joins dense CELLS (≤ n/dmin
+  * rows, integer keys) against their O(levels·dims) ancestor candidates
+  * — an equality join, never a spatial cross — and clustering is a
+  * driver union-find over that adjacency, bounded by the 5,461-cell
+  * grid at any corpus size (see flexdice_clusters). Everything is
+  * integer-or-IEEE-exact, so a DuckDB oracle replays the whole
+  * pipeline: the midpoint recursion
   * unrolled per level, the layer threshold (floor of the same double
   * product the C code truncates), and the cluster merge as a recursive
   * CTE.
@@ -73,26 +77,13 @@ object FlexDice {
         col("user_id").cast("double").as("y"))
       .filter(abs(col("x")) <= DblMax && abs(col("y")) <= DblMax)
 
-  /** Every object's cell coordinates at every level, in one map-only
-    * projection: level-l coordinate = 2·(level-(l-1) coordinate) + the
-    * strictly-above-midpoint bit, midpoints halved exactly as the
-    * reference's set_cell_range (lo + (hi - lo)/2 — IEEE-identical in
-    * Spark, DuckDB and the C code). Level 0 is the whole space. */
-  private def paths(s: SparkSession, d: String): DataFrame = {
-    val p = pts(s, d)
-    val mm = p.agg(min("x"), max("x"), min("y"), max("y")).head()
-    val (xmin, xmax, ymin, ymax) =
-      if (mm.isNullAt(0)) (0.0, 0.0, 0.0, 0.0) // empty input: no rows flow
-      else (mm.getDouble(0), mm.getDouble(1), mm.getDouble(2), mm.getDouble(3))
-    pathsFor(p, xmin, xmax, ymin, ymax)
-  }
-
   /** The path projection over an arbitrary (id, x, y) frame against
-    * FIXED bounds — shared by the batch dice (bounds = corpus min/max)
-    * and the streaming probe (bounds = the TRAINED dice's bounds, so an
-    * arriving point lands in exactly the cell the batch run would have
-    * put it in). Works on batch and streaming frames alike: it is one
-    * stateless projection. */
+    * FIXED bounds — shared by the batch outlier probe (bounds = the
+    * dice's corpus min/max) and the streaming probe (bounds = the
+    * TRAINED dice's bounds, so an arriving point lands in exactly the
+    * cell the batch run would have put it in). The same walk as
+    * [[histogram]]'s, as a projection that works on batch and streaming
+    * frames alike. */
   private[graft] def pathsFor(p: DataFrame, xmin: Double, xmax: Double,
       ymin: Double, ymax: Double): DataFrame = {
     // one select per level (a chained withColumn re-analyses the whole
@@ -128,131 +119,176 @@ object FlexDice {
       .select(col("id"), col("c.level").as("level"), col("c.cx").as("cx"),
         col("c.cy").as("cy"))
 
+  /** Bounds of the dice: (xmin, xmax, ymin, ymax). */
+  private[graft] type Bounds = (Double, Double, Double, Double)
+
+  /** Phase 1's result, free of any session: the terminal cells
+    * (level, cx, cy, density ∈ DENSE|SPARSE, n_objects), ascending, and
+    * the bounds they were diced in. */
+  private[algos] final case class Dice(term: Seq[(Long, Long, Long, String, Long)],
+      bounds: Bounds)
+
+  private def termDf(s: SparkSession, dice: Dice): DataFrame = {
+    import s.implicits._
+    dice.term.toDF("level", "cx", "cy", "density", "n_objects")
+  }
+
   /** The trained dice as a servable artifact: (terminal cells, bounds).
     * The static side of the streaming outlier probe
     * ([[graft.streaming.StreamOps.cellProbe]]). */
-  def trainedDice(s: SparkSession, d: String)
-      : (DataFrame, (Double, Double, Double, Double)) = {
-    val mm = pts(s, d).agg(min("x"), max("x"), min("y"), max("y")).head()
-    val bounds =
-      if (mm.isNullAt(0)) (0.0, 0.0, 0.0, 0.0)
-      else (mm.getDouble(0), mm.getDouble(1), mm.getDouble(2), mm.getDouble(3))
-    (phase1Cached(s, d)._1, bounds)
+  def trainedDice(s: SparkSession, d: String): (DataFrame, Bounds) = {
+    val dice = phase1Cached(s, d)
+    (termDf(s, dice), dice.bounds)
   }
 
   /** Memo for the dice: the three gates are three VIEWS of one
     * analysis (cells / outliers / clusters), and phase 1 is
-    * deterministic, so serving the checkpointed (terminal, noise)
-    * frames once per content fingerprint of the columns [[pts]] reads
-    * is bit-identical to recomputing. Values are eager cuts
-    * ([[Truncate]]) whose blocks the ContextCleaner reclaims once the
-    * entry is dropped. */
-  private val dice = new Memo[String, (DataFrame, DataFrame)](8)
+    * deterministic, so serving its driver-side result once per content
+    * fingerprint of the columns [[pts]] reads is bit-identical to
+    * recomputing. The value holds no DataFrame, so any session on the
+    * same dir may be served it. */
+  private[algos] val dice = new Memo[String, Dice](8)
 
-  private def phase1Cached(s: SparkSession, d: String): (DataFrame, DataFrame) =
+  private def phase1Cached(s: SparkSession, d: String): Dice =
     dice(d, Tables.contentFp(s, d, "events", Seq("event_id", "value", "user_id")))(
-      phase1(s, d))
+      phase1(pts(s, d)))
 
-  /** Phase 1. Returns (terminal cells, noise objects):
-    * terminal = (level, cx, cy, density ∈ DENSE|SPARSE, n_objects);
-    * noise = (id, level) for every object in a SPARSE cell.
+  /** Slot of cell (cx, cy) at `level` in the dice histogram: the levels
+    * are laid out one after the other, level l at Σ_{k<l} 4^k. */
+  private[algos] def slot(level: Int, cx: Int, cy: Int): Int =
+    ((1 << (2 * level)) - 1) / 3 + (cx << level) + cy
+
+  /** One partition's (x, y) columns. */
+  private final case class XY(xs: Array[Double], ys: Array[Double])
+
+  private def readXY(rows: Iterator[InternalRow]): XY = {
+    val (xs, ys) = (mutable.ArrayBuilder.make[Double], mutable.ArrayBuilder.make[Double])
+    rows.foreach { r => xs += r.getDouble(0); ys += r.getDouble(1) }
+    XY(xs.result(), ys.result())
+  }
+
+  /** The bounds of an (x, y, …) frame of finite points and its object
+    * count per cell at every level, in two [[Fold]]s over one cached
+    * read: (bounds, histogram indexed by [[slot]]). An empty frame has
+    * bounds (0, 0, 0, 0) and an all-zero histogram. Each point walks the
+    * midpoint recursion of [[pathsFor]] in the same IEEE arithmetic:
+    * center lo + (hi - lo)/2, bit = strictly above the center. */
+  private[algos] def histogram(p: DataFrame): (Bounds, Array[Long]) =
+    Fold.held(p.select(col("x"), col("y")))(readXY) { blocks =>
+      val mm = Fold(blocks)(Array(Double.PositiveInfinity, Double.NegativeInfinity,
+        Double.PositiveInfinity, Double.NegativeInfinity))({ (m, b) =>
+        b.xs.foreach { x => m(0) = math.min(m(0), x); m(1) = math.max(m(1), x) }
+        b.ys.foreach { y => m(2) = math.min(m(2), y); m(3) = math.max(m(3), y) }
+        m
+      })((a, b) => Array(math.min(a(0), b(0)), math.max(a(1), b(1)),
+        math.min(a(2), b(2)), math.max(a(3), b(3))))
+      // points are finite, so an infinite minimum means no rows
+      val bounds: Bounds =
+        if (mm(0).isInfinite) (0.0, 0.0, 0.0, 0.0) else (mm(0), mm(1), mm(2), mm(3))
+      val hist = Fold(blocks)(new Array[Long](MaxCells))({ (h, b) =>
+        for (i <- b.xs.indices) {
+          val (x, y) = (b.xs(i), b.ys(i))
+          var (lox, hix, loy, hiy) = bounds
+          var (cx, cy) = (0, 0)
+          h(0) += 1 // level 0 is the whole space
+          for (l <- 1 until NLayers) {
+            val cenx = lox + (hix - lox) / 2
+            val ceny = loy + (hiy - loy) / 2
+            if (x > cenx) { cx = 2 * cx + 1; lox = cenx } else { cx = 2 * cx; hix = cenx }
+            if (y > ceny) { cy = 2 * cy + 1; loy = ceny } else { cy = 2 * cy; hiy = ceny }
+            h(slot(l, cx, cy)) += 1
+          }
+        }
+        h
+      })({ (a, b) => for (i <- a.indices) a(i) += b(i); a })
+      (bounds, hist)
+    }
+
+  /** Phase 1 over the (id, x, y) points: the terminal cells and bounds.
     *
-    * Execution shape (r16 optimization round): ONE map-side-combining
-    * aggregate computes every layer's nonempty cells in a single pass
-    * over the path table (each object contributes its 7 ancestor
-    * coordinates via a map-only explode), the per-layer liveness /
-    * threshold cascade then runs as a driver fold over the collected
-    * cell list, and the noise extraction is ONE equality join of the
-    * ancestor explode against the (broadcast) sparse-terminal list.
-    * The previous form chained a per-layer groupBy over a re-derived
-    * `active` object set — layer l re-evaluated l liveness joins, ~25
-    * driver-synchronized jobs and 117 stages for flexdice_clusters at
-    * sf0.1 — where this is 3 jobs over the same persisted path table.
+    * Execution shape: two [[Fold]]s over one cached primitive read of
+    * the points ([[histogram]]: bounds, then every level's cell counts),
+    * then the per-layer liveness / threshold cascade as a driver fold
+    * over the nonempty cells. Nothing is left cached or cut.
     *
     * Why the driver fold is safe at any SF: the dice is bounded by
     * CONSTRUCTION, not by data — level l has ≤ 4^l cells (coordinates
     * live in [0, 2^l)²), so all 7 layers hold ≤ Σ 4^l = 5,461 nonempty
-    * cells total. This is the same bounded-carry class as the k-means
-    * centroid collect (O(k·dim)) and the skyline suffix-min (O(50)).
+    * cells total, the histogram's fixed size. This is the same
+    * bounded-carry class as the k-means centroid collect (O(k·dim)) and
+    * the skyline suffix-min (O(50)).
     *
-    * Why the values are identical to the chained form:
+    * Why the values equal the reference's layer-by-layer division:
     * - a live cell's members are exactly its prefix-matching objects
     *   (liveness filters whole cells, never objects — the same linear
     *   argument the DuckDB oracle's levelsSql already relies on), so
-    *   per-cell n_objects and nonempty-child counts computed from the
-    *   FULL path table equal the ones computed over `active`;
+    *   per-cell n_objects and nonempty-child counts counted over ALL
+    *   points equal the ones counted over the still-active objects;
     * - kc needs no countDistinct: every nonempty level-(l+1) cell is a
     *   child of exactly one level-l cell, so kc = |children among the
-    *   collected l+1 cells|;
-    * - an object is noise at layer l iff its layer-l ancestor is a
-    *   SPARSE terminal; terminal cells are prefix-disjoint (everything
-    *   above a terminal is MIDDLE), so the single ancestor⋈sparse join
-    *   yields each old (id, level) row exactly once. */
-  private def phase1(s: SparkSession, d: String): (DataFrame, DataFrame) =
-    Truncate.held(paths(s, d)) { p =>
-      import s.implicits._
-      val ancStructs = (0 until NLayers).map(l =>
-        struct(lit(l.toLong).as("level"), col(s"cx$l").as("cx"),
-          col(s"cy$l").as("cy")))
-      val cellRows = p
-        .select(explode(array(ancStructs: _*)).as("c"))
-        .groupBy(col("c.level").as("level"), col("c.cx").as("cx"),
-          col("c.cy").as("cy"))
-        .agg(count(lit(1)).as("n_objects"))
-        .collect()
-      // (cx, cy) -> n_objects per level; kc from the level below
-      val byLevel = (0 until NLayers).map { l =>
-        cellRows.iterator.filter(_.getLong(0) == l)
-          .map(r => ((r.getLong(1), r.getLong(2)), r.getLong(3))).toMap
-      }
-      val kcOf = (0 until NLayers).map { l =>
-        if (l == NLayers - 1) Map.empty[(Long, Long), Long]
-        else byLevel(l + 1).keysIterator.toSeq
-          .groupBy { case (cx, cy) => (cx >> 1, cy >> 1) }
-          .map { case (k, v) => (k, v.size.toLong) }
-      }
-      // liveness cascade: level 0 is live; below, live = parent MIDDLE
-      val term = Seq.newBuilder[(Long, Long, Long, String, Long)]
-      var midPrev = Set.empty[(Long, Long)]
-      for (l <- 0 until NLayers) {
-        val live = byLevel(l).view
-          .filterKeys(k => l == 0 || midPrev((k._1 >> 1, k._2 >> 1))).toMap
-        val nCells = live.size.toLong
-        var midNext = Set.empty[(Long, Long)]
-        if (nCells > 0) {
-          if (l == NLayers - 1) {
-            live.foreach { case ((cx, cy), n) =>
-              term += ((l.toLong, cx, cy, if (n < DMin) "SPARSE" else "DENSE", n))
-            }
-          } else {
-            val cc = live.iterator
-              .collect { case (k, n) if n >= DMin => kcOf(l).getOrElse(k, 0L) }
-              .sum
-            // the reference's (int)(dfac * (1.0*cc/n)) — same IEEE
-            // product, truncation == floor on non-negatives
-            val thr = (DFac * (cc.toDouble / nCells.toDouble)).toLong
-            live.foreach { case ((cx, cy), n) =>
-              val kc = kcOf(l).getOrElse((cx, cy), 0L)
-              if (n < DMin) term += ((l.toLong, cx, cy, "SPARSE", n))
-              else if (kc > thr) term += ((l.toLong, cx, cy, "DENSE", n))
-              else midNext += ((cx, cy))
-            }
+    *   nonempty l+1 cells|. */
+  private def phase1(p: DataFrame): Dice = {
+    val (bounds, hist) = histogram(p)
+    // (cx, cy) -> n_objects per level; kc from the level below
+    val byLevel = (0 until NLayers).map { l =>
+      val side = 1 << l
+      (for (cx <- 0 until side; cy <- 0 until side if hist(slot(l, cx, cy)) > 0)
+        yield (cx.toLong, cy.toLong) -> hist(slot(l, cx, cy))).toMap
+    }
+    val kcOf = (0 until NLayers).map { l =>
+      if (l == NLayers - 1) Map.empty[(Long, Long), Long]
+      else byLevel(l + 1).keysIterator.toSeq
+        .groupBy { case (cx, cy) => (cx >> 1, cy >> 1) }
+        .map { case (k, v) => (k, v.size.toLong) }
+    }
+    // liveness cascade: level 0 is live; below, live = parent MIDDLE
+    val term = Seq.newBuilder[(Long, Long, Long, String, Long)]
+    var midPrev = Set.empty[(Long, Long)]
+    for (l <- 0 until NLayers) {
+      val live = byLevel(l).view
+        .filterKeys(k => l == 0 || midPrev((k._1 >> 1, k._2 >> 1))).toMap
+      val nCells = live.size.toLong
+      var midNext = Set.empty[(Long, Long)]
+      if (nCells > 0) {
+        if (l == NLayers - 1) {
+          live.foreach { case ((cx, cy), n) =>
+            term += ((l.toLong, cx, cy, if (n < DMin) "SPARSE" else "DENSE", n))
+          }
+        } else {
+          val cc = live.iterator
+            .collect { case (k, n) if n >= DMin => kcOf(l).getOrElse(k, 0L) }
+            .sum
+          // the reference's (int)(dfac * (1.0*cc/n)) — same IEEE
+          // product, truncation == floor on non-negatives
+          val thr = (DFac * (cc.toDouble / nCells.toDouble)).toLong
+          live.foreach { case ((cx, cy), n) =>
+            val kc = kcOf(l).getOrElse((cx, cy), 0L)
+            if (n < DMin) term += ((l.toLong, cx, cy, "SPARSE", n))
+            else if (kc > thr) term += ((l.toLong, cx, cy, "DENSE", n))
+            else midNext += ((cx, cy))
           }
         }
-        midPrev = midNext
       }
-      val termRows = term.result().sorted
-      val termDf = termRows.toDF("level", "cx", "cy", "density", "n_objects")
-      val sparseDf = termRows.collect { case (l, cx, cy, "SPARSE", _) =>
-        (l, cx, cy) }.toDF("level", "cx", "cy")
-      val noise = p
-        .select(col("id"), explode(array(ancStructs: _*)).as("c"))
-        .select(col("id"), col("c.level").as("level"), col("c.cx").as("cx"),
-          col("c.cy").as("cy"))
-        .join(broadcast(sparseDf), Seq("level", "cx", "cy"))
-        .select(col("id"), col("level"))
-      (Truncate(termDf), Truncate(noise))
+      midPrev = midNext
     }
+    Dice(term.result().sorted, bounds)
+  }
+
+  /** Objects in a SPARSE terminal cell, as (id, level): each point's
+    * [[cellCandidates]] against the dice's bounds, equality-joined to
+    * the broadcast sparse cells. An object is noise at layer l iff its
+    * layer-l ancestor is a SPARSE terminal; terminal cells are
+    * prefix-disjoint, so each object yields at most one row. Lazy and
+    * map-only: nothing O(corpus) is cached. */
+  private def noise(s: SparkSession, d: String, dice: Dice): DataFrame = {
+    import s.implicits._
+    val sparse = dice.term.collect { case (l, cx, cy, "SPARSE", _) => (l, cx, cy) }
+      .toDF("level", "cx", "cy")
+    val (xmin, xmax, ymin, ymax) = dice.bounds
+    cellCandidates(pts(s, d), xmin, xmax, ymin, ymax)
+      .join(broadcast(sparse), Seq("level", "cx", "cy"))
+      .select(col("id"), col("level"))
+  }
 
   /** Dense cells with their packed O(1) cell key. */
   private def denseCells(term: DataFrame): DataFrame =
@@ -436,21 +472,18 @@ object FlexDice {
     // ---- Phase-1 parity: every terminal cell of the dice with its
     // classification and size. SPARSE cells are the outlier containers
     // (the reference's NL* noise outputs); DENSE cells are the cluster
-    // atoms. One hash aggregate per layer; the driver holds 3 scalars
-    // per layer, nothing else.
-    QueryDef("flexdice_cells", (s, d) => {
-      val (term, _) = phase1Cached(s, d)
-      term.orderBy("level", "cx", "cy")
-    }, Some(cellsOracle)),
+    // atoms. The frame is the memoized driver-side dice (≤ 5,461 rows).
+    QueryDef("flexdice_cells", (s, d) =>
+      termDf(s, phase1Cached(s, d)).orderBy("level", "cx", "cy"),
+      Some(cellsOracle)),
 
     // ---- Outlier extraction (the reference's headline use): every
     // object that landed in a SPARSE cell, with the layer it fell out
-    // at. Map-only over the path table plus one bucket-key join per
-    // layer against that layer's (small) sparse-cell list.
-    QueryDef("flexdice_outliers", (s, d) => {
-      val (_, noise) = phase1Cached(s, d)
-      noise.orderBy("id")
-    }, Some(noiseOracle)),
+    // at. A lazy map-only probe of each object's ancestor cells against
+    // the broadcast sparse-cell list ([[noise]]).
+    QueryDef("flexdice_outliers", (s, d) =>
+      noise(s, d, phase1Cached(s, d)).orderBy("id"),
+      Some(noiseOracle)),
 
     // ---- Phase-2 parity: clusters of axis-adjacent DENSE cells
     // (across levels — the irregular-size cell graph), keyed by the
@@ -471,8 +504,7 @@ object FlexDice {
     // gates (dedup_clusters/keep_best, unbounded graphs) keep the
     // distributed star contraction untouched.
     QueryDef("flexdice_clusters", (s, d) => {
-      val (term, _) = phase1Cached(s, d)
-      Truncate.over(denseCells(term)) { dense =>
+      Truncate.over(denseCells(termDf(s, phase1Cached(s, d)))) { dense =>
         val keys = dense.select("key").collect().map(_.getLong(0))
         require(keys.length <= MaxCells,
           s"${keys.length} dense cells exceed the $MaxCells-cell grid")

@@ -1,12 +1,13 @@
 package graft.algos
 
 import graft.{Memo, QueryDef, Tables}
-import graft.core.{Superstep, Truncate}
+import graft.core.{Fold, Superstep}
 import graft.core.Superstep.PreparedGraph
 import graft.functions.DotProductD.dotD
 import graft.sources.IndexSpec
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -250,26 +251,25 @@ object Iterative {
   private final case class VecBlock(ids: Array[Long], vecs: Array[Array[Double]],
       holes: Array[Boolean], seeds: Seq[(Long, Array[Double])])
 
-  /** Reads an `(id, e)` frame at its scan's partitioning, one [[VecBlock]]
-    * a partition. Seeds read a null vector as empty and a null component
-    * as 0.0, as a collected Row unboxes them. */
-  private def vecBlocks(vecs: DataFrame, k: Int): RDD[VecBlock] =
-    vecs.select(col("id"), col("e")).queryExecution.toRdd.mapPartitions { rows =>
-      val (ids, vs, holes) = (mutable.ArrayBuilder.make[Long],
-        mutable.ArrayBuilder.make[Array[Double]], mutable.ArrayBuilder.make[Boolean])
-      val low = mutable.PriorityQueue.empty[(Long, Array[Double])](Ordering.by(_._1))
-      rows.foreach { r =>
-        val a = if (r.isNullAt(1)) null else r.getArray(1)
-        def read(nul: Double) = if (a == null) null
-          else Array.tabulate(a.numElements())(i => if (a.isNullAt(i)) nul else a.getDouble(i))
-        ids += r.getLong(0)
-        vs += read(Double.NaN)
-        holes += a != null && (0 until a.numElements()).exists(a.isNullAt)
-        low += r.getLong(0) -> Option(read(0.0)).getOrElse(Array.emptyDoubleArray)
-        if (low.size > k) low.dequeue()
-      }
-      Iterator.single(VecBlock(ids.result(), vs.result(), holes.result(), low.toSeq))
+  /** Reads one partition of an `(id, e)` frame into a [[VecBlock]]. Seeds
+    * read a null vector as empty and a null component as 0.0, as a
+    * collected Row unboxes them. */
+  private def vecBlock(k: Int)(rows: Iterator[InternalRow]): VecBlock = {
+    val (ids, vs, holes) = (mutable.ArrayBuilder.make[Long],
+      mutable.ArrayBuilder.make[Array[Double]], mutable.ArrayBuilder.make[Boolean])
+    val low = mutable.PriorityQueue.empty[(Long, Array[Double])](Ordering.by(_._1))
+    rows.foreach { r =>
+      val a = if (r.isNullAt(1)) null else r.getArray(1)
+      def read(nul: Double) = if (a == null) null
+        else Array.tabulate(a.numElements())(i => if (a.isNullAt(i)) nul else a.getDouble(i))
+      ids += r.getLong(0)
+      vs += read(Double.NaN)
+      holes += a != null && (0 until a.numElements()).exists(a.isNullAt)
+      low += r.getLong(0) -> Option(read(0.0)).getOrElse(Array.emptyDoubleArray)
+      if (low.size > k) low.dequeue()
     }
+    VecBlock(ids.result(), vs.result(), holes.result(), low.toSeq)
+  }
 
   /** The broadcast centroids of one Lloyd round, ascending by cid. */
   private[graft] final case class Centroids(cents: Array[(Long, Array[Double])], m: Metric) {
@@ -307,16 +307,16 @@ object Iterative {
 
   /** Lloyd's loop (ex/kmeans-kmr.c), shared by [[kMeans]] and the IVF
     * quantizer (AnnOps.quantizer); `metric` is the only difference. The
-    * `(id, e)` frame is read once into cached [[VecBlock]]s, and the
-    * same job returns the seeds: the first `k` vectors by id. Each
-    * iteration is one job, KMR's map → reduce: the centroids are
-    * broadcast, one `mapPartitions` folds [[LloydStats]] and one
-    * `treeReduce` brings them to the driver. There a centroid's
-    * coordinate is the nearest double of the exact sum, then one IEEE
-    * division (both steps engine-portable, unlike a decimal quotient); a
-    * position no member carries keeps the previous coordinate (0.0 past
-    * its end), the dim grows to the highest surviving position + 1, and
-    * a centroid with nothing surviving stays put. Returns the final
+    * `(id, e)` frame is read once into cached [[VecBlock]]s
+    * ([[Fold.held]]), and the same job returns the seeds: the first `k`
+    * vectors by id. Each iteration is one job, KMR's map → reduce: the
+    * centroids are broadcast and one [[Fold]] of [[LloydStats]] brings
+    * them to the driver. There a centroid's coordinate is the nearest
+    * double of the exact sum, then one IEEE division (both steps
+    * engine-portable, unlike a decimal quotient); a position no member
+    * carries keeps the previous coordinate (0.0 past its end), the dim
+    * grows to the highest surviving position + 1, and a centroid with
+    * nothing surviving stays put. Returns the final
     * centroids (ascending cid) and the per-iteration inertia.
     *
     * The blocks keep the scan's partitioning. A repartition to the core
@@ -324,29 +324,29 @@ object Iterative {
     * OPTIMIZATION_r17.md): the cost at gate scale is the per-iteration
     * job, not the narrow compute. */
   private[graft] def lloyd(vecs: DataFrame, k: Int, iters: Int, metric: Metric)
-      : (Array[(Long, Array[Double])], Seq[Double]) = Truncate.held(vecBlocks(vecs, k)) { blocks =>
-    var cents = blocks.flatMap(_.seeds).collect().sortBy(_._1).take(k)
-    val history = for (_ <- 1 to iters if cents.nonEmpty) yield {
-      val table = vecs.sparkSession.sparkContext.broadcast(Centroids(cents, metric))
-      val stats = blocks.mapPartitions { bs =>
-        val st = new LloydStats
-        for (b <- bs; i <- b.ids.indices if b.vecs(i) != null) {
-          val (j, s) = table.value.nearest(b.vecs(i))
-          if (!b.holes(i)) st.inertia += s
-          for (p <- b.vecs(i).indices) st.add((j, p), toDec(b.vecs(i)(p)), 1L)
+      : (Array[(Long, Array[Double])], Seq[Double]) =
+    Fold.held(vecs.select(col("id"), col("e")))(vecBlock(k)) { blocks =>
+      var cents = blocks.flatMap(_.seeds).collect().sortBy(_._1).take(k)
+      val history = for (_ <- 1 to iters if cents.nonEmpty) yield {
+        val table = vecs.sparkSession.sparkContext.broadcast(Centroids(cents, metric))
+        val stats = Fold(blocks)(new LloydStats)({ (st, b) =>
+          for (i <- b.ids.indices if b.vecs(i) != null) {
+            val (j, s) = table.value.nearest(b.vecs(i))
+            if (!b.holes(i)) st.inertia += s
+            for (p <- b.vecs(i).indices) st.add((j, p), toDec(b.vecs(i)(p)), 1L)
+          }
+          st
+        })(_ merge _)
+        table.destroy()
+        val means = stats.sums.groupMap(_._1._1) { case ((_, p), (q, n)) => p -> q.toDouble / n }
+        cents = cents.zipWithIndex.map { case ((cid, prev), j) =>
+          cid -> means.get(j).map(_.toMap).fold(prev)(m => Array.tabulate(
+            math.max(prev.length, m.keys.max + 1))(p => m.getOrElse(p, prev.lift(p).getOrElse(0.0))))
         }
-        Iterator.single(st)
-      }.treeReduce(_ merge _)
-      table.destroy()
-      val means = stats.sums.groupMap(_._1._1) { case ((_, p), (q, n)) => p -> q.toDouble / n }
-      cents = cents.zipWithIndex.map { case ((cid, prev), j) =>
-        cid -> means.get(j).map(_.toMap).fold(prev)(m => Array.tabulate(
-          math.max(prev.length, m.keys.max + 1))(p => m.getOrElse(p, prev.lift(p).getOrElse(0.0))))
+        stats.inertia
       }
-      stats.inertia
+      (cents, history)
     }
-    (cents, history)
-  }
 
   /** Lloyd's k-means (ex/kmeans-kmr.c, ex/phoenix-kmeans.c) over an
     * `(id, e)` frame: [[lloyd]] under [[L2]]. Returns the final

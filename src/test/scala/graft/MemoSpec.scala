@@ -6,7 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** [[Memo]]'s contract: one entry per key, a least-recently-used bound
   * applied only on insert, compute-once outside the map lock, no
-  * caching of a failed compute, and `onEvict` for dropped values only. */
+  * caching of a failed compute, `onEvict` for dropped values only, and
+  * the hit, miss and evict counts. */
 class MemoSpec extends AnyFunSuite {
 
   /** A memo plus a per-key compute counter. */
@@ -83,6 +84,21 @@ class MemoSpec extends AnyFunSuite {
     intercept[IllegalStateException](memo("k")(throw new IllegalStateException("boom")))
     assert(memo("k")(7) == 7)
     assert(memo("k")(8) == 7)
+  }
+
+  test("hit, miss and evict counts follow a hit, a restamp and a capacity eviction") {
+    val c = new Counted(2)
+    def counts = (c.memo.hits, c.memo.misses, c.memo.evictions)
+    c.get("a", 1)
+    c.get("b", 1)
+    assert(counts == ((0L, 2L, 0L)))
+    c.get("a", 1) // hit
+    assert(counts == ((1L, 2L, 0L)))
+    c.get("a", 2) // restamp: a miss that drops the old entry
+    assert(counts == ((1L, 3L, 1L)))
+    c.get("c", 1) // third key in a 2-entry memo: evicts b
+    assert(counts == ((1L, 4L, 2L)))
+    assert(c.calls.values.sum == 4)
   }
 
   test("onEvict fires for the evicted entry only") {

@@ -105,4 +105,85 @@ class FlexDiceSpec extends SparkSuite {
   test("MaxCells is the whole 7-level grid that bounds the driver collect") {
     assert(FlexDice.MaxCells == 5461) // Σ_{l<7} 4^l
   }
+
+  /** Every midpoint of [lo, hi]'s recursion down to the bottom level,
+    * plus both ends. */
+  private def midpoints(lo: Double, hi: Double, depth: Int = 6): Seq[Double] =
+    if (depth == 0) Seq(lo, hi)
+    else {
+      val cen = lo + (hi - lo) / 2
+      cen +: (midpoints(lo, cen, depth - 1) ++ midpoints(cen, hi, depth - 1))
+    }
+
+  test("the histogram fold counts every cell as a pathsFor groupBy does") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(13)
+    val xs = midpoints(-3.1, 7.7).distinct
+    val ys = midpoints(0.0, 64.0).distinct
+    val inputs = Seq[(String, Seq[(Double, Double)])](
+      "random" -> Seq.fill(500)((rnd.nextGaussian() * 1e3, rnd.nextDouble() * 7 - 2)),
+      "on midpoints" -> (for (x <- xs; y <- ys) yield (x, y)),
+      "all equal" -> Seq.fill(10)((5.5, -2.0)),
+      "signed zeros" -> Seq((0.0, -0.0), (-0.0, 0.0), (-0.0, -0.0), (1.0, 0.0), (-1.0, -0.0)),
+      "overflowing span" -> Seq((-1.5e308, 1.7e308), (1.7e308, -1.7e308), (1e308, 0.0),
+        (-1e308, 1e308), (-1.7976931348623157e308, 5.0)),
+      "single point" -> Seq((3.0, 4.0)),
+      "empty" -> Seq.empty)
+    assert(inputs(1)._2.length > 4000)
+    inputs.foreach { case (name, xy) =>
+      val p = xy.zipWithIndex.map { case ((x, y), i) => (i.toLong, x, y) }
+        .toDF("id", "x", "y").repartition(3)
+      val ((xmin, xmax, ymin, ymax), hist) = FlexDice.histogram(p)
+      val mm = p.agg(min("x"), max("x"), min("y"), max("y")).head()
+      val want = if (mm.isNullAt(0)) Seq(0.0, 0.0, 0.0, 0.0) else (0 to 3).map(mm.getDouble)
+      assert(Seq(xmin, xmax, ymin, ymax).zip(want).forall { case (a, b) => a == b },
+        s"$name: bounds ${(xmin, xmax, ymin, ymax)} != $want")
+      val ref = FlexDice.cellCandidates(p, xmin, xmax, ymin, ymax)
+        .groupBy("level", "cx", "cy").count().collect()
+        .map(r => (r.getLong(0).toInt, r.getLong(1).toInt, r.getLong(2).toInt) -> r.getLong(3)).toMap
+      val got = (for (l <- 0 until 7; cx <- 0 until 1 << l; cy <- 0 until 1 << l
+          if hist(FlexDice.slot(l, cx, cy)) > 0)
+        yield (l, cx, cy) -> hist(FlexDice.slot(l, cx, cy))).toMap
+      assert(hist.length == FlexDice.MaxCells && hist.sum == 7L * xy.length, name)
+      assert(got == ref, s"$name: histogram differs from the pathsFor counts")
+    }
+  }
+
+  /** `body` over a fresh copy of the test corpus's events, so every
+    * memo keyed by its dir misses. */
+  private def withEventsCopy[T](body: String => T): T = {
+    val dir = java.nio.file.Files.createTempDirectory("flexdice_copy").toFile
+    org.apache.commons.io.FileUtils.copyToDirectory(new java.io.File(s"$sfDir/events.parquet"), dir)
+    try body(dir.toString) finally org.apache.commons.io.FileUtils.deleteQuietly(dir)
+  }
+
+  test("a cold flexdice_cells build runs the fingerprint and two folds; a warm one no job") {
+    val gate = graft.SparkEntry.queries("flexdice_cells")
+    withEventsCopy { dir =>
+      graft.Tables.load(spark, dir, "events") // the reader's metadata, outside the count
+      val (cold, coldJobs) = jobsIn("flexdice-cold")(gate(spark, dir))
+      // contentFp's aggregate is 2 jobs; the bounds and the histogram 1 each
+      assert(coldJobs <= 4, s"a cold flexdice_cells build ran $coldJobs jobs")
+      val hits = FlexDice.dice.hits
+      val (warm, warmJobs) = jobsIn("flexdice-warm")(gate(spark, dir))
+      assert(warmJobs == 0, s"a warm flexdice_cells build ran $warmJobs jobs")
+      assert(FlexDice.dice.hits == hits + 1, "the warm build missed the dice memo")
+      assert(warm.collect().toSeq == cold.collect().toSeq)
+    }
+  }
+
+  test("no flexdice gate leaves anything of phase 1 cached") {
+    val sc = spark.sparkContext
+    def lineage(rdd: org.apache.spark.rdd.RDD[_]): Set[Int] =
+      rdd.dependencies.map(d => lineage(d.rdd)).foldLeft(Set(rdd.id))(_ ++ _)
+    Seq("flexdice_cells", "flexdice_outliers", "flexdice_clusters").foreach { name =>
+      withEventsCopy { dir =>
+        val before = sc.getPersistentRDDs.keySet
+        val out = graft.SparkEntry.queries(name)(spark, dir)
+        out.collect()
+        val stray = sc.getPersistentRDDs.keySet -- before -- lineage(out.queryExecution.toRdd)
+        assert(stray.isEmpty, s"$name left ${stray.map(sc.getPersistentRDDs)} cached")
+      }
+    }
+  }
 }

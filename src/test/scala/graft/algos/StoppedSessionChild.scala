@@ -3,11 +3,12 @@ package graft.algos
 import graft.Memo
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Child-process main for [[TradeGraphSpec]]: fill the trade-graph memo
-  * and a frame memo of the `AnnOps.assigns` shape in one session, stop
-  * it, and make a new session's inserts evict both entries. Prints
-  * `STOPPED_EVICT_OK` when the evictions returned and the new session's
-  * ranks equal the stopped one's.
+/** Child-process main for [[TradeGraphSpec]]: fill the trade-graph memo,
+  * a frame memo of the `AnnOps.assigns` shape and the FlexDice memo in
+  * one session, stop it, and make a new session's inserts evict the
+  * first two entries and read the dice. Prints `STOPPED_EVICT_OK` when
+  * the evictions returned and the new session's ranks and terminal
+  * cells equal the stopped one's.
   *
   * args: sfDir */
 object StoppedSessionChild {
@@ -32,12 +33,15 @@ object StoppedSessionChild {
     val s1 = session()
     val want = ranks(Iterative.tradeGraph(s1, d))
     frames((s1, d))(s1.range(10).toDF().persist()).count()
+    val cells = graft.SparkEntry.queries("flexdice_cells")
+    val wantCells = cells(s1, d).collect().toSeq
     s1.stop()
     val s2 = session()
     require(s2.sparkContext ne s1.sparkContext, "the stopped context was reused")
     val got = ranks(Iterative.tradeGraph(s2, d)) // evicts s1's graph
     frames((s2, d))(s2.range(10).toDF().persist()).count() // evicts s1's frame
     require(got == want, "the new session's ranks differ")
+    require(cells(s2, d).collect().toSeq == wantCells, "the new session's dice differs")
     println("STOPPED_EVICT_OK")
     s2.stop()
   }
